@@ -18,101 +18,111 @@ Semantics (pinned by the golden fixture in FIXTURES.md §2):
 - duplicate-after-flatten collisions are kept as distinct cells (the
   HBase sink's last-write-wins applies at write time, not here)
 
-Architecture note (100 TB posture): this is a *plan-construction-time*
-schema walk in Python that emits only native Catalyst expressions
-(``transform``/``flatten``/``map_entries``/``explode``) — zero Python
-UDFs, zero shuffles. The operator is a narrow map over the input, so it
-scales linearly with input splits and whole-stage codegen applies.
+Architecture note (100 TB posture): the plan-construction-time schema
+walk emits the whole cell array as ONE SQL expression, parsed once by a
+single ``selectExpr``, so building the plan costs a constant number of
+JVM round trips whatever the schema's width or depth (not a dozen Py4J
+``Column`` calls per leaf). Static path segments fold into one literal
+per leaf; only array indexes and map keys concatenate at run time.
+Literals are ``CAST(X'<utf-8 hex>' AS STRING)`` and identifiers are
+backtick-quoted, so ``spark.sql.parser.escapedStringLiterals`` cannot
+change the parse. Only native Catalyst expressions (``transform``/
+``flatten``/``map_entries``/``explode``): zero Python UDFs, zero
+shuffles, a narrow map that keeps whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
-    DataType,
-    DateType,
-    MapType,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DataType, MapType, StructType
 
 CELL_TYPE = "array<struct<qualifier:string,value:string>>"
+EMPTY_CELLS = f"CAST(array() AS {CELL_TYPE})"
 SEP = "."
+BACKSLASH = "\\"
+# backslash first, then '.': no field name or map key can fake a path separator
+ESCAPES = ((BACKSLASH, BACKSLASH * 2), (SEP, BACKSLASH + SEP))
 
 
-def _empty_cells() -> Column:
-    # built lazily: Column construction needs an active SparkSession
-    return F.expr(f"CAST(array() AS {CELL_TYPE})")
+class _Sql(str):
+    """A path segment computed at run time (SQL text, not a literal)."""
 
 
 def _escape_static(key: str) -> str:
-    """Escape a plan-time field name so '.' inside a key can't collide
-    with the path separator."""
-    return key.replace("\\", "\\\\").replace(SEP, "\\.")
+    for old, new in ESCAPES:
+        key = key.replace(old, new)
+    return key
 
 
-def _escape_runtime(key: Column) -> Column:
-    """Same escaping for runtime map keys."""
-    key = F.regexp_replace(key, r"\\", r"\\\\")
-    return F.regexp_replace(key, r"\.", r"\\.")
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _canonical(col: Column, dtype: DataType) -> Column:
+def _str(s: str) -> str:
+    """A string literal whose meaning no parser setting can change."""
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
+def _qualifier(path: tuple[str, ...]) -> str:
+    """SEP-joined ``path``, each run of static segments folded into one
+    literal and the runtime segments concatenated in between."""
+    args, text = [], ""
+    for n, seg in enumerate(path):
+        text += SEP if n else ""
+        if isinstance(seg, _Sql):
+            args += [_str(text), seg] if text else [seg]
+            text = ""
+        else:
+            text += seg
+    if text or not args:
+        args.append(_str(text))
+    return args[0] if len(args) == 1 else f"concat({', '.join(args)})"
+
+
+def _concat_cells(parts: list[str]) -> str:
+    if not parts:
+        return EMPTY_CELLS
+    merged = f"concat({', '.join(parts)})" if len(parts) > 1 else parts[0]
+    # a NULL struct yields NULL children -> empty parts, but concat of
+    # empties is already empty; coalesce guards the all-NULL edge.
+    return f"coalesce({merged}, {EMPTY_CELLS})"
+
+
+def _canonical(ref: str, dtype: DataType) -> str:
     """Canonical string form of a scalar leaf."""
     if isinstance(dtype, BinaryType):
-        return F.base64(col)
+        return f"base64({ref})"
     if isinstance(dtype, BooleanType):
-        return F.when(col, F.lit("true")).otherwise(F.lit("false"))
-    if isinstance(dtype, (TimestampType, DateType)):
-        return col.cast("string")
-    return col.cast("string")
+        return f"CASE WHEN {ref} THEN 'true' ELSE 'false' END"
+    return f"CAST({ref} AS STRING)"  # numbers, strings, dates, timestamps
 
 
-def _child_path(prefix: Column | None, segment: Column) -> Column:
-    if prefix is None:
-        return segment
-    return F.concat(prefix, F.lit(SEP), segment)
-
-
-def _cells(col: Column, dtype: DataType, prefix: Column | None) -> Column:
-    """Recursive schema walk returning array<struct<qualifier,value>>
-    for every non-null scalar leaf under ``col``."""
+def _cells(ref: str, dtype: DataType, path: tuple[str, ...], depth: int = 0) -> str:
+    """Recursive schema walk returning the SQL of an
+    array<struct<qualifier,value>> holding every non-null scalar leaf
+    under ``ref``. Lambda variables are numbered by nesting depth, so an
+    inner lambda can still read the index of an outer one."""
     if isinstance(dtype, StructType):
-        parts = [
-            _cells(col[f.name], f.dataType, _child_path(prefix, F.lit(_escape_static(f.name))))
+        return _concat_cells([
+            _cells(f"{ref}.{_ident(f.name)}", f.dataType, path + (_escape_static(f.name),), depth)
             for f in dtype.fields
-        ]
-        if not parts:
-            return _empty_cells()
-        merged = F.concat(*parts) if len(parts) > 1 else parts[0]
-        # a NULL struct yields NULL children -> empty parts, but concat of
-        # empties is already empty; coalesce guards the all-NULL edge.
-        return F.coalesce(merged, _empty_cells())
-    if isinstance(dtype, ArrayType):
-        nested = F.transform(
-            col,
-            lambda x, i: _cells(x, dtype.elementType, _child_path(prefix, i.cast("string"))),
-        )
-        return F.coalesce(F.flatten(nested), _empty_cells())
-    if isinstance(dtype, MapType):
-        nested = F.transform(
-            F.map_entries(col),
-            lambda e: _cells(
-                e["value"], dtype.valueType, _child_path(prefix, _escape_runtime(e["key"].cast("string")))
-            ),
-        )
-        return F.coalesce(F.flatten(nested), _empty_cells())
+        ])
+    if isinstance(dtype, (ArrayType, MapType)):
+        x, i = f"x{depth}", f"i{depth}"
+        if isinstance(dtype, ArrayType):
+            key, elem, etype = f"CAST({i} AS STRING)", x, dtype.elementType
+            source, params = ref, f"({x}, {i})"
+        else:
+            key = f"CAST({x}.`key` AS STRING)"
+            for old, new in ESCAPES:
+                key = f"replace({key}, {_str(old)}, {_str(new)})"
+            elem, etype = f"{x}.`value`", dtype.valueType
+            source, params = f"map_entries({ref})", x
+        body = _cells(elem, etype, path + (_Sql(key),), depth + 1)
+        return f"coalesce(flatten(transform({source}, {params} -> {body})), {EMPTY_CELLS})"
     # scalar leaf
-    value = _canonical(col, dtype)
-    qualifier = prefix if prefix is not None else F.lit("")
-    return F.when(
-        col.isNotNull(),
-        F.array(F.struct(qualifier.alias("qualifier"), value.alias("value"))),
-    ).otherwise(_empty_cells())
+    cell = f"named_struct('qualifier', {_qualifier(path)}, 'value', {_canonical(ref, dtype)})"
+    return f"CASE WHEN {ref} IS NOT NULL THEN array({cell}) ELSE {EMPTY_CELLS} END"
 
 
 def kv_flatten(
@@ -124,26 +134,15 @@ def kv_flatten(
     """Flatten every column except ``rowkey_col``/``exclude`` into
     HBase-cell long format (rowkey, cf, qualifier, value)."""
     skip = set(exclude) | {rowkey_col}
-    fields = [f for f in df.schema.fields if f.name not in skip]
-
-    def _top(name: str):  # quote so literal '.' in a column name isn't a path
-        return F.col("`" + name.replace("`", "``") + "`")
-
-    parts = [
-        _cells(_top(f.name), f.dataType, F.lit(_escape_static(f.name))) for f in fields
-    ]
-    if not parts:
-        cells = _empty_cells()
-    else:
-        cells = F.concat(*parts) if len(parts) > 1 else parts[0]
-        cells = F.coalesce(cells, _empty_cells())
-    exploded = df.select(
-        _top(rowkey_col).cast("string").alias("rowkey"),
-        F.explode(cells).alias("cell"),
+    cells = _concat_cells([
+        _cells(_ident(f.name), f.dataType, (_escape_static(f.name),))
+        for f in df.schema.fields
+        if f.name not in skip
+    ])
+    exploded = df.selectExpr(
+        f"CAST({_ident(rowkey_col)} AS STRING) AS rowkey",
+        f"explode({cells}) AS cell",
     )
-    return exploded.select(
-        "rowkey",
-        F.lit(cf).alias("cf"),
-        F.col("cell.qualifier").alias("qualifier"),
-        F.col("cell.value").alias("value"),
+    return exploded.selectExpr(
+        "rowkey", f"{_str(cf)} AS cf", "cell.qualifier AS qualifier", "cell.value AS value"
     )

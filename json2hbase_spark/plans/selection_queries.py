@@ -2053,9 +2053,12 @@ def _evict_stale_sessions(cache: dict, app_id: str) -> None:
     scoped, so entries from ENDED sessions can never hit again —
     drop them on insert so long-lived multi-session processes (test
     runs spawning several sessions) don't accumulate dead payloads.
-    Payloads are ≤4×64 rows; this is hygiene, not a leak fix."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
+    Payloads are ≤4×64 rows; this is hygiene, not a leak fix. Walks a
+    snapshot of the keys and tolerates a key already gone, so a
+    concurrent insert or eviction from another thread cannot raise."""
+    for k in list(cache):
+        if k[0] != app_id:
+            cache.pop(k, None)
 
 
 def _power_eigvec(spark: SparkSession, sf_dir: str, refresh: bool = False):

@@ -320,9 +320,10 @@ def _pca_components(spark: SparkSession, sf_dir: str, refresh: bool = False):
         # result (same _accel_matrix input, same _power_on chain —
         # bit-identical by construction, pinned by the memo tests), so
         # an eigvec consumer after a j127/j145 warm-up should not
-        # re-run the covariance + squaring + matvec chain. setdefault
-        # keeps an existing entry (equal values) untouched.
-        _EIG_CACHE.setdefault(key, stored[0])
+        # re-run the covariance + squaring + matvec chain. Overwrite:
+        # the fresh component 0 replaces any entry, so an explicit
+        # refresh cannot leave a stale eigvec behind.
+        _EIG_CACHE[key] = stored[0]
     return [
         (
             spark.createDataFrame(rows, "dim INT, v BIGINT"),

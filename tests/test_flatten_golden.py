@@ -144,3 +144,51 @@ def test_rows_scale_linearly_with_docs(spark):
     docs = [{"id": f"d{i}", "x": i, "ys": [i, i + 1]} for i in range(50)]
     df = _flatten_json_docs(spark, docs)
     assert df.count() == 50 * 3  # x, ys.0, ys.1
+
+
+def test_sql_quoting_is_independent_of_escaped_string_literals(spark):
+    """Names and keys holding quotes, backticks, backslashes and the
+    separator, and a field named like a lambda variable, flatten to the
+    same cells whatever ``spark.sql.parser.escapedStringLiterals`` says."""
+    from pyspark.sql.types import (
+        ArrayType,
+        LongType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    x0 = StructType([StructField("x0", StringType())])
+    schema = StructType(
+        [
+            StructField("id", StringType()),
+            StructField("it's", StringType()),
+            StructField("a`b", LongType()),
+            StructField(
+                "c\\d.e",
+                StructType([StructField("x0", StringType()), StructField("xs", ArrayType(x0))]),
+            ),
+            StructField("m", MapType(StringType(), StringType())),
+        ]
+    )
+    row = ("q1", "v'1", 7, ("in", [("el",)]), {"k'1": "a", "k\\.2": "b"})
+    df = spark.createDataFrame([row], schema)
+    expected = {
+        ("it's", "v'1"),
+        ("a`b", "7"),
+        ("c\\\\d\\.e.x0", "in"),
+        ("c\\\\d\\.e.xs.0.x0", "el"),
+        ("m.k'1", "a"),
+        ("m.k\\\\\\.2", "b"),
+    }
+    conf = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(conf)
+    try:
+        for escaped in ("false", "true"):
+            spark.conf.set(conf, escaped)
+            rows = kv_flatten(df, "id").collect()
+            assert {(r.qualifier, r.value) for r in rows} == expected, escaped
+            assert {(r.rowkey, r.cf) for r in rows} == {("q1", "d")}
+    finally:
+        spark.conf.set(conf, before)

@@ -632,7 +632,8 @@ def test_pq_cents_memo_bit_equals_recompute(spark):
 def test_pca_components_cross_seed_and_eviction(spark):
     """ADVICE r13 (round 14): a _PCA_COMP_CACHE store seeds
     _EIG_CACHE from component 0 — bit-identical by construction (same
-    _accel_matrix input, same _power_on chain) — so an eigvec consumer
+    _accel_matrix input, same _power_on chain), replacing any stale
+    entry on an explicit refresh — so an eigvec consumer
     after a j127/j145 warm-up skips the covariance+matvec chain; and
     every memo store evicts entries from ended sessions (keys are
     applicationId-scoped, so a dead entry can never hit again)."""
@@ -647,10 +648,9 @@ def test_pca_components_cross_seed_and_eviction(spark):
     v_f, w_f = _power_eigvec(spark, SF, refresh=True)
     fresh = sorted((r.dim, r.v) for r in v_f.collect())
     wm_f = w_f.collect()[0]["w_max"]
-    _EIG_CACHE.pop(key, None)
+    _EIG_CACHE[key] = ([], 0)  # stale: an explicit refresh must replace it
     _pca_components(spark, SF, refresh=True)
-    assert key in _EIG_CACHE, "components store must seed the eigvec memo"
-    assert _EIG_CACHE[key] == (fresh, wm_f)
+    assert _EIG_CACHE[key] == (fresh, wm_f), "components store must replace the eigvec memo entry"
     stale = ("dead-app-id",) + key[1:]
     _EIG_CACHE[stale] = ([], 0)
     _power_eigvec(spark, SF, refresh=True)
