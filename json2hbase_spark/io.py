@@ -5,12 +5,24 @@ At 100 TB these would be partitioned datasets (e.g. orders/lineitem
 partitioned by date); ``load`` takes any path Spark's parquet source
 accepts, so the same call works on a partitioned directory — partition
 pruning and predicate pushdown then come free from Catalyst.
+
+Schema memo: a parquet read without a schema runs one footer-inference
+job. ``parquet_schema`` infers a local file's schema once per process,
+keyed on its realpath, inode, mtime and size and on the confs inference
+reads, and every loader reads with it. A directory or a remote URI (a
+partitioned dataset on a cluster) is inferred by Spark on every call;
+the answer there is a catalog table, not this memo.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -71,18 +83,38 @@ def widen(df: DataFrame) -> DataFrame:
     return df
 
 
+# Confs that parquet schema inference reads: each can change the schema.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_schemas: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized for a
+    local file (see the module docstring)."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema
+    st = os.stat(path)
+    key = (os.path.realpath(path), st.st_ino, st.st_mtime_ns, st.st_size)
+    key += tuple(spark.conf.get(c) for c in _INFER_CONFS)
+    # No lock: threads racing on a miss infer and store the same value.
+    schema = _schemas.get(key)
+    if schema is None:
+        schema = _schemas[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """a1_parquet_scan: columnar scan of one fixture table."""
     if name == "events":
         _events_confs(spark)
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        return _normalize_events_ts(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# keyed on (sf_dir, mtime, size) so a regenerated fixture with a new
-# schema is re-probed instead of silently streaming with a stale one
-_stream_schema_cache: dict[tuple, object] = {}
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    return _normalize_events_ts(df) if name == "events" else df
 
 
 def _stage_symlink(link: str, src: str) -> None:
@@ -90,8 +122,6 @@ def _stage_symlink(link: str, src: str) -> None:
     catches dangling links left by a removed/renamed sf_dir, a stale
     or wrong-target link is replaced, and the create is wrapped for
     the window where a concurrent session links first."""
-    import os
-
     if os.path.lexists(link):
         try:
             if os.readlink(link) == src and os.path.exists(link):
@@ -103,8 +133,6 @@ def _stage_symlink(link: str, src: str) -> None:
         except IsADirectoryError:
             # a real directory at the staged path (leftover from an
             # older layout) — replace it
-            import shutil
-
             shutil.rmtree(link, ignore_errors=True)
         except OSError:
             pass  # e.g. EPERM — the symlink create below surfaces it
@@ -124,58 +152,31 @@ def _stage_symlink(link: str, src: str) -> None:
 
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a8_stream_source: the events table as an unbounded streaming
-    source (file source requires an explicit schema); same ns→µs
-    conversion as the batch path so stream/batch plans are equivalent.
-    The schema probe (a batch footer read) is cached per sf_dir — the
-    i-family runs a dozen streaming queries against the same fixture."""
+    source, with the same ns→µs conversion as the batch path so
+    stream/batch plans are equivalent."""
     _events_confs(spark)
-    import os
-    import tempfile
-
-    src = f"{sf_dir}/events.parquet"
-    st = os.stat(src)
-    cache_key = (sf_dir, st.st_mtime_ns, st.st_size)
-    raw_schema = _stream_schema_cache.get(cache_key)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(src).schema
-        _stream_schema_cache[cache_key] = raw_schema
-    # the file stream source wants a directory; stage the single-file
-    # fixture behind a per-sf temp dir (symlink — no data copy)
-    # Key the stage dir on source generation (mtime/size — the same
-    # identity the schema cache uses): a re-generated fixture gets a
-    # FRESH stage dir, so two sessions staging different generations
-    # of the same sf_dir never mutate a shared directory (ADVICE r9).
-    tag = sf_dir.strip("/").replace("/", "_")
-    gen = f"{st.st_mtime_ns:x}_{st.st_size:x}"
-    stage = os.path.join(tempfile.gettempdir(), f"json2hbase_stream_{tag}_{gen}")
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    _stage_symlink(link, src)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    return _normalize_events_ts(stream)
+    return _normalize_events_ts(_staged_stream(spark, sf_dir, "events"))
 
 
 def load_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Any fixture table as an unbounded streaming source — the same
-    schema-probe + symlink-staging path as ``load_events_stream`` (the
-    file source needs an explicit schema and a directory), without the
-    events-only timestamp normalization. Used by streaming corpus ops
-    (i24) that stream ``documents`` instead of ``events``."""
-    import os
-    import tempfile
+    """Any fixture table as an unbounded streaming source. The file
+    source needs an explicit schema, which comes from
+    ``parquet_schema`` (the i-family runs dozens of streaming queries
+    against the same fixtures), and a directory, so the table is staged
+    behind a temp dir of symlinks (no data copy)."""
+    return _staged_stream(spark, sf_dir, table)
 
+
+def _staged_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    # Shared body. load_events_stream does not go through
+    # load_table_stream, so a caller timing both counts a stream once.
     src = f"{sf_dir}/{table}.parquet"
+    raw_schema = parquet_schema(spark, src)
     st = os.stat(src)
-    cache_key = (sf_dir, table, st.st_mtime_ns, st.st_size)
-    raw_schema = _stream_schema_cache.get(cache_key)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(src).schema
-        _stream_schema_cache[cache_key] = raw_schema
-    # Generation-keyed stage dir (mtime/size, like load_events_stream):
-    # each fixture generation stages into its own directory, so the
-    # stale-entry cleanup below only ever handles SAME-generation
-    # re-stages and concurrent sessions can't delete each other's
-    # links (ADVICE r9).
+    # Generation-keyed stage dir (mtime/size): each fixture generation
+    # stages into its own directory, so the stale-entry cleanup below
+    # only ever handles SAME-generation re-stages and concurrent
+    # sessions can't delete each other's links (ADVICE r9).
     tag = sf_dir.strip("/").replace("/", "_")
     gen = f"{st.st_mtime_ns:x}_{st.st_size:x}"
     stage = os.path.join(
@@ -187,9 +188,10 @@ def load_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame
         # source lists the stage dir NON-recursively, so a symlinked
         # subdirectory would read as zero files — link each data file
         # into the stage dir instead (still no data copy).
-        want = {f for f in os.listdir(src) if f.endswith(".parquet")}
+        names = [f for f in os.listdir(src) if f.endswith(".parquet")]
+        links = {f: os.path.join(src, f) for f in names}
     else:
-        want = {f"{table}.parquet"}
+        links = {f"{table}.parquet": src}
     # The stage dir is deterministic and persists across runs: a
     # re-generated fixture changes Spark part-file names every write,
     # so entries from the PREVIOUS generation (dangling links, or a
@@ -197,16 +199,13 @@ def load_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame
     # would make the stream fail on dangling files or read the table
     # twice (ADVICE r8). Drop anything not in the current source set.
     for f in os.listdir(stage):
-        if f.endswith(".parquet") and f not in want:
+        if f.endswith(".parquet") and f not in links:
             try:
                 os.unlink(os.path.join(stage, f))
             except OSError:
                 pass
-    if os.path.isdir(src):
-        for f in sorted(want):
-            _stage_symlink(os.path.join(stage, f), os.path.join(src, f))
-    else:
-        _stage_symlink(os.path.join(stage, f"{table}.parquet"), src)
+    for f, target in sorted(links.items()):
+        _stage_symlink(os.path.join(stage, f), target)
     return spark.readStream.schema(raw_schema).parquet(stage)
 
 
@@ -220,7 +219,7 @@ def register_views(
     """Register fixture tables as temp views for the SQL path
     (SURVEY.md §3.4) — needed for GROUPING SETS and SQL-expressed ops.
     Pass ``only`` to register just the tables a query touches: each
-    registration re-reads parquet footers, so view setup is O(tables)
-    of driver round-trips a hot query shouldn't pay for unused views."""
+    registration builds and analyzes a plan (the first per table also
+    infers its schema), work a hot query shouldn't pay for unused views."""
     for name in only if only is not None else TABLES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)

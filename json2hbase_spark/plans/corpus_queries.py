@@ -955,8 +955,10 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each iteration is one join + one hash agg with the per-iteration
     rank table materialized (flat lineage, same posture as j21); the
     edge set materializes once — exactly the 100 TB checkpointing
-    shape. Quantization bias is 1e-12 per edge — epsilon against
-    PR values ≥ 0.15/N."""
+    shape. The loop invariants (out-degree and node count) are computed
+    once and ride in the rank table, so an iteration neither re-shuffles
+    ``bi`` for degrees nor re-broadcasts the count. Quantization bias is
+    1e-12 per edge — epsilon against PR values ≥ 0.15/N."""
     edges = materialize(_dup_edges(spark, sf_dir))
     bi = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
         edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
@@ -964,12 +966,11 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bi = materialize(bi)
     deg = bi.groupBy("src").agg(F.count("*").alias("deg"))
     nn = deg.agg(F.count("*").alias("n"))
-    pr = (
-        deg.crossJoin(F.broadcast(nn))
-        .select(
-            F.col("src").alias("node"),
-            "deg",
-            (F.lit(1.0) / F.col("n")).alias("pr"),
+    # (node, deg, n, pr): bi is symmetric, so every iteration's rank
+    # table holds exactly deg's nodes and can carry deg and n forward
+    pr = materialize(
+        deg.crossJoin(F.broadcast(nn)).select(
+            F.col("src").alias("node"), "deg", "n", (F.lit(1.0) / F.col("n")).alias("pr")
         )
     )
     for _ in range(PR_ITERS):
@@ -981,11 +982,10 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sums = contribs.groupBy("dst").agg(F.sum("q").alias("sq"))
         pr = materialize(
-            sums.join(deg.select(F.col("src").alias("dst"), "deg"), "dst")
-            .crossJoin(F.broadcast(nn))
-            .select(
+            sums.join(pr.select(F.col("node").alias("dst"), "deg", "n"), "dst").select(
                 F.col("dst").alias("node"),
                 "deg",
+                "n",
                 (
                     F.lit(0.15) / F.col("n")
                     + F.lit(0.85) * (F.col("sq").cast("double") / F.lit(PR_QUANT))

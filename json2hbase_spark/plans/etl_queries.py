@@ -922,7 +922,7 @@ def a23_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = os.path.join(tempfile.gettempdir(), f"j2h_a23_assets_{tag}")
     marker = os.path.join(stage, "_staged")
     # marker carries the source fixture's fingerprint (mtime_ns:size,
-    # io.py's _stream_schema_cache pattern): a regenerated
+    # part of io.parquet_schema's memo key): a regenerated
     # documents.parquet invalidates the staging instead of silently
     # serving blobs from the previous corpus generation
     src = os.path.join(sf_dir, "documents.parquet")

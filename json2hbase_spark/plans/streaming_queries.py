@@ -19,7 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from json2hbase_spark.io import load, load_events_stream
+from json2hbase_spark.io import load, load_events_stream, parquet_schema
 from json2hbase_spark.materialize import materialize
 from json2hbase_spark.plans.corpus_queries import (
     QLR_B,
@@ -1163,7 +1163,7 @@ def i21_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = scratch_dir("j2h_i21_dup_")
     os.symlink(src, os.path.join(stage, "0.parquet"))
     os.symlink(src, os.path.join(stage, "1.parquet"))
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = _normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
     deduped = (
         stream.withWatermark("ts", "2 hours")
@@ -1393,7 +1393,7 @@ def i26_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = scratch_dir("j2h_i26_dup_")
     os.symlink(src, os.path.join(stage, "0.parquet"))
     os.symlink(src, os.path.join(stage, "1.parquet"))
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(schema).parquet(stage)
     toks = stream.select(whitespace_tokens(F.col("text")).alias("w")).filter(
         F.size("w") >= 1

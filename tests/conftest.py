@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -7,6 +8,10 @@ import pytest
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+
+# job-group ids must not repeat within the session: the status tracker
+# keeps the jobs of every group it has seen
+_JOB_GROUPS = itertools.count()
 
 
 @pytest.fixture(scope="session")
@@ -21,3 +26,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns the number of Spark
+    jobs it launched: a counter, unmoved by host speed. Jobs are
+    tagged with a job group; the listener bus is drained before the
+    status tracker is read, since it records jobs asynchronously."""
+    sc = spark.sparkContext
+
+    def run(fn) -> int:
+        group = f"count_jobs_{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

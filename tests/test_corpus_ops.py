@@ -1139,3 +1139,25 @@ def test_j158_prf_surfaces_expansion_only_doc(spark, tmp_path):
     # expanded ranking is a valid permutation prefix
     poss = sorted(r.pos_exp for r in out.values())
     assert poss == list(range(1, len(out) + 1))
+
+
+def test_j47_pagerank_matches_duckdb_oracle(spark, sf_dir):
+    from json2hbase_spark import registry
+    from json2hbase_spark.plans.corpus_queries import j47_pagerank
+    from tools.oracle_check import compare, duck_connection
+
+    got = j47_pagerank(spark, sf_dir).toPandas()
+    want = duck_connection(sf_dir).execute(registry.ORACLES["j47_pagerank"]).fetchdf()
+    assert len(got) > 0
+    assert compare("j47_pagerank", got, want) == []
+
+
+def test_j47_pagerank_job_count(spark, sf_dir, count_jobs):
+    """Degrees and the node count are computed once and carried in the
+    rank table. Recomputing them in each of the three iterations costs
+    three more jobs here (35); a fresh schema inference costs one."""
+    from json2hbase_spark.io import parquet_schema
+    from json2hbase_spark.plans.corpus_queries import j47_pagerank
+
+    parquet_schema(spark, f"{sf_dir}/documents.parquet")
+    assert count_jobs(lambda: j47_pagerank(spark, sf_dir).collect()) == 32
