@@ -9,7 +9,7 @@ Sink: this sandbox has no HBase (SURVEY.md §0), so the sink is emulated
 with HBase's physical contract preserved: cells are range-partitioned by
 rowkey into N "regions" and sorted by (rowkey, cf, qualifier) within
 each region — exactly the layout an HFile bulk-load produces. On a real
-cluster, swap `_write_region_files` for the hbase-spark DataSource
+cluster, swap `write_hbase_emulated` for the hbase-spark DataSource
 (``df.write.format("org.apache.hadoop.hbase.spark")``) or a
 ``foreachPartition`` + HBase client batched-Put writer; the partitioning
 and sorting stages stay identical, which is the part that matters at

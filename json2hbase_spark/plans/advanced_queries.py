@@ -164,8 +164,11 @@ def _labels_converged(edges: DataFrame, rounds: int = 8) -> DataFrame:
     materialized edge table, so its exact cardinality is one cheap
     count away — below BROADCAST_EDGE_LIMIT rows every per-round join
     broadcasts the edge/label side (AQE can't pick this itself: a
-    localCheckpoint-backed union has no usable size estimate, so it
-    plans SMJ; measured 1.5-2 s/round saved at fixture scale), above
+    localCheckpoint-backed table keeps the size estimate of the plan it
+    was checkpointed from, and that estimate is inflated far past its
+    rows — 847 MB for a 74-row bidirectional edge union on the
+    perfbench fixtures — so it plans SMJ; measured 1.5-2 s/round saved
+    at fixture scale), above
     it the joins stay SMJ — the 100 TB path, where the edge set grows
     with duplication density × corpus and must shuffle. This is
     AQE's own broadcast-threshold policy applied with an exact

@@ -28,6 +28,7 @@ from json2hbase_spark.operators.similarity import dot as vdot
 from json2hbase_spark.operators.similarity import hard_negatives, l2_norm
 from json2hbase_spark.operators.text import whitespace_tokens
 from json2hbase_spark.plans.advanced_queries import (
+    BROADCAST_EDGE_LIMIT,
     DUCK_DUP_EDGES,
     _dup_edges,
     kmeans_assign,
@@ -954,40 +955,54 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     change the result, while the damping arithmetic stays plain IEEE.
     Each iteration is one join + one hash agg with the per-iteration
     rank table materialized (flat lineage, same posture as j21); the
-    edge set materializes once — exactly the 100 TB checkpointing
-    shape. The loop invariants (out-degree and node count) are computed
-    once and ride in the rank table, so an iteration neither re-shuffles
-    ``bi`` for degrees nor re-broadcasts the count. Quantization bias is
-    1e-12 per edge — epsilon against PR values ≥ 0.15/N."""
-    edges = materialize(_dup_edges(spark, sf_dir))
-    bi = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    bi = materialize(bi)
-    deg = bi.groupBy("src").agg(F.count("*").alias("deg"))
-    nn = deg.agg(F.count("*").alias("n"))
-    # (node, deg, n, pr): bi is symmetric, so every iteration's rank
-    # table holds exactly deg's nodes and can carry deg and n forward
-    pr = materialize(
-        deg.crossJoin(F.broadcast(nn)).select(
-            F.col("src").alias("node"), "deg", "n", (F.lit(1.0) / F.col("n")).alias("pr")
+    edge set materializes once, both directions from one explode —
+    exactly the 100 TB checkpointing shape. ``bi`` is symmetric, so a
+    node's in-degree is its out-degree: each iteration's aggregate
+    counts the next rank table's ``deg`` alongside the sum, and ``bi``
+    is shuffled for degrees only once.
+
+    The rank table joins ``bi`` as a broadcast while the exact node
+    count ``n`` is at most ``BROADCAST_EDGE_LIMIT``; above it the join
+    stays sort-merge (the 100 TB path). AQE cannot decide this itself:
+    a localCheckpoint-backed table keeps the size estimate of the plan
+    it was checkpointed from, inflated far past its rows (424 MB for
+    the 74-row ``bi`` on the perfbench fixtures, over 10^17 bytes for a
+    54-row rank table after one iteration), so it plans a sort-merge
+    join with shuffles on both sides. ``n`` is read once; ``1.0 / n``
+    and ``0.15 / n`` divide by it as a double, as the oracle does.
+    Quantization bias is 1e-12 per edge — epsilon against PR values
+    ≥ 0.15/N."""
+    bi = materialize(
+        _dup_edges(spark, sf_dir)
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )
+            ).alias("e")
         )
+        .select("e.src", "e.dst")
     )
+    deg = materialize(
+        bi.groupBy("src").agg(F.count("*").alias("deg")).select(F.col("src").alias("node"), "deg")
+    )
+    n = deg.count()
+    pr = deg.withColumn("pr", F.lit(1.0) / F.lit(n))
     for _ in range(PR_ITERS):
-        contribs = bi.join(
-            pr.select(F.col("node").alias("src"), "deg", "pr"), "src"
-        ).select(
-            "dst",
-            F.floor(F.col("pr") / F.col("deg") * PR_QUANT + 0.5).cast("long").alias("q"),
-        )
-        sums = contribs.groupBy("dst").agg(F.sum("q").alias("sq"))
+        p = F.broadcast(pr) if n <= BROADCAST_EDGE_LIMIT else pr
         pr = materialize(
-            sums.join(pr.select(F.col("node").alias("dst"), "deg", "n"), "dst").select(
+            bi.join(p, F.col("src") == F.col("node"))
+            .groupBy("dst")
+            .agg(
+                F.count("*").alias("deg"),
+                F.sum(F.floor(F.col("pr") / F.col("deg") * PR_QUANT + 0.5).cast("long")).alias("sq"),
+            )
+            .select(
                 F.col("dst").alias("node"),
                 "deg",
-                "n",
                 (
-                    F.lit(0.15) / F.col("n")
+                    F.lit(0.15) / F.lit(n)
                     + F.lit(0.85) * (F.col("sq").cast("double") / F.lit(PR_QUANT))
                 ).alias("pr"),
             )

@@ -1141,23 +1141,37 @@ def test_j158_prf_surfaces_expansion_only_doc(spark, tmp_path):
     assert poss == list(range(1, len(out) + 1))
 
 
-def test_j47_pagerank_matches_duckdb_oracle(spark, sf_dir):
+def _assert_j47_matches_oracle(spark, sf_dir):
     from json2hbase_spark import registry
-    from json2hbase_spark.plans.corpus_queries import j47_pagerank
+    from json2hbase_spark.plans import corpus_queries
     from tools.oracle_check import compare, duck_connection
 
-    got = j47_pagerank(spark, sf_dir).toPandas()
+    got = corpus_queries.j47_pagerank(spark, sf_dir).toPandas()
     want = duck_connection(sf_dir).execute(registry.ORACLES["j47_pagerank"]).fetchdf()
     assert len(got) > 0
     assert compare("j47_pagerank", got, want) == []
 
 
+def test_j47_pagerank_matches_duckdb_oracle(spark, sf_dir):
+    _assert_j47_matches_oracle(spark, sf_dir)
+
+
 def test_j47_pagerank_job_count(spark, sf_dir, count_jobs):
-    """Degrees and the node count are computed once and carried in the
-    rank table. Recomputing them in each of the three iterations costs
-    three more jobs here (35); a fresh schema inference costs one."""
+    """One materialize builds both edge directions, and each iteration
+    is one broadcast join plus one aggregate that also recounts
+    degrees. A union materialize or a second rank-table join per
+    iteration raises the count; a fresh schema inference adds one."""
     from json2hbase_spark.io import parquet_schema
     from json2hbase_spark.plans.corpus_queries import j47_pagerank
 
     parquet_schema(spark, f"{sf_dir}/documents.parquet")
-    assert count_jobs(lambda: j47_pagerank(spark, sf_dir).collect()) == 32
+    assert count_jobs(lambda: j47_pagerank(spark, sf_dir).collect()) == 18
+
+
+def test_j47_pagerank_sort_merge_side_matches_duckdb_oracle(spark, sf_dir, monkeypatch):
+    """Above BROADCAST_EDGE_LIMIT nodes the rank table is not
+    broadcast (the 100 TB path): same rows."""
+    from json2hbase_spark.plans import corpus_queries
+
+    monkeypatch.setattr(corpus_queries, "BROADCAST_EDGE_LIMIT", 0)
+    _assert_j47_matches_oracle(spark, sf_dir)
