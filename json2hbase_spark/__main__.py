@@ -1,7 +1,12 @@
 """CLI entry point — the json2hbase utility surface, Spark-native.
 
 Mirrors the reference's one-pass ETL (SURVEY.md §3.1: JSON parse →
-recursive flatten → rowkey → HBase Put batch) as a single Spark job:
+recursive flatten → rowkey → HBase Put batch) as a short chain of Spark
+jobs: one infers the JSON schema, one parses, flattens and keys the
+documents into the region shuffle, and one writes the sorted regions.
+An unsalted rowkey (``--salt 0``, the default) adds a job before the
+shuffle that samples the region bounds; a salted one is pre-split on
+the salt's hex key space:
 
     python -m json2hbase_spark \
         --input docs.jsonl --rowkey id --cf d \
@@ -9,7 +14,8 @@ recursive flatten → rowkey → HBase Put batch) as a single Spark job:
 
 The sink is the emulated HBase bulk-load layout (region-partitioned,
 sorted parquet — operators/hbase.py explains the swap-in for a real
-cluster). Prints one JSON status line to stdout.
+cluster). Prints one JSON status line to stdout; its cell count reads
+the written table back, in jobs of its own.
 """
 
 from __future__ import annotations

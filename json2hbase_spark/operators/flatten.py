@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DataType, MapType, StructType
 
+from json2hbase_spark.operators.hbase import SALT_LEN_KEY
+
 CELL_TYPE = "array<struct<qualifier:string,value:string>>"
 EMPTY_CELLS = f"CAST(array() AS {CELL_TYPE})"
 SEP = "."
@@ -132,8 +134,13 @@ def kv_flatten(
     exclude: tuple[str, ...] = (),
 ) -> DataFrame:
     """Flatten every column except ``rowkey_col``/``exclude`` into
-    HBase-cell long format (rowkey, cf, qualifier, value)."""
+    HBase-cell long format (rowkey, cf, qualifier, value). A salt tag
+    on ``rowkey_col`` (``hbase.SALT_LEN_KEY`` metadata, set by
+    ``derive_rowkey``) is carried onto ``rowkey``; the CAST to string
+    drops any other metadata."""
     skip = set(exclude) | {rowkey_col}
+    meta = next((f.metadata for f in df.schema.fields if f.name == rowkey_col), {})
+    salt = {SALT_LEN_KEY: meta[SALT_LEN_KEY]} if SALT_LEN_KEY in meta else {}
     cells = _concat_cells([
         _cells(_ident(f.name), f.dataType, (_escape_static(f.name),))
         for f in df.schema.fields
@@ -143,6 +150,7 @@ def kv_flatten(
         f"CAST({_ident(rowkey_col)} AS STRING) AS rowkey",
         f"explode({cells}) AS cell",
     )
-    return exploded.selectExpr(
+    out = exploded.selectExpr(
         "rowkey", f"{_str(cf)} AS cf", "cell.qualifier AS qualifier", "cell.value AS value"
     )
+    return out.withMetadata("rowkey", salt) if salt else out

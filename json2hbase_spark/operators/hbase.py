@@ -6,21 +6,36 @@ a short salt prefix derived from a stable hash of the natural key, which
 spreads writes across regions while keeping per-entity scans cheap.
 
 Sink: this sandbox has no HBase (SURVEY.md §0), so the sink is emulated
-with HBase's physical contract preserved: cells are range-partitioned by
-rowkey into N "regions" and sorted by (rowkey, cf, qualifier) within
-each region — exactly the layout an HFile bulk-load produces. On a real
-cluster, swap `write_hbase_emulated` for the hbase-spark DataSource
-(``df.write.format("org.apache.hadoop.hbase.spark")``) or a
-``foreachPartition`` + HBase client batched-Put writer; the partitioning
-and sorting stages stay identical, which is the part that matters at
-100 TB (bulk-load wants sorted runs, Put-storms want region-aligned
-batches).
+with HBase's physical contract preserved: cells are partitioned into N
+"regions", each a contiguous rowkey range, and sorted by (rowkey, cf,
+qualifier) within each region — exactly the layout an HFile bulk-load
+produces. On a real cluster, swap `write_hbase_emulated` for the
+hbase-spark DataSource (``df.write.format("org.apache.hadoop.hbase.spark")``)
+or a ``foreachPartition`` + HBase client batched-Put writer; the
+partitioning and sorting stages stay identical, which is the part that
+matters at 100 TB (bulk-load wants sorted runs, Put-storms want
+region-aligned batches).
+
+Region boundaries: a real bulk load partitions on the table's region
+start keys; it does not sample the data it writes. Salted keys get the
+same treatment here. ``derive_rowkey(..., salt_len=L)`` tags its column
+with ``hbase.salt_len`` metadata, and ``prepare_hbase_cells`` pre-splits
+such keys on the salt's hex key space, as HBase's ``RegionSplitter``
+pre-splits a hashed-key table with ``HexStringSplit``: no Spark job runs
+before the shuffle, and a salted table's boundaries are a stable
+property of the table rather than re-sampled on every write. Unsalted
+keys have an unknown key space, so they keep Spark's sampled range
+partitioning, which costs one extra job that evaluates the input (JSON
+scan and flatten included) a second time.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+SALT_LEN_KEY = "hbase.salt_len"  # column metadata: hex salt chars leading the rowkey
+MAX_SPLIT_CHARS = 8  # salt chars the pre-split looks at
 
 
 def derive_rowkey(
@@ -32,37 +47,78 @@ def derive_rowkey(
 
     ``salt_len > 0`` prepends the first ``salt_len`` hex chars of
     ``md5(natural_key)`` so sequential keys spread across regions
-    (16**salt_len buckets) while per-entity scans stay cheap.
+    (16**salt_len buckets) while per-entity scans stay cheap. The
+    salted column is named ``rowkey`` (so an unaliased
+    ``select(derive_rowkey(...))`` yields a ``rowkey`` column) and
+    carries ``{SALT_LEN_KEY: salt_len}`` metadata, which tells
+    ``prepare_hbase_cells`` to pre-split on the salt. Spark keeps the
+    metadata through ``withColumn``, ``select`` and renames, and drops
+    it with any expression that changes the value.
     """
     cols = [F.col(p) if isinstance(p, str) else p for p in parts]
     natural = F.concat_ws(sep, *[c.cast("string") for c in cols])
     if salt_len <= 0:
         return natural
     salt = F.substring(F.md5(natural), 1, salt_len)
-    return F.concat(salt, F.lit(sep), natural)
+    return F.concat(salt, F.lit(sep), natural).alias("rowkey", metadata={SALT_LEN_KEY: salt_len})
 
 
-def region_bucket(rowkey: Column, n_regions: int = 16) -> Column:
-    """Stable region assignment for a rowkey (emulates HBase region
-    split points via hash ranges)."""
-    return F.abs(F.xxhash64(rowkey)) % n_regions
+def salt_split_keys(salt_len: int, n_regions: int) -> list[str]:
+    """``HexStringSplit`` over the salt: the ``n_regions - 1`` boundaries
+    ``ceil(i * 16**L / n_regions)`` of the first ``L = min(salt_len,
+    MAX_SPLIT_CHARS)`` hex chars, as L-digit lowercase hex. Duplicates
+    and the end of the key space are dropped, so with more regions than
+    salt values the last regions stay empty."""
+    width = min(salt_len, MAX_SPLIT_CHARS)
+    space = 16**width
+    bounds = sorted({-(-i * space // n_regions) for i in range(1, n_regions)} - {space})
+    return [f"{b:0{width}x}" for b in bounds]
+
+
+def _region_sql(splits: list[str]) -> str:
+    """SQL for the number of ``splits`` <= ``rowkey``, as a balanced CASE
+    tree (NULL keys go to region 0, where they sort first). Split keys
+    are hex digits, so they need no quoting care."""
+
+    def tree(lo: int, hi: int) -> str:  # the region in [lo, hi]
+        if lo == hi:
+            return str(lo)
+        mid = (lo + hi + 1) // 2
+        below, above = tree(lo, mid - 1), tree(mid, hi)
+        return f"CASE WHEN `rowkey` < '{splits[mid - 1]}' THEN {below} ELSE {above} END"
+
+    return f"CASE WHEN `rowkey` IS NULL THEN 0 ELSE {tree(0, len(splits))} END"
 
 
 def prepare_hbase_cells(kv: DataFrame, n_regions: int = 16) -> DataFrame:
     """Physical-layout stage of the sink: region-partition + sort.
 
     Input: (rowkey, cf, qualifier, value) long format from kv_flatten.
-    Output: same rows, range-partitioned into ``n_regions`` and sorted by
-    (rowkey, cf, qualifier) within partitions — HFile-ready order.
+    Output: same rows in ``n_regions`` partitions, partition *r* holding
+    region *r*'s contiguous rowkey range, sorted by (rowkey, cf,
+    qualifier) within partitions — HFile-ready order.
+
+    A rowkey tagged ``SALT_LEN_KEY`` (``derive_rowkey(...,
+    salt_len>0)``) goes to the region whose ``salt_split_keys`` range
+    holds it, by ``repartitionById``: the boundaries are known before
+    the data is read, so no job runs before the shuffle. String order
+    keeps every region a contiguous key range for any string, so a
+    mis-tagged key can cost balance, never order. An untagged rowkey
+    is range-partitioned on bounds Spark samples first, in an extra job
+    that evaluates ``kv`` (its scan and flatten) a second time.
     """
-    return (
-        kv.repartitionByRange(n_regions, "rowkey")
-        .sortWithinPartitions("rowkey", "cf", "qualifier")
-    )
+    salt_len = kv.schema["rowkey"].metadata.get(SALT_LEN_KEY, 0)
+    if salt_len > 0:
+        region = F.expr(_region_sql(salt_split_keys(salt_len, n_regions)))
+        parted = kv.repartitionById(n_regions, region)
+    else:
+        parted = kv.repartitionByRange(n_regions, "rowkey")
+    return parted.sortWithinPartitions("rowkey", "cf", "qualifier")
 
 
 def write_hbase_emulated(kv: DataFrame, path: str, n_regions: int = 16) -> None:
-    """Emulated sink: write the HFile-ordered cells as parquet."""
+    """Emulated sink: write the HFile-ordered cells as parquet, one file
+    per non-empty region (``part-<r>``)."""
     prepare_hbase_cells(kv, n_regions).write.mode("overwrite").parquet(path)
 
 

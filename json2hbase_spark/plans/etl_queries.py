@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from json2hbase_spark.io import load
 from json2hbase_spark.operators.flatten import kv_flatten
-from json2hbase_spark.operators.hbase import derive_rowkey, prepare_hbase_cells, region_bucket
+from json2hbase_spark.operators.hbase import derive_rowkey, prepare_hbase_cells
 from json2hbase_spark.registry import query
 from json2hbase_spark.scratch import scratch_dir
 
@@ -125,10 +125,11 @@ def a4_json_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("a5_hbase_sink")  # rows-only: region assignment uses xxhash64 (Spark-specific)
+@query("a5_hbase_sink")  # rows-only: keys are unsalted, so Spark samples the region bounds
 def a5_hbase_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Emulated HBase sink path: flatten → region-partition → sort →
-    write HFile-ordered parquet; returns the written cells + region id.
+    write HFile-ordered parquet; returns the written cells + the region
+    each was written to (one region per output file).
     Real deployment swaps the writer for the hbase-spark DataSource."""
     # deterministic slice (an unordered .limit() picks partition-order-
     # dependent rows; the filter selects the same rows on every run)
@@ -142,9 +143,7 @@ def a5_hbase_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e"),
     )
     kv = kv_flatten(docs, "rk", cf="e")
-    cells = prepare_hbase_cells(kv, n_regions=16).withColumn(
-        "region", region_bucket(F.col("rowkey"), 16)
-    )
+    cells = prepare_hbase_cells(kv, n_regions=16).withColumn("region", F.spark_partition_id())
     out_dir = scratch_dir("json2hbase_sink_")
     cells.write.mode("overwrite").parquet(out_dir)
     return spark.read.parquet(out_dir)

@@ -40,6 +40,32 @@ def test_cli_end_to_end(spark, tmp_path):
     assert cells[("2", "name")] == "bob"
 
 
+def test_cli_salted_rowkeys_write_disjoint_regions(spark, tmp_path):
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "docs.jsonl"
+    src.write_text("\n".join(json.dumps({"id": i, "v": f"x{i}"}) for i in range(60)))
+    out = tmp_path / "table"
+    status = run(
+        ["--input", str(src), "--rowkey", "id", "--output", str(out), "--regions", "4", "--salt", "2"]
+    )
+    assert status["cells"] == 120  # "id" and "v" per document
+
+    rowkeys = {r.rowkey for r in spark.read.parquet(str(out)).select("rowkey").collect()}
+    assert rowkeys == {hashlib.md5(str(i).encode()).hexdigest()[:2] + f"#{i}" for i in range(60)}
+    ranges = []
+    for f in sorted(os.listdir(out)):
+        if f.endswith(".parquet"):
+            keys = pq.read_table(out / f, columns=["rowkey"]).column("rowkey").to_pylist()
+            assert keys == sorted(keys)
+            ranges.append((keys[0], keys[-1]))
+    assert len(ranges) > 1
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+
+
 def test_avro_lite_spec_roundtrip():
     """Pure-python Avro codec: zig-zag edge values, unicode strings,
     IEEE double bit-exactness, both required codecs, multi-block

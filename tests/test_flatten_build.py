@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 )
 
 from json2hbase_spark.operators.flatten import kv_flatten
+from json2hbase_spark.operators.hbase import derive_rowkey
 from perfbench import ingest_docs
 
 
@@ -57,11 +58,14 @@ def _round_trips(spark, df) -> int:
 
 def test_plan_build_round_trips_do_not_grow_with_width(spark):
     """One leaf used to cost about a dozen Py4J Column calls; the SQL
-    build costs the same few round trips for 8 fields as for 48."""
+    build costs the same few round trips for 8 fields as for 48, and
+    carrying a salted rowkey's tag stays inside the bound."""
     narrow = _round_trips(spark, spark.createDataFrame([], _flat(8)))
     wide = _round_trips(spark, spark.createDataFrame([], _flat(48)))
+    salted = spark.createDataFrame([], _flat(48)).withColumn("id", derive_rowkey("id", salt_len=2))
     assert narrow == wide
     assert wide <= 30
+    assert _round_trips(spark, salted) <= 30
 
 
 # depth >= 6, arrays of structs holding arrays and maps, maps holding

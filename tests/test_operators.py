@@ -3,12 +3,19 @@ cases on literal fixtures (FIXTURES.md §3)."""
 
 from __future__ import annotations
 
+import math
+import os
+import re
 import tempfile
+from fractions import Fraction
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from json2hbase_spark.operators.flatten import kv_flatten
 from json2hbase_spark.operators.hbase import (
+    SALT_LEN_KEY,
     derive_rowkey,
     prepare_hbase_cells,
     write_hbase_emulated,
@@ -40,6 +47,88 @@ def test_hbase_sink_sorted_within_regions(spark):
     for part in parts:
         keys = [(r.rowkey, r.cf, r.qualifier) for r in part]
         assert keys == sorted(keys)
+
+
+def _keyed_cells(spark, n_docs: int, salt_len: int):
+    df = spark.createDataFrame(
+        [(f"doc{i}", i, [i % 3, i % 5]) for i in range(n_docs)],
+        "id STRING, n INT, xs ARRAY<INT>",
+    )
+    return kv_flatten(df.withColumn("rk", derive_rowkey("id", salt_len=salt_len)), "rk")
+
+
+def _region_files(path: str) -> dict[int, list[tuple[str, str, str]]]:
+    """{region (the part number): its (rowkey, cf, qualifier) in file order}."""
+    out = {}
+    for f in os.listdir(path):
+        m = re.match(r"part-(\d+)-.*\.parquet$", f)
+        if m:
+            t = pq.read_table(os.path.join(path, f), columns=["rowkey", "cf", "qualifier"])
+            out[int(m.group(1))] = list(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+    return out
+
+
+def test_salted_sink_skips_the_sampling_job(spark, count_jobs, tmp_path):
+    """Salted keys are pre-split: one shuffle map job and one write
+    job. Unsalted keys still pay Spark's range-sampling job first."""
+    salted = _keyed_cells(spark, 200, salt_len=2)
+    plain = _keyed_cells(spark, 200, salt_len=0)
+    assert count_jobs(lambda: write_hbase_emulated(salted, str(tmp_path / "s"), n_regions=8)) == 2
+    assert count_jobs(lambda: write_hbase_emulated(plain, str(tmp_path / "p"), n_regions=8)) == 3
+
+
+@pytest.mark.parametrize("salt_len,n_regions", [(2, 16), (2, 10), (1, 32)])
+def test_salted_regions_hold_their_hex_split_ranges(spark, tmp_path, salt_len, n_regions):
+    """Region r holds exactly the keys in [split_r, split_r+1) of the
+    HexStringSplit boundaries over the salt, each file sorted."""
+    kv = _keyed_cells(spark, 1500, salt_len)
+    write_hbase_emulated(kv, str(tmp_path), n_regions=n_regions)
+    space = 16**salt_len
+    bounds = sorted({math.ceil(Fraction(i * space, n_regions)) for i in range(1, n_regions)} - {space})
+    splits = [""] + [f"{b:0{salt_len}x}" for b in bounds] + [chr(0x10FFFF)]
+    regions = _region_files(str(tmp_path))
+    assert regions and max(regions) < len(splits) - 1
+    if n_regions > space:
+        assert len(regions) == space  # one region per salt value, the rest empty
+    ranges = []
+    for r, keys in regions.items():
+        assert keys == sorted(keys)
+        assert splits[r] <= keys[0][0] and keys[-1][0] < splits[r + 1], r
+        ranges.append((keys[0][0], keys[-1][0]))
+    ranges.sort()
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+    assert sum(len(k) for k in regions.values()) == kv.count()
+
+
+def test_salt_tag_follows_the_rowkey_until_its_value_changes(spark, count_jobs, tmp_path):
+    df = spark.createDataFrame([(f"doc{i}", i) for i in range(50)], "id STRING, n INT")
+    assert df.select(derive_rowkey("id", salt_len=2)).columns == ["rowkey"]
+    keyed = df.withColumn("rk", derive_rowkey("id", salt_len=2)).withColumn("m", F.col("n") + 1)
+    kv = kv_flatten(keyed, "rk")
+    renamed = kv.withColumnRenamed("rowkey", "key").withColumnRenamed("key", "rowkey")
+    for field in (keyed.schema["rk"], kv.schema["rowkey"], renamed.schema["rowkey"]):
+        assert field.metadata == {SALT_LEN_KEY: 2}
+    assert kv_flatten(df.withColumn("rk", derive_rowkey("id")), "rk").schema["rowkey"].metadata == {}
+    changed = kv.withColumn("rowkey", F.concat(F.lit("x"), "rowkey"))
+    assert changed.schema["rowkey"].metadata == {}
+    assert count_jobs(lambda: write_hbase_emulated(changed, str(tmp_path), n_regions=4)) == 3
+
+
+def test_a5_writes_one_region_per_file(spark, sf_dir):
+    from json2hbase_spark.plans.etl_queries import a5_hbase_sink
+
+    cells = a5_hbase_sink(spark, sf_dir)
+    per_file = (
+        cells.groupBy(F.input_file_name().alias("f"))
+        .agg(F.collect_set("region").alias("regions"))
+        .collect()
+    )
+    assert len(per_file) > 1
+    regions = [r.regions for r in per_file]
+    assert all(len(rs) == 1 for rs in regions)
+    assert len({rs[0] for rs in regions}) == len(regions)
+    for r in per_file:  # the region is the part file it was written to
+        assert int(re.search(r"part-(\d+)-", r.f).group(1)) == r.regions[0]
 
 
 def test_join_null_semantics(spark):
