@@ -210,52 +210,37 @@ def _labels_converged(edges: DataFrame, rounds: int = 8) -> DataFrame:
             .filter(F.col("la") != F.col("lb"))
         )
 
-    # Round 14 (VERDICT r13 #4): when the small-graph gate holds, the
-    # whole propagation operates on broadcast-sized tables — the right
-    # shuffle-partition count for its min-aggs is set by the DATA (the
-    # same exact statistic that chose broadcast joins), not the
-    # cluster; 32 partitions of a few-thousand-row label table is pure
-    # task fan-out, and every materialize scan inherits the count.
-    # Large graphs (the 100 TB path) keep the session default.
-    from contextlib import nullcontext
-
-    from json2hbase_spark.session import scoped_bounded_chain
-
-    scope = (
-        scoped_bounded_chain(edges.sparkSession) if small_graph else nullcontext()
-    )
     labels = nodes.select("node", F.col("node").alias("label"))
-    with scope:
-        for r in range(rounds):
-            nbr = maybe_broadcast(bi).join(
-                labels.select(F.col("node").alias("dst"), "label"), "dst"
-            ).select(F.col("src").alias("node"), "label")
-            jump = labels.join(
-                maybe_broadcast(
-                    labels.select(
-                        F.col("node").alias("label"), F.col("label").alias("jl")
-                    )
-                ),
-                "label",
-            ).select("node", F.col("jl").alias("label"))
-            labels = (
-                labels.unionByName(nbr)
-                .unionByName(jump)
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-            )
-            # flatten lineage every OTHER round (each un-materialized
-            # round adds 3 joins of the label table — two rounds of
-            # that is fine, more makes Catalyst re-plan an
-            # exponentially bushy tree), and ALWAYS after the last
-            # (three consumers read the final labels: the convergence
-            # check and both cluster-stat aggs — without the cut they
-            # would each re-execute the whole chain); at 100 TB this
-            # IS the per-iteration checkpoint cadence.
-            if r % 2 == 1 or r == rounds - 1:
-                labels = materialize(labels)
-                if straddling(labels).limit(1).count() == 0:
-                    break
+    for r in range(rounds):
+        nbr = maybe_broadcast(bi).join(
+            labels.select(F.col("node").alias("dst"), "label"), "dst"
+        ).select(F.col("src").alias("node"), "label")
+        jump = labels.join(
+            maybe_broadcast(
+                labels.select(
+                    F.col("node").alias("label"), F.col("label").alias("jl")
+                )
+            ),
+            "label",
+        ).select("node", F.col("jl").alias("label"))
+        labels = (
+            labels.unionByName(nbr)
+            .unionByName(jump)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+        )
+        # flatten lineage every OTHER round (each un-materialized
+        # round adds 3 joins of the label table — two rounds of
+        # that is fine, more makes Catalyst re-plan an
+        # exponentially bushy tree), and ALWAYS after the last
+        # (three consumers read the final labels: the convergence
+        # check and both cluster-stat aggs — without the cut they
+        # would each re-execute the whole chain); at 100 TB this
+        # IS the per-iteration checkpoint cadence.
+        if r % 2 == 1 or r == rounds - 1:
+            labels = materialize(labels)
+            if straddling(labels).limit(1).count() == 0:
+                break
     bad = straddling(labels).agg(F.count("*").alias("_nbad"))
     return (
         labels.crossJoin(F.broadcast(bad))

@@ -199,20 +199,11 @@ def a8_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming aggregation → memory sink, availableNow trigger) whose
     final result must equal the batch plan on the same data."""
     from json2hbase_spark.io import load_events_stream
-    from json2hbase_spark.session import scoped_stream_confs
+    from json2hbase_spark.plans.streaming_queries import _run_to_memory
 
     stream = load_events_stream(spark, sf_dir)
     counts = stream.groupBy("event_type").agg(F.count("*").alias("n_events"))
-    with scoped_stream_confs(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("a8_stream_counts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("a8_stream_counts")
+    return _run_to_memory(counts, "a8_stream_counts", "complete")
 
 
 @query(

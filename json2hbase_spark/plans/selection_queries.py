@@ -2081,13 +2081,10 @@ def _power_eigvec(spark: SparkSession, sf_dir: str, refresh: bool = False):
             v_signed = spark.createDataFrame(rows, "dim INT, v BIGINT")
             wmax = spark.createDataFrame([(wm,)], "w_max BIGINT")
             return v_signed, wmax
-    from json2hbase_spark.session import scoped_bounded_chain
-
-    with scoped_bounded_chain(spark):
-        _v_signed, _wmax, vfull = _power_on(_accel_matrix(spark, sf_dir))
-        # ONE collect carries the vector AND w_max (identical on every
-        # row — the window column); max over equal values == any row's
-        data = vfull.collect()
+    _v_signed, _wmax, vfull = _power_on(_accel_matrix(spark, sf_dir))
+    # ONE collect carries the vector AND w_max (identical on every
+    # row — the window column); max over equal values == any row's
+    data = vfull.collect()
     rows = sorted((int(r["dim"]), int(r["v"])) for r in data)
     wm = int(data[0]["w_max"])
     _evict_stale_sessions(_EIG_CACHE, key[0])

@@ -31,22 +31,24 @@ from json2hbase_spark.plans.corpus_queries import (
 from json2hbase_spark.operators.asof import asof_join
 from json2hbase_spark.operators.sessionize import sessionize
 from json2hbase_spark.registry import query
-from json2hbase_spark.session import scoped_stream_confs
+from json2hbase_spark.session import run_stream
 from json2hbase_spark.scratch import scratch_dir
 
 SUM_VALUE = "CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE)"
 
 
-def _run_to_memory(writer_df: DataFrame, name: str, output_mode: str) -> None:
-    q = (
+def _run_to_memory(writer_df: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run ``writer_df`` to completion into the memory sink ``name``
+    and return the sink's table."""
+    run_stream(
+        writer_df.sparkSession,
         writer_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .option("checkpointLocation", scratch_dir(f"ckpt_{name}_"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    q.awaitTermination()
+    return writer_df.sparkSession.table(name)
 
 
 # ---------------------------------------------------------------- c7
@@ -215,9 +217,7 @@ def i4_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.unix_micros("w.start").alias("win_start_us"), "event_type", "n_events")
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(agg, "i4_mem", "append")
-    return spark.table("i4_mem")
+    return _run_to_memory(agg, "i4_mem", "append")
 
 
 @query(
@@ -233,11 +233,8 @@ def i5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deduped stream lands in the sink and is counted in batch."""
     stream = load_events_stream(spark, sf_dir)
     deduped = stream.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
-    with scoped_stream_confs(spark):
-        _run_to_memory(deduped.select("event_id", "event_type"), "i5_mem", "append")
-    return spark.table("i5_mem").groupBy("event_type").agg(
-        F.count("*").alias("n_unique")
-    )
+    sink = _run_to_memory(deduped.select("event_id", "event_type"), "i5_mem", "append")
+    return sink.groupBy("event_type").agg(F.count("*").alias("n_unique"))
 
 
 @query(
@@ -275,12 +272,10 @@ def i6_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # state-partition fan-out + RocksDB provider scoping: see
-    # session.scoped_stream_confs (measured 3.6s at 32 partitions ->
-    # 1.3s at 4 at sf0.01 on local[4]; cluster posture documented there)
-    with scoped_stream_confs(spark):
-        _run_to_memory(stateful, "i6_mem", "update")
-    return spark.table("i6_mem")
+    # state partitions and the RocksDB provider are set at start() by
+    # session.run_stream (3.6 s at 32 partitions, 1.3 s at 4, sf0.01,
+    # local[4]; cluster posture documented there)
+    return _run_to_memory(stateful, "i6_mem", "update")
 
 
 @query(
@@ -311,9 +306,7 @@ def i7_late_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(agg, "i7_mem", "update")
-    return spark.table("i7_mem")
+    return _run_to_memory(agg, "i7_mem", "update")
 
 
 # ---------------------------------------------------------------- i8
@@ -449,12 +442,9 @@ def i9_tws_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    # RocksDB provider + state-partition cap scoped via
-    # session.scoped_stream_confs (provider applies on BOTH paths now —
-    # applyInPandasWithState runs on RocksDB too when available)
-    with scoped_stream_confs(spark):
-        _run_to_memory(out, "i9_mem", "update")
-    return spark.table("i9_mem")
+    # session.run_stream starts either path with the state-partition
+    # cap and, when available, the RocksDB provider
+    return _run_to_memory(out, "i9_mem", "update")
 
 
 # ---------------------------------------------------------------- i10
@@ -520,9 +510,7 @@ def i10_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("pts").alias("pts_us"),
         F.unix_micros("cts").alias("cts_us"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(joined, "i10_mem", "append")
-    return spark.table("i10_mem")
+    return _run_to_memory(joined, "i10_mem", "append")
 
 
 # ---------------------------------------------------------------- i11
@@ -583,9 +571,7 @@ def i11_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(agg, "i11_mem", "complete")
-    return spark.table("i11_mem")
+    return _run_to_memory(agg, "i11_mem", "complete")
 
 
 # ---------------------------------------------------------------- i12
@@ -616,9 +602,7 @@ def i12_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.expr(SUM_VALUE).alias("sum_value"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(agg, "i12_mem", "complete")
-    return spark.table("i12_mem")
+    return _run_to_memory(agg, "i12_mem", "complete")
 
 
 # ---------------------------------------------------------------- i13
@@ -655,17 +639,15 @@ def i13_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(ckpt, ignore_errors=True)
 
     stream = load_events_stream(spark, sf_dir)
-    with scoped_stream_confs(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("event_type")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        spark,
+        stream.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("event_type")
+        .outputMode("append")
+        .trigger(availableNow=True),
+    )
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -747,14 +729,12 @@ def i14_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    with scoped_stream_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", scratch_dir("ckpt_i14_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        spark,
+        stream.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", scratch_dir("ckpt_i14_"))
+        .trigger(availableNow=True),
+    )
 
     final_dir = sorted(_glob.glob(os.path.join(state_root, "v*")))[-1]
     final = spark.read.parquet(final_dir)
@@ -888,22 +868,19 @@ def i17_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate over the same data — checked via the count field
     (exact int; the state's float sum stays internal)."""
     from json2hbase_spark.io import load_events_stream
-    from json2hbase_spark.session import scoped_stream_confs
 
     stream = load_events_stream(spark, sf_dir)
     counts = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv")
     )
     ckpt = scratch_dir("j2h_i17_ckpt_")
-    with scoped_stream_confs(spark):
-        q = (
-            counts.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        spark,
+        counts.writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True),
+    )
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -964,24 +941,22 @@ def i18_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(TickSource)
     ckpt = scratch_dir("j2h_i18_ckpt_")
     name = f"i18_mem_{ckpt.rsplit('_', 1)[-1]}"
-    with scoped_stream_confs(spark):
-        # one run per available offset: each start resumes from the
-        # checkpointed offset (exactly-once), the last drains to empty
-        for _ in range(2):
-            stream = spark.readStream.format("j2h_py_ticks").load()
-            agg = stream.groupBy(F.col("batch")).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("v").cast("bigint").alias("sum_v"),
-            )
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    # one run per available offset: each start resumes from the
+    # checkpointed offset (exactly-once), the last drains to empty
+    for _ in range(2):
+        stream = spark.readStream.format("j2h_py_ticks").load()
+        agg = stream.groupBy(F.col("batch")).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("v").cast("bigint").alias("sum_v"),
+        )
+        run_stream(
+            spark,
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True),
+        )
     return spark.table(name)
 
 
@@ -1052,9 +1027,7 @@ def i19_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .select(F.unix_micros("w.start").alias("win_start_us"), "n_pairs")
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(agg, "i19_mem", "append")
-    return spark.table("i19_mem")
+    return _run_to_memory(agg, "i19_mem", "append")
 
 
 @query(
@@ -1130,9 +1103,7 @@ def i20_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_id",
         F.unix_micros("pts").alias("pts_us"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(joined, "i20_mem", "append")
-    return spark.table("i20_mem")
+    return _run_to_memory(joined, "i20_mem", "append")
 
 
 @query(
@@ -1172,14 +1143,9 @@ def i21_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
     arrived = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_arrived"))
-    with scoped_stream_confs(spark):
-        _run_to_memory(deduped, "i21_mem", "complete")
-        _run_to_memory(arrived, "i21_arrived_mem", "complete")
-    return (
-        spark.table("i21_mem")
-        .join(spark.table("i21_arrived_mem"), "event_type")
-        .select("event_type", "n_unique", "n_arrived")
-    )
+    uniq = _run_to_memory(deduped, "i21_mem", "complete")
+    seen = _run_to_memory(arrived, "i21_arrived_mem", "complete")
+    return uniq.join(seen, "event_type").select("event_type", "n_unique", "n_arrived")
 
 
 @query(
@@ -1226,9 +1192,7 @@ def i23_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("mnt"), "event_type", "n_events", "sv")
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(fine, "i23_mem", "append")
-    minutes = spark.table("i23_mem")
+    minutes = _run_to_memory(fine, "i23_mem", "append")
     return (
         minutes.groupBy("event_type", F.date_trunc("hour", F.col("mnt")).alias("h"))
         .agg(
@@ -1308,9 +1272,7 @@ def i24_stream_model_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("keep").cast("bigint").alias("n_kept"),
         )
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i24_mem", "complete")
-    return spark.table("i24_mem")
+    return _run_to_memory(tally, "i24_mem", "complete")
 
 
 # ---------------------------------------------------------------- i25
@@ -1340,9 +1302,7 @@ def i25_stream_corpus_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table_stream(spark, sf_dir, "documents")
     digest = corpus_digest_agg(docs)
-    with scoped_stream_confs(spark):
-        _run_to_memory(digest, "i25_mem", "complete")
-    return spark.table("i25_mem")
+    return _run_to_memory(digest, "i25_mem", "complete")
 
 
 @query(
@@ -1408,10 +1368,9 @@ def i26_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_unique_chunks")
     )
     arrived = chunks.agg(F.count(F.lit(1)).alias("n_arrived_chunks"))
-    with scoped_stream_confs(spark):
-        _run_to_memory(deduped, "i26_mem", "complete")
-        _run_to_memory(arrived, "i26_arrived_mem", "complete")
-    return spark.table("i26_mem").crossJoin(spark.table("i26_arrived_mem")).select(
+    uniq = _run_to_memory(deduped, "i26_mem", "complete")
+    seen = _run_to_memory(arrived, "i26_arrived_mem", "complete")
+    return uniq.crossJoin(seen).select(
         F.col("n_unique_chunks").cast("bigint").alias("n_unique_chunks"),
         F.col("n_arrived_chunks").cast("bigint").alias("n_arrived_chunks"),
     )
@@ -1588,14 +1547,12 @@ def i27_stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
     )
-    with scoped_stream_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", scratch_dir("ckpt_i27_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        spark,
+        stream.writeStream.foreachBatch(merge)
+        .option("checkpointLocation", scratch_dir("ckpt_i27_"))
+        .trigger(availableNow=True),
+    )
 
     final_dir = sorted(_glob.glob(os.path.join(state_root, "v*")))[-1]
     return spark.read.parquet(final_dir).select(
@@ -1702,34 +1659,18 @@ def i28_stream_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("doc_id")
     )
     all_tally = sw.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    with scoped_stream_confs(spark):
-        _run_to_memory(all_tally, "i28_all_mem", "complete")
-        q = (
-            q_docs.writeStream.format("memory")
-            .queryName("i28_q_mem")
-            .outputMode("append")
-            .option("checkpointLocation", scratch_dir("ckpt_i28_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    qd = spark.table("i28_q_mem")
+    all_docs = _run_to_memory(all_tally, "i28_all_mem", "complete")
+    qd = _run_to_memory(q_docs, "i28_q_mem", "append")
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= BENCH_CUT)
     ql = (
         docs.join(qd, "doc_id", "left_semi")
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_quarantined"))
     )
-    return (
-        spark.table("i28_all_mem")
-        .join(ql, "lang", "left")
-        .select(
-            "lang",
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            F.coalesce("n_quarantined", F.lit(0)).cast("bigint").alias(
-                "n_quarantined"
-            ),
-        )
+    return all_docs.join(ql, "lang", "left").select(
+        "lang",
+        F.col("n_docs").cast("bigint").alias("n_docs"),
+        F.coalesce("n_quarantined", F.lit(0)).cast("bigint").alias("n_quarantined"),
     )
 
 
@@ -1785,9 +1726,7 @@ def i29_stream_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("tokens").alias("n_tokens"),
         )
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i29_mem", "complete")
-    s = spark.table("i29_mem")
+    s = _run_to_memory(tally, "i29_mem", "complete")
     tot = s.agg(F.sum("n_tokens").alias("total"))
     return (
         s.crossJoin(F.broadcast(tot))
@@ -1863,9 +1802,7 @@ def i30_stream_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tok").alias("n_tokens"),
         F.sum(F.col("quality").cast("decimal(18,4)")).alias("q_sum"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i30_mem", "complete")
-    s = spark.table("i30_mem")
+    s = _run_to_memory(tally, "i30_mem", "complete")
     tot = s.filter(F.col("thr") == -1.0).select(
         F.col("n_docs").alias("tot_docs"), F.col("n_tokens").alias("tot_tokens")
     )
@@ -1937,9 +1874,7 @@ def i31_stream_packing_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tokens").alias("total_tokens"),
         F.sum(per_doc_seqs).alias("boundary_sequences"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i31_mem", "complete")
-    g = spark.table("i31_mem")
+    g = _run_to_memory(tally, "i31_mem", "complete")
     boundary_waste = (
         F.col("boundary_sequences") * SEQ_LEN - F.col("total_tokens")
     ).cast("bigint")
@@ -2034,9 +1969,7 @@ def i32_stream_coreset_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("d").alias("max_sq_dist"),
         F.sum("d").alias("sum_sq_dist"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i32_mem", "complete")
-    g = spark.table("i32_mem")
+    g = _run_to_memory(tally, "i32_mem", "complete")
     return g.select(
         "center_order",
         F.col("n_assigned").cast("bigint").alias("n_assigned"),
@@ -2306,14 +2239,12 @@ def i33_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             arr_sh.unpersist()
 
-    with scoped_stream_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(both_sinks)
-            .option("checkpointLocation", scratch_dir("ckpt_i33_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        spark,
+        stream.writeStream.foreachBatch(both_sinks)
+        .option("checkpointLocation", scratch_dir("ckpt_i33_"))
+        .trigger(availableNow=True),
+    )
     qd = spark.read.parquet(hits_dir)
     odd_docs = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "source")
     ql = (
@@ -2431,9 +2362,7 @@ def i34_stream_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_assigned"),
         F.sum("qd").alias("sum_qdist"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i34_mem", "complete")
-    g = spark.table("i34_mem")
+    g = _run_to_memory(tally, "i34_mem", "complete")
     return g.select(
         F.col("sub").cast("int").alias("sub"),
         F.col("cluster").cast("int").alias("cluster"),
@@ -2522,9 +2451,7 @@ def i35_stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum(F.when(F.col("_inv").isNull(), 1).otherwise(0)).alias("n_oov"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i35_mem", "complete")
-    g = spark.table("i35_mem")
+    g = _run_to_memory(tally, "i35_mem", "complete")
     return g.select(
         "source",
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
@@ -2659,9 +2586,7 @@ def i36_stream_energy_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_vecs"),
         F.sum("qe").alias("sum_qe"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i36_mem", "complete")
-    g = spark.table("i36_mem")
+    g = _run_to_memory(tally, "i36_mem", "complete")
     return g.select(
         "decile",
         F.col("n_vecs").cast("bigint").alias("n_vecs"),
@@ -2720,9 +2645,7 @@ def i37_stream_cov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("qi").alias("sx"),
         F.sum("qj").alias("sy"),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(terms, "i37_mem", "complete")
-    g = spark.table("i37_mem")
+    g = _run_to_memory(terms, "i37_mem", "complete")
     cov_num = (
         F.col("n").cast("bigint") * F.col("sxy").cast("bigint")
         - F.col("sx").cast("bigint") * F.col("sy").cast("bigint")
@@ -2781,9 +2704,7 @@ def i38_stream_unimax_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang")
         .agg(F.sum("nt").alias("tokens"))
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i38_mem", "complete")
-    lt = spark.table("i38_mem").select(
+    lt = _run_to_memory(tally, "i38_mem", "complete").select(
         "lang", F.col("tokens").cast("bigint").alias("tokens")
     )
     return _unimax_from_tokens(lt)
@@ -2879,9 +2800,7 @@ def i39_stream_c4_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tokens_kept"
         ),
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i39_mem", "complete")
-    g = spark.table("i39_mem")
+    g = _run_to_memory(tally, "i39_mem", "complete")
     return g.select(
         "source",
         *[
@@ -3019,14 +2938,12 @@ def i40_stream_exsub_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch.unpersist()
 
-    with scoped_stream_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(both_sinks)
-            .option("checkpointLocation", scratch_dir("ckpt_i40_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        spark,
+        stream.writeStream.foreachBatch(both_sinks)
+        .option("checkpointLocation", scratch_dir("ckpt_i40_"))
+        .trigger(availableNow=True),
+    )
     hd = spark.read.parquet(hits_dir)
     perdoc = (
         hd.select(
@@ -3109,9 +3026,7 @@ def i41_stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "lang", "bucket")
         .agg(F.count(F.lit(1)).alias("sz"))
     )
-    with scoped_stream_confs(spark):
-        _run_to_memory(tally, "i41_mem", "complete")
-    qi = spark.table("i41_mem")
+    qi = _run_to_memory(tally, "i41_mem", "complete")
     return qi.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_groups"),
         F.min("sz").cast("bigint").alias("k_anonymity"),

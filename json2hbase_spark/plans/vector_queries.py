@@ -290,25 +290,21 @@ def _pca_components(spark: SparkSession, sf_dir: str, refresh: bool = False):
     key = _eig_cache_key(spark, sf_dir)
     stored = None if refresh else _PCA_COMP_CACHE.get(key)
     if stored is None:
-        from json2hbase_spark.session import scoped_bounded_chain
-
-        with scoped_bounded_chain(spark):
-            a = _accel_matrix(spark, sf_dir)
-            stored = []
-            for c in range(PCA_R):
-                _v_signed, _wmax, vfull = _power_on(a)
-                data = vfull.collect()  # one action: vector + w_max
-                rows = sorted((int(r["dim"]), int(r["v"])) for r in data)
-                wm = int(data[0]["w_max"])
-                stored.append((rows, wm))
-                if c < PCA_R - 1:
-                    # deflate consumes the CHECKPOINT-backed vector
-                    # (the local-relation variant measured ~1.2 s
-                    # SLOWER per j127 run in an interleaved A/B — the
-                    # LocalTableScan broadcast sides lose exchange
-                    # reuse in the deflation joins; keep the
-                    # materialized table)
-                    a = _deflate(a, _v_signed)
+        a = _accel_matrix(spark, sf_dir)
+        stored = []
+        for c in range(PCA_R):
+            _v_signed, _wmax, vfull = _power_on(a)
+            data = vfull.collect()  # one action: vector + w_max
+            rows = sorted((int(r["dim"]), int(r["v"])) for r in data)
+            wm = int(data[0]["w_max"])
+            stored.append((rows, wm))
+            if c < PCA_R - 1:
+                # deflate consumes the CHECKPOINT-backed vector (the
+                # local-relation variant measured ~1.2 s SLOWER per
+                # j127 run in an interleaved A/B — the LocalTableScan
+                # broadcast sides lose exchange reuse in the deflation
+                # joins; keep the materialized table)
+                a = _deflate(a, _v_signed)
         from json2hbase_spark.plans.selection_queries import (
             _EIG_CACHE,
             _evict_stale_sessions,
@@ -1838,16 +1834,6 @@ def j145_pca_orthobasis(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GS_BASIS_CACHE: dict[tuple, list[list[tuple[int, int]]]] = {}
 
 
-def _emb_content_marker(sf_dir: str) -> tuple[int, int]:
-    import os as _os
-
-    try:
-        st = _os.stat(_os.path.join(sf_dir, "embeddings.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (0, 0)
-
-
 def _gs_basis(spark: SparkSession, sf_dir: str, refresh: bool = False) -> list:
     """j145's Gram-Schmidt chain: j127's deflated power-iteration
     components orthogonalized with the division-free multiply-through
@@ -1864,14 +1850,12 @@ def _gs_basis(spark: SparkSession, sf_dir: str, refresh: bool = False) -> list:
     marginal per-vector fold. A consumer in a fresh session computes
     once and memoizes (documented first-touch, the codegen-warm
     category)."""
-    import os as _os
-
-    real_dir = _os.path.realpath(sf_dir)
-    key = (
-        spark.sparkContext.applicationId,
-        real_dir,
-        _emb_content_marker(real_dir),
+    from json2hbase_spark.plans.selection_queries import (
+        _eig_cache_key,
+        _evict_stale_sessions,
     )
+
+    key = _eig_cache_key(spark, sf_dir)
     if not refresh:
         cached = _GS_BASIS_CACHE.get(key)
         if cached is not None:
@@ -1880,8 +1864,6 @@ def _gs_basis(spark: SparkSession, sf_dir: str, refresh: bool = False) -> list:
                 for rows in cached
             ]
     us = _gs_basis_compute(spark, sf_dir)
-    from json2hbase_spark.plans.selection_queries import _evict_stale_sessions
-
     _evict_stale_sessions(_GS_BASIS_CACHE, key[0])
     _GS_BASIS_CACHE[key] = [
         sorted((int(r["dim"]), int(r["u"])) for r in t.collect()) for t in us
@@ -1897,7 +1879,6 @@ def _gs_basis_compute(spark: SparkSession, sf_dir: str) -> list:
     # (j127 is their definer; first touch in a fresh session computes
     # and stores) — j145 pays only the Gram-Schmidt chain below.
     vs = [v for v, _ in _pca_components(spark, sf_dir)]
-    from json2hbase_spark.session import scoped_bounded_chain
 
     # Round 13 (the _power_on chaining lesson): each projection step's
     # three scalars — nn = uₖᵀuₖ, vu = tᵀuₖ, and the rescale bound —
@@ -1911,33 +1892,32 @@ def _gs_basis_compute(spark: SparkSession, sf_dir: str) -> list:
     # components, j145's quality columns and the _gs_basis memo all
     # re-consume uₖ). Bit-identical integer arithmetic throughout.
     us = [vs[0].select("dim", F.col("v").alias("u"))]
-    with scoped_bounded_chain(spark):
-        for c in range(1, PCA_R):
-            t = vs[c].select("dim", F.col("v").alias("u"))
-            for k in range(c):
-                uk = us[k].select("dim", F.col("u").alias("uk"))
-                # 64-row sides: broadcast explicitly — AQE cannot size
-                # localCheckpoint-backed scans and would plan SMJ
-                proj = t.join(F.broadcast(uk), "dim").select(
-                    "dim",
-                    (
-                        F.col("u") * F.expr("sum(uk * uk) OVER ()")
-                        - F.expr("sum(u * uk) OVER ()") * F.col("uk")
-                    ).alias("u"),
-                )
-                t = proj.select(
-                    "dim",
-                    F.floor(
-                        F.col("u").cast("double")
-                        / F.greatest(
-                            F.expr(f"max(abs(u)) OVER () DIV {_PI_S}"),
-                            F.lit(1).cast("long"),
-                        )
+    for c in range(1, PCA_R):
+        t = vs[c].select("dim", F.col("v").alias("u"))
+        for k in range(c):
+            uk = us[k].select("dim", F.col("u").alias("uk"))
+            # 64-row sides: broadcast explicitly — AQE cannot size
+            # localCheckpoint-backed scans and would plan SMJ
+            proj = t.join(F.broadcast(uk), "dim").select(
+                "dim",
+                (
+                    F.col("u") * F.expr("sum(uk * uk) OVER ()")
+                    - F.expr("sum(u * uk) OVER ()") * F.col("uk")
+                ).alias("u"),
+            )
+            t = proj.select(
+                "dim",
+                F.floor(
+                    F.col("u").cast("double")
+                    / F.greatest(
+                        F.expr(f"max(abs(u)) OVER () DIV {_PI_S}"),
+                        F.lit(1).cast("long"),
                     )
-                    .cast("bigint")
-                    .alias("u"),
                 )
-            us.append(materialize(t))
+                .cast("bigint")
+                .alias("u"),
+            )
+        us.append(materialize(t))
     return us
 
 

@@ -40,9 +40,9 @@ from __future__ import annotations
 
 import os
 import threading
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -94,7 +94,7 @@ def get_spark(app_name: str = "json2hbase_spark", master: str | None = None) -> 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-_STREAM_CONF_LOCK = threading.RLock()
+_STREAM_START_LOCK = threading.Lock()
 _rocksdb_available: bool | None = None
 
 
@@ -111,78 +111,54 @@ def rocksdb_available(spark: SparkSession) -> bool:
     return _rocksdb_available
 
 
-@contextmanager
-def scoped_bounded_chain(spark: SparkSession, partitions: str | None = None):
-    """Conf scope for DIMENSION-BOUNDED iteration chains (round 14,
-    VERDICT r13 #4): the power-iteration / deflation / Gram-Schmidt
-    chains operate on ≤ d² = 4096-row tables at ANY corpus size (the
-    one corpus-sized pass — the covariance aggregation — only has its
-    REDUCE side resized here, and that side is d²-row bounded too; the
-    map side scales with the input scan regardless of this conf). The
-    right shuffle-partition count for those stages is set by the
-    DOMAIN, not the cluster: 32+ partitions of a 64-row table is pure
-    task fan-out, measured ~15% of j127's runtime locally (and every
-    localCheckpoint in the chain inherits the count for each later
-    scan). Parameterised via SPARK_GRAFT_BOUNDED_PARTITIONS (default
-    8) — a cluster tunes it independently of the session default.
-    Serialised behind the same lock as every conf scope (session
-    confs are global state). Only the chain's EAGER actions plan
-    inside the scope; plans built here but executed later pick up the
-    session default at action time."""
-    parts = partitions or os.environ.get("SPARK_GRAFT_BOUNDED_PARTITIONS", "8")
-    with _STREAM_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+def run_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` under the engine's streaming confs, wait for it
+    to terminate and return the query.
 
+    - ``spark.sql.shuffle.partitions`` is ``SPARK_GRAFT_STREAM_PARTITIONS``
+      (default 4). A new checkpoint pins its state-partition count to
+      this value, and each partition forks an Arrow worker and a state
+      store, which dominates a local micro-batch (i6 at sf0.01 on
+      ``local[4]``, median of 3 warm runs: 3.6 s at 32 partitions,
+      1.3 s at 4). On a cluster set it to the executor-core count.
+    - The RocksDB state store (SURVEY §3.5's at-scale choice: state
+      spills to local disk instead of executor heap, incremental
+      checkpoints) whenever the provider class is present; otherwise
+      the session's provider is left as it is.
 
-@contextmanager
-def scoped_stream_confs(spark: SparkSession, partitions: str | None = None):
-    """Conf scope for one streaming run (restored on exit).
-
-    - ``spark.sql.shuffle.partitions`` → 4 locally: the state-partition
-      count is pinned at checkpoint creation and each partition forks an
-      Arrow worker / state store, which dominates a local micro-batch
-      (i6 at sf0.01 on ``local[4]``, median of 3 warm runs: 3.6 s at 32
-      partitions → 1.3 s at 4; 6.9 s → 1.9 s under the stock daemon,
-      which also flushed import caches in each task). On a real
-      cluster pass ``partitions=None`` and set the session default to
-      the executor-core count instead — the scope still guarantees the
-      caller's conf is untouched.
-    - RocksDB state store (SURVEY §3.5's at-scale choice: state spills
-      to local disk instead of executor heap, incremental checkpoints)
-      whenever the provider class is present; falls back silently to the
-      default HDFS-backed in-memory provider when not.
+    A stream reads both confs once, when ``start()`` clones the session
+    for its execution thread; its checkpoint offsets record them. So
+    the confs are set only around ``start()`` and then restored, an
+    unset conf to unset. Session confs are shared by every thread, so
+    the start is serialized behind a lock, and the run is not: the
+    caller waits in ``awaitTermination()`` with the lock released. A
+    query another thread plans during a ``start()`` still sees these
+    confs; its results do not depend on them. The query runs on the
+    caller's session, so listeners registered there
+    see its progress events (a ``spark.newSession()`` child would keep
+    its confs private, but its queries post no events to them).
     """
-    # Session confs are GLOBAL mutable state: two scopes interleaving
-    # from different driver threads (e.g. the guide-§2.6 overlapping
-    # pattern, or the round-14 threaded plan-fingerprint sweep) would
-    # capture each other's in-scope values as "prev" and leak them on
-    # exit (observed: RocksDB provider left set session-wide). The
-    # re-entrant lock serializes whole scopes — semantically required,
-    # not just hygiene.
-    with _STREAM_CONF_LOCK:
-        parts = partitions or os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_prov = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    confs = {
+        "spark.sql.shuffle.partitions": os.environ.get(
+            "SPARK_GRAFT_STREAM_PARTITIONS", "4"
         )
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        if rocksdb_available(spark):
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-            )
+    }
+    if rocksdb_available(spark):
+        confs["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
+    with _STREAM_START_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         try:
-            yield
+            q = writer.start()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_prov
-            )
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    q.awaitTermination()
+    return q
 
 
 def apply_engine_confs(spark: SparkSession) -> SparkSession:

@@ -303,34 +303,132 @@ def test_write_hbase_foreach_retries_transient_failure(spark):
 
 # ---------------------------------------------------------------- stream confs
 
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
-def test_scoped_stream_confs_sets_and_restores(spark):
-    from json2hbase_spark.session import (
-        ROCKSDB_PROVIDER,
-        rocksdb_available,
-        scoped_stream_confs,
-    )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_prov = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", "unset"
+def _run_counts(spark, tmp_path, name: str):
+    """``run_stream`` a stateful count over a small parquet source into
+    the memory sink ``name``; returns the first offset log's confs."""
+    import json
+
+    from json2hbase_spark.session import run_stream
+
+    src = tmp_path / "src"
+    if not src.exists():
+        keys = spark.range(20).selectExpr("CAST(id % 3 AS INT) AS k")
+        keys.write.parquet(str(src))
+    ckpt = tmp_path / f"ckpt_{name}"
+    run_stream(
+        spark,
+        spark.readStream.schema("k INT")
+        .parquet(str(src))
+        .groupBy("k")
+        .count()
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True),
     )
-    with scoped_stream_confs(spark, partitions="6"):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "6"
-        if rocksdb_available(spark):
-            assert (
-                spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-                == ROCKSDB_PROVIDER
-            )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
-    # the scope restores the pre-existing provider; an unset conf comes
-    # back as the explicit engine default (HDFS-backed), never RocksDB
-    restored = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", "unset"
+    assert spark.table(name).count() == 3
+    return json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])["conf"]
+
+
+def _stream_confs(spark) -> dict:
+    keys = ("spark.sql.shuffle.partitions", PROVIDER_CONF)
+    return {k: spark.conf.get(k, None) for k in keys}
+
+
+def test_run_stream_restores_session_confs(spark, tmp_path, monkeypatch):
+    """The stream runs with 4 state partitions and, when the class is
+    present, RocksDB (its checkpoint offsets record both); afterwards
+    the session's confs are what they were, and an unset provider
+    stays unset rather than coming back as an explicit setting."""
+    from json2hbase_spark.session import ROCKSDB_PROVIDER, rocksdb_available
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
+    prev = spark.conf.get(PROVIDER_CONF, None)
+    hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    try:
+        for i, prov in enumerate([None, hdfs]):
+            if prov is None:
+                spark.conf.unset(PROVIDER_CONF)
+            else:
+                spark.conf.set(PROVIDER_CONF, prov)
+            before = _stream_confs(spark)
+            conf = _run_counts(spark, tmp_path, f"rs_restore{i}")
+            assert conf["spark.sql.shuffle.partitions"] == "4"
+            if rocksdb_available(spark):
+                assert conf[PROVIDER_CONF] == ROCKSDB_PROVIDER
+            assert _stream_confs(spark) == before
+    finally:
+        if prev is None:
+            spark.conf.unset(PROVIDER_CONF)
+        else:
+            spark.conf.set(PROVIDER_CONF, prev)
+
+
+def test_run_stream_serializes_start_only(spark, tmp_path):
+    """A stream held inside ``foreachBatch`` on one thread does not stop
+    another thread's ``run_stream`` from completing: the lock covers
+    ``start()``, not the run."""
+    import threading
+
+    from json2hbase_spark.session import run_stream
+
+    _run_counts(spark, tmp_path, "rs_src")  # writes the source
+    entered, release = threading.Event(), threading.Event()
+
+    def hold(_batch, _bid):
+        entered.set()
+        release.wait(120)
+
+    writer = (
+        spark.readStream.schema("k INT")
+        .parquet(str(tmp_path / "src"))
+        .writeStream.foreachBatch(hold)
+        .option("checkpointLocation", str(tmp_path / "ckpt_held"))
+        .trigger(availableNow=True)
     )
-    assert restored != ROCKSDB_PROVIDER
-    if prev_prov != "unset":
-        assert restored == prev_prov
+    held = threading.Thread(target=run_stream, args=(spark, writer))
+    held.start()
+    try:
+        assert entered.wait(120), "held stream never reached foreachBatch"
+        other = threading.Thread(target=_run_counts, args=(spark, tmp_path, "rs_other"))
+        other.start()
+        other.join(120)
+        assert not other.is_alive(), "run_stream waited on the held stream"
+        assert held.is_alive()
+        assert spark.table("rs_other").count() == 3
+    finally:
+        release.set()
+        held.join(120)
+    assert not held.is_alive()
+
+
+def test_run_stream_concurrent_starts_keep_session_confs(spark, tmp_path):
+    """Six threads (more than the four cores) start streams at once
+    with a short switch interval, and the session's confs end as they
+    began: a start that captured another start's values as its
+    "before" would leak them."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    _run_counts(spark, tmp_path, "rs_src")  # writes the source
+    before = _stream_confs(spark)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(6) as pool:
+            futures = [
+                pool.submit(_run_counts, spark, tmp_path, f"rs_many{i}")
+                for i in range(6)
+            ]
+            for f in futures:
+                f.result(timeout=180)
+    finally:
+        sys.setswitchinterval(interval)
+    assert _stream_confs(spark) == before
 
 
 # ---------------------------------------------------------------- op invariants

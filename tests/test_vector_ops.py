@@ -30,6 +30,15 @@ EMB_SCHEMA = StructType(
 
 SF = "/root/testdata/sf0.01"
 
+# sf0.001 runs in the default gate; the sf0.01 run is the heavy one
+SCALES = pytest.mark.parametrize(
+    "sf",
+    [
+        pytest.param("/root/testdata/sf0.001", id="sf0.001"),
+        pytest.param(SF, id="sf0.01", marks=pytest.mark.slow),
+    ],
+)
+
 
 def _emb_dir(spark, tmp_path, name, rows):
     df = spark.createDataFrame(rows, EMB_SCHEMA)
@@ -38,18 +47,18 @@ def _emb_dir(spark, tmp_path, name, rows):
     return d
 
 
-@pytest.mark.slow  # round-14 test split: heavy planted-fixture run; in the full-suite invocation
-def test_j127_first_component_is_j121_and_subspace_is_usable(spark):
+@SCALES
+def test_j127_first_component_is_j121_and_subspace_is_usable(spark, sf):
     from json2hbase_spark import registry
 
     registry.load_all_query_modules()
-    sub = registry.QUERIES["j127_pca_topr"](spark, SF).collect()
+    sub = registry.QUERIES["j127_pca_topr"](spark, sf).collect()
     assert len(sub) == 4 * 64
     by = {}
     for r in sub:
         by.setdefault(r.component, {})[r.dim] = r.v
     # component 0 IS j121's eigvec (same machinery, zero deflations)
-    top = {r.dim: r.v for r in registry.QUERIES["j121_embed_top_eigvec"](spark, SF).collect()}
+    top = {r.dim: r.v for r in registry.QUERIES["j121_embed_top_eigvec"](spark, sf).collect()}
     assert by[0] == top
     # deflation produced genuinely distinct directions: cross-cosines
     # bounded (the fixture's flat spectrum leaves ~0.16 residual —
@@ -271,16 +280,18 @@ def test_j144_incremental_merge_equals_oneshot_and_handles_empty_delta(
     assert all(r.n_base == 20 and r.n_delta == 0 for r in out2)
 
 
-@pytest.mark.slow  # round-14 test split: heavy planted-fixture run; in the full-suite invocation
-def test_j145_orthobasis_cross_cosines_are_rounding_only(spark):
+@SCALES
+def test_j145_orthobasis_cross_cosines_are_rounding_only(spark, sf):
     """The GS output's cross_q (max floor(cos²·1e6) vs earlier
     components) must be rounding residue (< 100, i.e. |cos| < 0.01)
     — j127's raw deflated subspace reads up to ~26,000 on the flat
-    fixture spectrum. Component 0 is j127's component 0 unchanged."""
+    sf0.01 spectrum, and its largest |cos| is 0.062 at sf0.001, so the
+    bound tells the two apart at both scales. Component 0 is j127's
+    component 0 unchanged."""
     from json2hbase_spark import registry
 
     registry.load_all_query_modules()
-    out = registry.QUERIES["j145_pca_orthobasis"](spark, SF).collect()
+    out = registry.QUERIES["j145_pca_orthobasis"](spark, sf).collect()
     assert len(out) == 256
     by_comp: dict[int, list] = {}
     for r in out:
@@ -295,27 +306,32 @@ def test_j145_orthobasis_cross_cosines_are_rounding_only(spark):
         else:
             assert 0 <= q < 100, (c, q)
     # component 0 passes through GS untouched = j127's component 0
-    j127 = {
-        (r.dim): r.v
-        for r in registry.QUERIES["j127_pca_topr"](spark, SF).collect()
-        if r.component == 0
-    }
+    raw: dict[int, dict[int, int]] = {}
+    for r in registry.QUERIES["j127_pca_topr"](spark, sf).collect():
+        raw.setdefault(r.component, {})[r.dim] = r.v
     for r in by_comp[0]:
-        assert r.u == j127[r.dim]
-    # exact double-check of one pairwise cosine in python
+        assert r.u == raw[0][r.dim]
+    # exact double-check of every pairwise cosine in python
     import math
 
-    vecs = {
-        c: [r.u for r in sorted(rows, key=lambda x: x.dim)]
-        for c, rows in by_comp.items()
-    }
-    for c in range(1, 4):
-        for k in range(c):
-            dot = sum(a * b for a, b in zip(vecs[c], vecs[k]))
-            cos = dot / math.sqrt(
-                sum(a * a for a in vecs[c]) * sum(b * b for b in vecs[k])
-            )
-            assert abs(cos) < 0.01, (c, k, cos)
+    def max_cross_cos(vecs: dict[int, list[int]]) -> float:
+        worst = 0.0
+        for c in range(1, 4):
+            for k in range(c):
+                dot = sum(a * b for a, b in zip(vecs[c], vecs[k]))
+                norm = math.sqrt(
+                    sum(a * a for a in vecs[c]) * sum(b * b for b in vecs[k])
+                )
+                worst = max(worst, abs(dot / norm))
+        return worst
+
+    gs = max_cross_cos(
+        {c: [r.u for r in sorted(rows, key=lambda x: x.dim)] for c, rows in by_comp.items()}
+    )
+    assert gs < 0.01, gs
+    # the bound tells GS output from j127's raw components at this scale
+    ungs = max_cross_cos({c: [d[i] for i in sorted(d)] for c, d in raw.items()})
+    assert ungs > 0.01, ungs
 
 
 def test_i37_stream_tally_equals_batch_covariance(spark):
@@ -386,20 +402,12 @@ def test_gs_basis_memo_bit_equals_recompute(spark):
         sorted((r.dim, r.u) for r in t.collect()) for t in _gs_basis(spark, SF)
     ]
     assert memo == fresh
-    import os
+    # the memo shares the eigvec memos' key, which carries the
+    # fixture content marker (ADVICE r12 #3: a rewritten fixture at
+    # the same path must not share a stale basis)
+    from json2hbase_spark.plans.selection_queries import _eig_cache_key
 
-    # the memo key carries the fixture content marker since ADVICE
-    # r12 #3 (a rewritten fixture at the same path must not share a
-    # stale basis)
-    from json2hbase_spark.plans.vector_queries import _emb_content_marker
-
-    real = os.path.realpath(SF)
-    key = (
-        spark.sparkContext.applicationId,
-        real,
-        _emb_content_marker(real),
-    )
-    assert _GS_BASIS_CACHE[key] == fresh
+    assert _GS_BASIS_CACHE[_eig_cache_key(spark, SF)] == fresh
 
 
 def test_j157_matryoshka_energy_planted(spark, tmp_path):

@@ -124,9 +124,15 @@ def compute_all() -> dict[str, dict[str, int]]:
             out[name] = fp
     cleanup_materialized()
     snap = json.loads(SNAPSHOT.read_text()) if SNAPSHOT.exists() else {}
-    for name in [n for n in names if out[n] != snap.get(n)]:
+    replanned = [n for n in names if out[n] != snap.get(n)]
+    for name in replanned:
         out[name] = one(name)
         cleanup_materialized()
+    print(
+        f"# {len(replanned)} queries re-planned sequentially: "
+        + (", ".join(replanned) or "none"),
+        file=sys.stderr,
+    )
     return out
 
 
