@@ -509,8 +509,6 @@ def a16_bucketed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wh = scratch_dir("j2h_a16_wh_")
     tag = uuid.uuid4().hex[:8]
-    prev_bucketing = spark.conf.get("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     orders = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
     cust = load(spark, sf_dir, "customer")
     o_tbl, c_tbl = f"a16_orders_{tag}", f"a16_cust_{tag}"
@@ -539,15 +537,14 @@ def a16_bucketed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("c_mktsegment").alias("n_segments"),
         )
         # eagerly materialize the (tiny) aggregate so the catalog
-        # tables, warehouse dir and conf override can be released
-        # before returning — repeated invocations (or a failed write)
-        # must not leak tables/dirs/confs for the session
+        # tables and warehouse dir can be released before returning —
+        # repeated invocations (or a failed write) must not leak
+        # tables/dirs for the session
         return result.localCheckpoint(eager=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {o_tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {c_tbl}")
         shutil.rmtree(wh, ignore_errors=True)
-        spark.conf.set("spark.sql.sources.bucketing.enabled", prev_bucketing)
 
 
 @query(
@@ -758,28 +755,31 @@ def a21_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     1996 replaced and all other years intact."""
     import shutil
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     out = scratch_dir("j2h_a21_")
     try:
         orders = load(spark, sf_dir, "orders").withColumn(
             "o_year", F.year("o_orderdate").cast("int")
         )
         orders.write.partitionBy("o_year").mode("overwrite").parquet(out)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         backfill = orders.filter(
             (F.col("o_year") == 1996) & (F.col("o_totalprice") > 150000)
         )
-        backfill.write.partitionBy("o_year").mode("overwrite").parquet(out)
+        # the write option, not the session conf: other queries on the
+        # session keep static overwrite
+        (
+            backfill.write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy("o_year")
+            .mode("overwrite")
+            .parquet(out)
+        )
         result = (
             spark.read.parquet(out)
             .groupBy("o_year")
             .agg(F.count(F.lit(1)).alias("n_orders"))
         )
-        # eager so the temp dir and conf can be released before return
-        result = result.localCheckpoint(eager=True)
-        return result
+        # eager so the temp dir can be released before return
+        return result.localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         shutil.rmtree(out, ignore_errors=True)
 
 
@@ -865,6 +865,13 @@ def a22_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         def writer(self, schema, overwrite: bool):
             return _JsonlWriter(self.options["path"])
 
+    # Spark resolves a Python write source through the JVM thread's
+    # active session, and a thread other than the one that built the
+    # session has none: make this session active first, as PySpark's
+    # own createDataFrame does
+    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(
+        spark._jsparkSession
+    )
     spark.dataSource.register(JsonlSink)
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     docs.write.format("j2h_jsonl_sink").option("path", out).mode("append").save()

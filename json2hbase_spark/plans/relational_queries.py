@@ -1236,47 +1236,33 @@ def c15_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pushed as a might_contain() pre-filter on the 100 TB fact scan
     — rows that cannot join are dropped BEFORE the shuffle, turning a
     full-fact shuffle into a semi-join-reduced one. The conf overrides
-    are scoped: planning is forced inside the block (optimizer rules
-    read confs lazily at first plan access), then session state is
-    restored, so concurrent queries never see the overrides. The
-    zeroed application-side scan threshold exists because local
-    fixtures are below the 10 GB default that gates the rule in
-    production; result semantics are the plain join, which is what
-    the oracle checks — the plan shape is pinned in
-    tests/test_plans_scale.py."""
-    overrides = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {k: spark.conf.get(k, None) for k in overrides}
-    try:
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-        od = (
-            load(spark, sf_dir, "orders")
-            .filter(F.col("o_totalprice") > 400000)
-            .select("o_orderkey", "o_orderpriority")
+    live on a ``spark.newSession()`` child, never on the caller's
+    session, where the -1 broadcast threshold made c11, c13 and c14
+    plan sort-merge joins on other threads. The zeroed
+    application-side scan threshold exists because local fixtures are
+    below the 10 GB default that gates the rule in production; result
+    semantics are the plain join, which is what the oracle checks —
+    the plan shape is pinned in tests/test_plans_scale.py."""
+    child = spark.newSession()
+    child.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    child.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
+    )
+    child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    li = load(child, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    od = (
+        load(child, sf_dir, "orders")
+        .filter(F.col("o_totalprice") > 400000)
+        .select("o_orderkey", "o_orderpriority")
+    )
+    return (
+        li.join(od, li.l_orderkey == od.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_lines"),
+            F.sum(F.col("l_quantity").cast("bigint")).alias("total_qty"),
         )
-        out = (
-            li.join(od, li.l_orderkey == od.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_lines"),
-                F.sum(F.col("l_quantity").cast("bigint")).alias("total_qty"),
-            )
-        )
-        # force optimization + physical planning while the overrides
-        # are active; subsequent actions reuse the cached plans
-        out._jdf.queryExecution().executedPlan()
-        return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    )
 
 
 @query(

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from json2hbase_spark import memo
 from json2hbase_spark.io import load, widen
 from json2hbase_spark.operators.prefix import (
     CUMSUM_BUCKETS,
@@ -2022,45 +2023,6 @@ def _accel_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a
 
 
-# Session-scoped eigvec memo (round 13 — the _gs_basis pattern from
-# VERDICT r11 #1 applied to the SECOND shared iterative chain): six
-# queries (j121, j122, j128, j133, i36, j139) each re-ran the full
-# covariance pass + 4 matrix squarings + 5 matvec iterations to get
-# the SAME 64-row eigvec. The result is DIMENSION-bounded (64 exact
-# BIGINT rows + one scalar), so the collect→local-relation round-trip
-# is bit-lossless and a legitimate driver-side artifact — exactly the
-# k-means-centroid / GS-basis category. Keyed by (applicationId,
-# fixture path, embeddings-parquet mtime+size) so fresh sessions,
-# different fixtures and rewritten fixtures never share a stale
-# eigvec (ADVICE r12 #3's key discipline).
-_EIG_CACHE: dict[tuple, tuple[list[tuple[int, int]], int]] = {}
-
-
-def _eig_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    import os as _os
-
-    real = _os.path.realpath(sf_dir)
-    try:
-        st = _os.stat(_os.path.join(real, "embeddings.parquet"))
-        marker = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        marker = (0, 0)
-    return (spark.sparkContext.applicationId, real, marker)
-
-
-def _evict_stale_sessions(cache: dict, app_id: str) -> None:
-    """Session-memo hygiene (ADVICE r13): keys are applicationId-
-    scoped, so entries from ENDED sessions can never hit again —
-    drop them on insert so long-lived multi-session processes (test
-    runs spawning several sessions) don't accumulate dead payloads.
-    Payloads are ≤4×64 rows; this is hygiene, not a leak fix. Walks a
-    snapshot of the keys and tolerates a key already gone, so a
-    concurrent insert or eviction from another thread cannot raise."""
-    for k in list(cache):
-        if k[0] != app_id:
-            cache.pop(k, None)
-
-
 def _power_eigvec(spark: SparkSession, sf_dir: str, refresh: bool = False):
     """Shared accelerated power iteration (j121's engine): returns
     (v_signed, wmax) — the 64-row signed eigvec table (dim, v) at
@@ -2068,30 +2030,18 @@ def _power_eigvec(spark: SparkSession, sf_dir: str, refresh: bool = False):
     common-direction removal, j128's whitening, j133's residual
     energy, i36's streaming energy monitor and j139's whitened PQ.
 
-    Memoized per (session, fixture) with the _gs_basis payer/consumer
-    split: j121 (the eigvec DEFINER) passes refresh=True and always
-    recomputes — its bench time IS the chain cost; consumers ride the
-    memo and pay only their own corpus pass. A consumer in a fresh
-    session computes once and memoizes (documented first-touch)."""
-    key = _eig_cache_key(spark, sf_dir)
-    if not refresh:
-        hit = _EIG_CACHE.get(key)
-        if hit is not None:
-            rows, wm = hit
-            v_signed = spark.createDataFrame(rows, "dim INT, v BIGINT")
-            wmax = spark.createDataFrame([(wm,)], "w_max BIGINT")
-            return v_signed, wmax
-    _v_signed, _wmax, vfull = _power_on(_accel_matrix(spark, sf_dir))
-    # ONE collect carries the vector AND w_max (identical on every
-    # row — the window column); max over equal values == any row's
-    data = vfull.collect()
-    rows = sorted((int(r["dim"]), int(r["v"])) for r in data)
-    wm = int(data[0]["w_max"])
-    _evict_stale_sessions(_EIG_CACHE, key[0])
-    _EIG_CACHE[key] = (rows, wm)
-    # rebuild as local relations even on the compute path: identical
-    # integers, and AQE can size a LocalTableScan for broadcast where
-    # it cannot size the localCheckpoint-backed original
+    Held in the session memo as ``"eigvec"``; j121, the definer,
+    passes refresh=True. Both paths return local relations: AQE can
+    size a LocalTableScan for broadcast where it cannot size the
+    localCheckpoint-backed original."""
+
+    def compute():
+        _v_signed, _wmax, vfull = _power_on(_accel_matrix(spark, sf_dir))
+        # one collect carries the vector and w_max (the same on every row)
+        data = vfull.collect()
+        return sorted((int(r["dim"]), int(r["v"])) for r in data), int(data[0]["w_max"])
+
+    rows, wm = memo.cached(spark, sf_dir, "eigvec", compute, refresh)
     return (
         spark.createDataFrame(rows, "dim INT, v BIGINT"),
         spark.createDataFrame([(wm,)], "w_max BIGINT"),

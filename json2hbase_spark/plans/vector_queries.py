@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from json2hbase_spark import memo
 from json2hbase_spark.functions.exact import QCENT_AVG
 from json2hbase_spark.io import load, widen
 from json2hbase_spark.materialize import materialize
@@ -268,36 +269,20 @@ def j127_pca_topr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(DataFrame.unionByName, out)
 
 
-# Session-scoped deflated-components memo (round 13 — one level above
-# the _gs_basis memo): j127 (the components DEFINER — "pca_topr" IS
-# the top-r component table) and j145's Gram-Schmidt chain both re-ran
-# the identical covariance + {MATPOW_SQUARINGS} squarings +
-# PCA_R×({POWER_ITERS} matvecs + deflation) chain. The components are
-# DIMENSION-bounded (PCA_R × 64 exact-integer rows + one scalar each),
-# so the collect→local-relation round-trip is bit-lossless — the same
-# payer/consumer split VERDICT r11 #1 directed for j145→j147, applied
-# to j127→j145: j127 recomputes (its bench time IS the chain), j145
-# rides the components and pays only its own GS + quality columns.
-_PCA_COMP_CACHE: dict[tuple, list[tuple[list[tuple[int, int]], int]]] = {}
-
-
 def _pca_components(spark: SparkSession, sf_dir: str, refresh: bool = False):
     """j127's deflated power-iteration chain: PCA_R (v_signed, wmax)
-    pairs as local relations. Memoized per (session, fixture) with
-    j127 as the refreshing definer; _gs_basis_compute consumes."""
-    from json2hbase_spark.plans.selection_queries import _eig_cache_key
+    pairs as local relations. Held in the session memo as
+    ``"pca_components"``, with j127 as the refreshing definer;
+    _gs_basis_compute consumes."""
 
-    key = _eig_cache_key(spark, sf_dir)
-    stored = None if refresh else _PCA_COMP_CACHE.get(key)
-    if stored is None:
+    def compute():
         a = _accel_matrix(spark, sf_dir)
         stored = []
         for c in range(PCA_R):
             _v_signed, _wmax, vfull = _power_on(a)
             data = vfull.collect()  # one action: vector + w_max
             rows = sorted((int(r["dim"]), int(r["v"])) for r in data)
-            wm = int(data[0]["w_max"])
-            stored.append((rows, wm))
+            stored.append((rows, int(data[0]["w_max"])))
             if c < PCA_R - 1:
                 # deflate consumes the CHECKPOINT-backed vector (the
                 # local-relation variant measured ~1.2 s SLOWER per
@@ -305,27 +290,17 @@ def _pca_components(spark: SparkSession, sf_dir: str, refresh: bool = False):
                 # broadcast sides lose exchange reuse in the deflation
                 # joins; keep the materialized table)
                 a = _deflate(a, _v_signed)
-        from json2hbase_spark.plans.selection_queries import (
-            _EIG_CACHE,
-            _evict_stale_sessions,
-        )
+        # component 0 is _power_eigvec's result (same _accel_matrix
+        # input, same _power_on chain), so it replaces the eigvec entry
+        memo.put(spark, sf_dir, "eigvec", stored[0])
+        return stored
 
-        _evict_stale_sessions(_PCA_COMP_CACHE, key[0])
-        _PCA_COMP_CACHE[key] = stored
-        # Cross-seed (ADVICE r13): component 0 IS _power_eigvec's
-        # result (same _accel_matrix input, same _power_on chain —
-        # bit-identical by construction, pinned by the memo tests), so
-        # an eigvec consumer after a j127/j145 warm-up should not
-        # re-run the covariance + squaring + matvec chain. Overwrite:
-        # the fresh component 0 replaces any entry, so an explicit
-        # refresh cannot leave a stale eigvec behind.
-        _EIG_CACHE[key] = stored[0]
     return [
         (
             spark.createDataFrame(rows, "dim INT, v BIGINT"),
             spark.createDataFrame([(wm,)], "w_max BIGINT"),
         )
-        for rows, wm in stored
+        for rows, wm in memo.cached(spark, sf_dir, "pca_components", compute, refresh)
     ]
 
 
@@ -661,19 +636,6 @@ def assign_to(subvecs: DataFrame, c: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped codebook memo (round 13 — the _gs_basis/_power_eigvec
-# pattern): five trainer calls (j129, j130, j134, i34, j139's raw leg)
-# each re-ran the {PQ_ITERS} Lloyd rounds over the corpus to converge
-# the SAME {PQ_M}×{PQ_K} codebook. The codebook is BOUNDED (64 rows of
-# 8 doubles, deterministic for a fixture) and doubles round-trip
-# bit-exactly through collect/createDataFrame, so consumers ride a
-# local relation and pay only their own subvec + final-assign pass.
-# j129 (the codebook DEFINER) passes refresh=True — its bench time IS
-# the training cost. Keyed like _EIG_CACHE; the ``vectors`` override
-# (j139's whitened leg) never touches the memo.
-_PQ_CENTS_CACHE: dict[tuple, list[tuple[int, int, list[float]]]] = {}
-
-
 def _pq_train(
     spark: SparkSession,
     sf_dir: str,
@@ -687,9 +649,11 @@ def _pq_train(
     subspace: one grouped plan trains all {PQ_M} codebooks at once
     (sub rides every key), not {PQ_M} sequential jobs. ``vectors``
     (vec_id, embedding) overrides the default embeddings scan —
-    j139 trains on the whitened residual table through this hook."""
-    from json2hbase_spark.plans.selection_queries import _eig_cache_key
+    j139 trains on the whitened residual table through this hook.
 
+    The codebook is held in the session memo as ``"pq_cents"``, with
+    j129 as the refreshing definer; a ``vectors`` override never
+    touches the memo."""
     emb = (
         widen(load(spark, sf_dir, "embeddings")) if vectors is None else vectors
     )
@@ -712,60 +676,47 @@ def _pq_train(
             ).alias("ss"),
         ).select("vec_id", "ss.sub", "ss.sv")
     )
-    key = None if vectors is not None else _eig_cache_key(spark, sf_dir)
-    if key is not None and not refresh:
-        hit = _PQ_CENTS_CACHE.get(key)
-        if hit is not None:
-            cents = spark.createDataFrame(
-                hit, "sub INT, cluster INT, ce ARRAY<DOUBLE>"
-            )
-            codes = materialize(
-                assign_to(subvecs, cents).select("vec_id", "sub", "cluster", "d")
-            )
-            return subvecs, cents, codes
 
-    cents = subvecs.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").cast("int").alias("cluster"), F.col("sv").alias("ce")
-    )
-
-    def assign(c: DataFrame) -> DataFrame:
-        return assign_to(subvecs, c)
-
-    # Lloyd rounds CHAIN as one lineage (round 13, the kmeans_assign
-    # lesson): each round's centroid subtree is consumed exactly once
-    # by the next assign (subvecs is materialized, so the broadcast
-    # re-derives only the bounded PQ_M×PQ_K centroid arithmetic) —
-    # the per-round localCheckpoint bought nothing but 2 extra driver
-    # actions per round. The FINAL cents collects to a local relation
-    # (the collect is the chain's one action): it is bounded,
-    # multi-consumed (codes here, the ADC LUT in j130/j134/j139), and
-    # doubles round-trip bit-exactly — same plan shape on compute and
-    # memo paths.
-    for it in range(PQ_ITERS):
-        cents = (
-            assign(cents)
-            .select("sub", "cluster", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("sub", "cluster", "pos")
-            .agg(F.expr(QCENT_AVG.format(v="val")).alias("cv"))
-            .groupBy("sub", "cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("ce")
-            )
+    def compute():
+        cents = subvecs.filter(F.col("vec_id") < PQ_K).select(
+            "sub",
+            F.col("vec_id").cast("int").alias("cluster"),
+            F.col("sv").alias("ce"),
         )
-    rows = sorted(
-        (int(r["sub"]), int(r["cluster"]), [float(x) for x in r["ce"]])
-        for r in cents.collect()
-    )
-    if key is not None:
-        from json2hbase_spark.plans.selection_queries import _evict_stale_sessions
+        # Lloyd rounds chain as one lineage: each round's centroid
+        # subtree is consumed once by the next assign (subvecs is
+        # materialized, so the broadcast re-derives only the bounded
+        # PQ_M×PQ_K centroid arithmetic), so no round needs a
+        # checkpoint. The final collect is the chain's one action;
+        # doubles round-trip bit-exactly through the local relation.
+        for _ in range(PQ_ITERS):
+            cents = (
+                assign_to(subvecs, cents)
+                .select("sub", "cluster", F.posexplode("sv").alias("pos", "val"))
+                .groupBy("sub", "cluster", "pos")
+                .agg(F.expr(QCENT_AVG.format(v="val")).alias("cv"))
+                .groupBy("sub", "cluster")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "cv"))),
+                        lambda s: s["cv"],
+                    ).alias("ce")
+                )
+            )
+        return sorted(
+            (int(r["sub"]), int(r["cluster"]), [float(x) for x in r["ce"]])
+            for r in cents.collect()
+        )
 
-        _evict_stale_sessions(_PQ_CENTS_CACHE, key[0])
-        _PQ_CENTS_CACHE[key] = rows
+    rows = (
+        compute()
+        if vectors is not None
+        else memo.cached(spark, sf_dir, "pq_cents", compute, refresh)
+    )
     cents = spark.createDataFrame(rows, "sub INT, cluster INT, ce ARRAY<DOUBLE>")
-    codes = materialize(assign(cents).select("vec_id", "sub", "cluster", "d"))
+    codes = materialize(
+        assign_to(subvecs, cents).select("vec_id", "sub", "cluster", "d")
+    )
     return subvecs, cents, codes
 
 
@@ -1817,60 +1768,23 @@ def j145_pca_orthobasis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped basis memo (VERDICT r11 #1): j145 and j147 EACH ran
-# the full deflated-power-iteration + Gram-Schmidt chain (~20 s of
-# fixed small-job iteration overhead apiece — the suite's top-2
-# costs). The basis is DIMENSION-bounded (PCA_R × 64 integer rows,
-# deterministic for a given fixture), so it is a legitimate driver-side
-# artifact — the same posture as k-means centroids or the |langs|-row
-# mixture tallies. The first caller in a session pays the chain; every
-# later caller rebuilds the 4×64-row tables as local relations (which
-# broadcast even better than the localCheckpoint-backed originals:
-# AQE can size a LocalTableScan). Keyed by (applicationId, fixture
-# path, embeddings-parquet mtime+size) so fresh driver sessions,
-# different fixtures, AND a rewritten fixture at the SAME path (e.g.
-# a regenerated scaled-embeddings dir reused by scale_probe) never
-# share a stale basis (ADVICE r12 #3).
-_GS_BASIS_CACHE: dict[tuple, list[list[tuple[int, int]]]] = {}
-
-
 def _gs_basis(spark: SparkSession, sf_dir: str, refresh: bool = False) -> list:
     """j145's Gram-Schmidt chain: j127's deflated power-iteration
     components orthogonalized with the division-free multiply-through
-    projection + _PI_S floor-rescale. Returns PCA_R materialized
-    64-row (dim, u) tables — the orthonormal-direction basis j147's
-    subspace energy consumes. Memoized per (session, fixture): the
-    chain's iterates are exact integers, so the collect→local-relation
-    round-trip is bit-lossless.
+    projection + _PI_S floor-rescale. Returns PCA_R 64-row (dim, u)
+    local relations — the orthonormal-direction basis j147's subspace
+    energy consumes. Held in the session memo as ``"gs_basis"``, with
+    j145 as the refreshing definer and j147 as a consumer."""
 
-    ``refresh`` is the payer/consumer split that keeps bench numbers
-    honest: j145 (the basis DEFINER) passes refresh=True and always
-    recomputes — its bench time IS the chain cost, stable across
-    reruns; j147 (a consumer) rides the memo — its bench time is the
-    marginal per-vector fold. A consumer in a fresh session computes
-    once and memoizes (documented first-touch, the codegen-warm
-    category)."""
-    from json2hbase_spark.plans.selection_queries import (
-        _eig_cache_key,
-        _evict_stale_sessions,
-    )
+    def compute():
+        return [
+            sorted((int(r["dim"]), int(r["u"])) for r in t.collect())
+            for t in _gs_basis_compute(spark, sf_dir)
+        ]
 
-    key = _eig_cache_key(spark, sf_dir)
-    if not refresh:
-        cached = _GS_BASIS_CACHE.get(key)
-        if cached is not None:
-            return [
-                spark.createDataFrame(rows, "dim int, u bigint")
-                for rows in cached
-            ]
-    us = _gs_basis_compute(spark, sf_dir)
-    _evict_stale_sessions(_GS_BASIS_CACHE, key[0])
-    _GS_BASIS_CACHE[key] = [
-        sorted((int(r["dim"]), int(r["u"])) for r in t.collect()) for t in us
-    ]
     return [
         spark.createDataFrame(rows, "dim int, u bigint")
-        for rows in _GS_BASIS_CACHE[key]
+        for rows in memo.cached(spark, sf_dir, "gs_basis", compute, refresh)
     ]
 
 

@@ -61,9 +61,15 @@ STATIC_CONFS: dict[str, str] = {
     # local[32] runs executors inside the driver JVM, whose default
     # heap is 1 GB regardless of box RAM — fine at sf0.1, found fatal
     # by tools/scale_probe.py at 10x (executor-side OOM in a plain
-    # explode+agg). Size the heap to the harness box; a real cluster
-    # sets spark.executor.memory per node instead.
-    "spark.driver.memory": "48g",
+    # explode+agg). Size the heap to the host: half its physical
+    # memory, at most 48 GB. A ceiling above what the host holds lets
+    # the heap grow until the kernel kills the JVM instead of
+    # collecting. A real cluster sets spark.executor.memory per node.
+    "spark.driver.memory": "%dm"
+    % min(
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 2**20,
+        48 * 1024,
+    ),
     # Python workers flush import caches only when something
     # importable changed (see module docstring and pyworker.py); the
     # daemon is imported by module name, so the package's parent

@@ -792,13 +792,84 @@ def test_i22_rollup_reuses_fine_level(spark, sf_dir):
 def test_c15_bloom_filter_pushed_to_fact_scan(spark, sf_dir):
     """The runtime bloom filter must appear as a might_contain()
     pre-filter on the fact side, built by a bloom_filter_agg subquery
-    on the selective dim — and survive the scoped-conf restore."""
+    on the selective dim — while the caller's session keeps its own
+    confs."""
     df = registry.QUERIES["c15_join_bloom_pruned"](spark, sf_dir)
     plan = _physical_plan(df)
     assert "might_contain" in plan, plan
     assert "bloom_filter_agg" in plan, plan
-    # conf overrides were restored
+    # the overrides live on c15's own session, not the caller's
     assert spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold") != "0"
+
+
+def test_c15_never_changes_the_callers_broadcast_threshold(spark, sf_dir):
+    """c15 plans with broadcast joins off. A thread reading the
+    caller's session while c15 builds and runs on another thread must
+    never see that: under -1, c11, c13 and c14 planned sort-merge joins
+    in place of broadcast joins."""
+    import threading
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    done, errors, seen = threading.Event(), [], set()
+
+    def run():
+        try:
+            registry.QUERIES["c15_join_bloom_pruned"](spark, sf_dir).collect()
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+        finally:
+            done.set()
+
+    t = threading.Thread(target=run)
+    t.start()
+    while not done.is_set():
+        seen.add(spark.conf.get(key))
+    t.join()
+    assert not errors, errors
+    assert "-1" not in seen and seen <= {before}, seen
+    assert spark.conf.get(key) == before
+
+
+def test_a22_runs_from_a_fresh_thread(spark, sf_dir):
+    """a22's Python write source resolves from a thread that never
+    touched the session before (Spark looks it up through the JVM
+    thread's active session), and lands every document."""
+    import threading
+
+    out: dict = {}
+
+    def run():
+        try:
+            out["rows"] = registry.QUERIES["a22_python_datasource_writer"](
+                spark, sf_dir
+            ).collect()
+        except Exception as exc:  # noqa: BLE001 — reported below
+            out["error"] = exc
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    assert "error" not in out, out.get("error")
+    want = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("c"))
+        .collect()
+    )
+    got = sorted((r.lang, r.n_docs, r.total_chars) for r in out["rows"])
+    assert got == sorted((r.lang, r.n, r.c) for r in want)
+    assert got
+
+
+def test_driver_heap_is_at_most_half_of_physical_memory(spark):
+    """``get_spark`` sizes the driver heap from the host: a ceiling
+    above what the host holds lets the JVM grow until the kernel kills
+    it."""
+    half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2
+    conf = spark.sparkContext.getConf().get("spark.driver.memory")
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    assert to_bytes(conf) <= half
 
 
 def test_c16_fact_scan_partition_pruned(spark, sf_dir):

@@ -868,25 +868,3 @@ def test_j132_containment_on_planted_quote(spark, tmp_path):
     assert 250 in out and out[250].containment == 1.0
     assert out[250].best_match == 0
     assert 251 not in out
-
-
-def test_evict_stale_sessions_survives_concurrent_writers():
-    """The memo eviction walks a snapshot of the keys: another thread
-    inserting a key, or evicting one first, while it runs must not
-    raise. Reading a stale key's app id here stands in for such a
-    thread switch."""
-    from json2hbase_spark.plans.selection_queries import _evict_stale_sessions
-
-    cache: dict = {}
-
-    class RacyKey(tuple):
-        def __getitem__(self, i):
-            cache.pop(RacyKey(("dead", 1)), None)  # evicted elsewhere first
-            cache[("live", len(cache))] = "inserted"
-            cache[("live", len(cache))] = "inserted"
-            return tuple.__getitem__(self, i)
-
-    cache.update({RacyKey(("dead", 0)): 0, RacyKey(("dead", 1)): 1, ("live", "k"): 2})
-    _evict_stale_sessions(cache, "live")
-    assert all(k[0] == "live" for k in list(cache))
-    assert cache[("live", "k")] == 2

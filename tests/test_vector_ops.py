@@ -389,25 +389,18 @@ def test_gs_basis_memo_bit_equals_recompute(spark):
     exact integer basis a fresh recompute produces — collect →
     local-relation round-trips bigints losslessly, and the refresh
     path (j145, the definer) repopulates the same values."""
-    from json2hbase_spark.plans.vector_queries import (
-        _GS_BASIS_CACHE,
-        _gs_basis,
-    )
+    from json2hbase_spark import memo
+    from json2hbase_spark.plans.vector_queries import _gs_basis
 
     fresh = [
         sorted((r.dim, r.u) for r in t.collect())
         for t in _gs_basis(spark, SF, refresh=True)
     ]
-    memo = [
+    hit = [
         sorted((r.dim, r.u) for r in t.collect()) for t in _gs_basis(spark, SF)
     ]
-    assert memo == fresh
-    # the memo shares the eigvec memos' key, which carries the
-    # fixture content marker (ADVICE r12 #3: a rewritten fixture at
-    # the same path must not share a stale basis)
-    from json2hbase_spark.plans.selection_queries import _eig_cache_key
-
-    assert _GS_BASIS_CACHE[_eig_cache_key(spark, SF)] == fresh
+    assert hit == fresh
+    assert memo.get(spark, SF, "gs_basis") == fresh
 
 
 def test_j157_matryoshka_energy_planted(spark, tmp_path):
@@ -592,20 +585,17 @@ def test_power_eigvec_memo_bit_equals_recompute(spark):
     must equal a fresh recompute bit-for-bit — bigints round-trip
     losslessly through collect → local relation — and the refresh
     path (j121, the definer) repopulates the same values."""
-    from json2hbase_spark.plans.selection_queries import (
-        _EIG_CACHE,
-        _eig_cache_key,
-        _power_eigvec,
-    )
+    from json2hbase_spark import memo
+    from json2hbase_spark.plans.selection_queries import _power_eigvec
 
     v_f, w_f = _power_eigvec(spark, SF, refresh=True)
     fresh = sorted((r.dim, r.v) for r in v_f.collect())
     wm_f = w_f.collect()[0]["w_max"]
     v_m, w_m = _power_eigvec(spark, SF)
-    memo = sorted((r.dim, r.v) for r in v_m.collect())
-    assert memo == fresh
+    hit = sorted((r.dim, r.v) for r in v_m.collect())
+    assert hit == fresh
     assert w_m.collect()[0]["w_max"] == wm_f
-    assert _EIG_CACHE[_eig_cache_key(spark, SF)] == (fresh, wm_f)
+    assert memo.get(spark, SF, "eigvec") == (fresh, wm_f)
 
 
 def test_pq_cents_memo_bit_equals_recompute(spark):
@@ -613,11 +603,8 @@ def test_pq_cents_memo_bit_equals_recompute(spark):
     the byte-identical codebook a fresh Lloyd run converges to
     (doubles round-trip exactly through collect/createDataFrame), and
     the code assignment derived from it must match per (vec, sub)."""
-    from json2hbase_spark.plans.vector_queries import (
-        _PQ_CENTS_CACHE,
-        _pq_train,
-    )
-    from json2hbase_spark.plans.selection_queries import _eig_cache_key
+    from json2hbase_spark import memo
+    from json2hbase_spark.plans.vector_queries import _pq_train
 
     _, cents_f, codes_f = _pq_train(spark, SF, refresh=True)
     fresh_c = sorted(
@@ -633,33 +620,31 @@ def test_pq_cents_memo_bit_equals_recompute(spark):
     )
     assert memo_c == fresh_c
     assert memo_codes == fresh_codes
-    cached = _PQ_CENTS_CACHE[_eig_cache_key(spark, SF)]
+    cached = memo.get(spark, SF, "pq_cents")
     assert sorted((s, c, tuple(ce)) for s, c, ce in cached) == fresh_c
 
 
 def test_pca_components_cross_seed_and_eviction(spark):
-    """ADVICE r13 (round 14): a _PCA_COMP_CACHE store seeds
-    _EIG_CACHE from component 0 — bit-identical by construction (same
+    """ADVICE r13 (round 14): a "pca_components" store seeds the
+    "eigvec" memo entry from component 0 — bit-identical by construction (same
     _accel_matrix input, same _power_on chain), replacing any stale
     entry on an explicit refresh — so an eigvec consumer
     after a j127/j145 warm-up skips the covariance+matvec chain; and
     every memo store evicts entries from ended sessions (keys are
     applicationId-scoped, so a dead entry can never hit again)."""
-    from json2hbase_spark.plans.selection_queries import (
-        _EIG_CACHE,
-        _eig_cache_key,
-        _power_eigvec,
-    )
+    from json2hbase_spark import memo
+    from json2hbase_spark.plans.selection_queries import _power_eigvec
     from json2hbase_spark.plans.vector_queries import _pca_components
 
-    key = _eig_cache_key(spark, SF)
     v_f, w_f = _power_eigvec(spark, SF, refresh=True)
     fresh = sorted((r.dim, r.v) for r in v_f.collect())
     wm_f = w_f.collect()[0]["w_max"]
-    _EIG_CACHE[key] = ([], 0)  # stale: an explicit refresh must replace it
+    memo.put(spark, SF, "eigvec", ([], 0))  # stale: an explicit refresh must replace it
     _pca_components(spark, SF, refresh=True)
-    assert _EIG_CACHE[key] == (fresh, wm_f), "components store must replace the eigvec memo entry"
-    stale = ("dead-app-id",) + key[1:]
-    _EIG_CACHE[stale] = ([], 0)
+    assert memo.get(spark, SF, "eigvec") == (fresh, wm_f), (
+        "components store must replace the eigvec memo entry"
+    )
+    stale = ("dead-app-id", "eigvec")
+    memo._store[stale] = ([], 0)
     _power_eigvec(spark, SF, refresh=True)
-    assert stale not in _EIG_CACHE, "store must evict ended-session entries"
+    assert stale not in memo._store, "store must evict ended-session entries"

@@ -93,14 +93,15 @@ def compute_all() -> dict[str, dict[str, int]]:
     # materialize legs some queries execute while BUILDING their
     # DataFrame; both release the GIL, so a small thread pool cuts
     # the 336-query sweep ~4x (233 s -> ~60 s in the test session).
-    # The session-memo chains rebuild their bounded artifacts as
-    # local relations on the compute path AND the memo path
-    # (identical plan shapes), so a consumer planning before/after
-    # its definer fingerprints the same. What is NOT thread-safe is
-    # the CATALOG: queries that register temp views / bucketed tables
-    # during construction can race another thread's re-registration
-    # and transiently plan SMJ where the canonical sequential sweep
-    # plans BHJ (observed: c11/c12). So: threaded sweep first, then
+    # The session-memo chains build their bounded artifacts as local
+    # relations from the memo's rows on the compute path AND the memo
+    # path (json2hbase_spark.memo), so a consumer planning before or
+    # after its definer fingerprints the same. What can race is shared
+    # session state: a query that sets a session conf while it plans
+    # changes what other threads plan (observed: c15's broadcast
+    # threshold of -1 turned c11's, c13's and c14's broadcast joins
+    # into sort-merge joins until c15 planned in a session of its
+    # own). So: threaded sweep first, then
     # re-run SEQUENTIALLY any query whose signature disagrees with
     # the committed snapshot (or is new/errored) — a transient race
     # re-resolves to the canonical plan, a genuine drift reproduces
