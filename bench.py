@@ -84,18 +84,18 @@ def main() -> None:
         # codegen-heavy families (also warms j20/j26/j108's shared
         # edge+propagation kernels)
         "j107_cluster_safe_split",
-        # round-11 adjudication of the j127 cold-start spike (VERDICT
-        # r10: 124.5 s first run in the driver bench, steady 13-17 s):
-        # isolated fresh-session profile reads 30.2 s cold / 13-16 s
-        # steady at sf0.1 — data-independent whole-stage-codegen
-        # compile of the 4-component unrolled deflation chain, so warm
-        # it at sf0.001 (compiles the identical classes at ~100x less
-        # data; also warms j128/j133/j139's shared covariance+matvec
-        # kernels)
+        # j127 cold-start: with its chain on the driver, a fresh
+        # session at sf0.1 (local[4], after the d1 warm above) still
+        # reads 8.5-9.3 s cold vs 3.2-3.7 s steady — data-independent
+        # first-touch codegen of the covariance pass's pair-explode
+        # aggregation (3.3 s cold vs ~1 s) and of the returned plan's
+        # broadcast union. Warm it at sf0.001 (the identical classes
+        # at ~100x less data; also warms the covariance pass j121,
+        # j128, j133, j139, j145 and j147 share)
         "j127_pca_topr",
         # round-11: j147's per-vector subspace fold compiles ~20 s of
         # unique codegen on first touch (isolated profile: 43.7 s cold,
-        # 19-20 s steady) — j127's category; also warms j145/_gs_basis
+        # 19-20 s steady) — j127's category
         "j147_subspace_energy",
         # round-14 adjudication of the i6/j119 driver breaches
         # (VERDICT r13 #2): both isolated-profile CLEAN at steady state

@@ -1,6 +1,6 @@
-"""Session memo for the dimension-bounded chain artifacts: the eigvec,
-the PCA components, the PQ codebook and the Gram-Schmidt basis. Each
-costs an iterative chain of small Spark jobs and has several consumer
+"""Session memo for the dimension-bounded chain artifacts: the PCA
+chain's components and Gram-Schmidt basis, and the PQ codebook. Each
+costs a corpus pass plus an iterative chain and has several consumer
 queries; the memo is reuse within a session, as in *Incremental Based
 Framework for Efficient Top-K Similarity Search in Interactive Data
 Analysis Sessions* (EDBT 2020).

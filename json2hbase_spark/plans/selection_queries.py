@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from json2hbase_spark import memo
+from json2hbase_spark.functions import intmat
 from json2hbase_spark.io import load, widen
 from json2hbase_spark.operators.prefix import (
     CUMSUM_BUCKETS,
@@ -1800,6 +1801,7 @@ POWER_ITERS = 5  # matvec iterations, unrolled in the oracle (j21's posture)
 MATPOW_SQUARINGS = 4  # iterate with A^(2^4)=A^16: 5 matvecs ≈ 80 plain ones
 _PI_S = 1_000  # per-iteration vector renormalization scale
 _PI_A = 1_000_000  # matrix entry scale between squarings
+PCA_R = 4  # principal directions j127 reports
 # Overflow margins with the rescale discipline: matrix entries are
 # renormalized to ≤ {_PI_A} after construction and after every
 # squaring, so a matmul term is ≤ 1e12 and its 64-term sum ≤ 6.4e13;
@@ -1923,10 +1925,9 @@ def j121_embed_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONVERGENCE by matrix-power acceleration: a flat spectrum (the
     fixture reads λ2/λ1 ≈ 0.93, which plain power iteration needs
     ~65 steps to separate) is handled by iterating with A^(2^
-    {MATPOW_SQUARINGS}) = A^16 — {MATPOW_SQUARINGS} in-plan squarings
-    of the 64×64 matrix, each a d³ join+agg over ≤d² rows, with the
-    entries renormalized to scale {_PI_A} after construction and
-    after every squaring. {POWER_ITERS} matvecs against A^16 ≈ 80
+    {MATPOW_SQUARINGS}) = A^16 — {MATPOW_SQUARINGS} squarings of the
+    64×64 matrix, d³ multiply-adds each, with the entries renormalized
+    to scale {_PI_A} after construction and after every squaring. {POWER_ITERS} matvecs against A^16 ≈ 80
     plain iterations: (0.93)^80 ≈ 0.003 residual.
 
     Exactness: the covariance entries are j97's order-free exact
@@ -1934,16 +1935,16 @@ def j121_embed_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline bounds every matmul term at {_PI_A}²·d ≈ 6.4e13 and
     every matvec term at {_PI_A}·{_PI_S}·d ≈ 6.4e10 — orders of
     magnitude inside int64 — so every iterate is bit-identical in
-    both engines (the one double step, floor(x/d), applies
-    IEEE-identical operations to identical inputs). The oracle
+    the driver chain and the oracle (the one double step, floor(x/d),
+    applies IEEE-identical operations to identical inputs). The oracle
     unrolls squarings AND iterations as CTEs (j21's pattern).
 
     Plan: the covariance is one pair-explode hash agg (j97's shape —
-    shuffle bounded at d(d+1)/2 rows regardless of corpus size); each
-    squaring/matvec is a bounded join + agg over ≤d² rows,
-    materialized per step (the per-iteration checkpoint cadence). At
-    100 TB only the covariance pass touches the corpus; the iteration
-    cost is O(d³·{MATPOW_SQUARINGS} + d²·{POWER_ITERS}) — constant."""
+    shuffle bounded at d(d+1)/2 rows regardless of corpus size),
+    collected to the driver; the squarings and matvecs run there in
+    exact Python integers (_pca). At 100 TB only the covariance pass
+    touches the corpus; the iteration cost is
+    O(d³·{MATPOW_SQUARINGS} + d²·{POWER_ITERS}) — constant."""
     v, wmax = _power_eigvec(spark, sf_dir, refresh=True)
     return (
         v.crossJoin(F.broadcast(wmax)).select(
@@ -1954,40 +1955,10 @@ def j121_embed_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pi_rescaled(m: DataFrame) -> DataFrame:
-    """Renormalize a (i, j, cov) integer matrix to entry scale _PI_A
-    (floor of double division by max|cov| DIV _PI_A — IEEE-identical
-    in DuckDB) so matmul/matvec terms stay orders inside int64.
-
-    Round 13: the denominator is a SINGLE-PARTITION WINDOW over the
-    ≤ d² = 4,096-row matrix instead of a scalar agg crossJoined back —
-    the agg form made every caller evaluate the matrix subtree twice
-    (once under the agg, once under the crossJoin; ReuseExchange does
-    not reliably match the HOF/agg subtrees involved) and added one
-    broadcast exchange per call. The window computes the identical
-    greatest(max|cov| DIV _PI_A, 1) in the matrix's own pass, and its
-    output is already one partition — the layout the former
-    coalesce(1) existed to force (r10, ~35% off the iteration phase).
-    Every caller materializes the result immediately, so the
-    bounded-domain window funnel stays behind the materialize
-    boundary, out of every returned plan."""
-    d = F.greatest(
-        F.expr(f"max(abs(cov)) OVER () DIV {_PI_A}"), F.lit(1).cast("long")
-    )
-    return m.select(
-        "i",
-        "j",
-        F.floor(F.col("cov").cast("double") / d).cast("bigint").alias("cov"),
-    )
-
-
-def _accel_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized A^(2^MATPOW_SQUARINGS) of the rescaled exact
-    integer covariance (j97's construction + silent-wrap guard) —
-    the matrix j121's power iteration and j127's deflation sequence
-    (plans/vector_queries.py) both iterate against."""
-    from json2hbase_spark.materialize import materialize
-
+def _cov_matrix(spark: SparkSession, sf_dir: str) -> list[list[int]]:
+    """The exact integer covariance as a d×d list of rows: the one
+    corpus pass of the PCA chain, j97's construction with its
+    silent-wrap guard, collected as its d(d+1)/2 upper-triangle terms."""
     s = _cov_terms(spark, sf_dir)
     # j97's silent-wrap guard: the two subtracted construction terms
     # can reach 2·n²·qmax² with opposite signs.
@@ -2000,129 +1971,61 @@ def _accel_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             guard, F.lit("j121: n²·qmax² near int64 — two-pass centered form needed")
         ).isNull()
     )
-    cov = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).alias("cov")
-    upper = s.select("i", "j", cov)
-    a_raw = upper.unionByName(
-        s.filter(F.col("i") != F.col("j")).select(
-            F.col("j").alias("i"), F.col("i").alias("j"), cov
-        )
-    )
-    a = materialize(_pi_rescaled(a_raw))
-    for _ in range(MATPOW_SQUARINGS):
-        # explicit broadcast: both sides are the materialized ≤d²-row
-        # matrix, but AQE cannot size a localCheckpoint-backed scan and
-        # plans SMJ (the _labels_converged lesson) — a d²-row broadcast
-        # hash join cuts two shuffle stages per squaring job
-        sq = (
-            a.alias("x")
-            .join(F.broadcast(a.alias("y")), F.col("x.j") == F.col("y.i"))
-            .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
-            .agg(F.sum(F.col("x.cov") * F.col("y.cov")).cast("bigint").alias("cov"))
-        )
-        a = materialize(_pi_rescaled(sq))
+    terms = s.select(
+        "i", "j", (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).alias("cov")
+    ).collect()
+    d = 1 + max(r["i"] for r in terms)
+    a = [[0] * d for _ in range(d)]
+    for i, j, cov in terms:
+        a[i][j] = a[j][i] = cov
     return a
 
 
-def _power_eigvec(spark: SparkSession, sf_dir: str, refresh: bool = False):
-    """Shared accelerated power iteration (j121's engine): returns
-    (v_signed, wmax) — the 64-row signed eigvec table (dim, v) at
-    scale _PI_S and a 1-row (w_max) table. Reused by j122's
-    common-direction removal, j128's whitening, j133's residual
-    energy, i36's streaming energy monitor and j139's whitened PQ.
+def _pca(spark: SparkSession, sf_dir: str, refresh: bool = False):
+    """The PCA chain behind j121, j127 and j145: (components, basis).
+    ``components`` holds PCA_R (signed vector, w_max) pairs from power
+    iteration against A^(2^MATPOW_SQUARINGS), each after Hotelling
+    deflation of the ones before; component 0 is j121's eigvec.
+    ``basis`` is the Gram-Schmidt orthogonalization of the components.
 
-    Held in the session memo as ``"eigvec"``; j121, the definer,
-    passes refresh=True. Both paths return local relations: AQE can
-    size a LocalTableScan for broadcast where it cannot size the
-    localCheckpoint-backed original."""
+    Only the covariance pass touches the corpus. Everything after it
+    works on at most d² entries, a size the embedding dimension fixes,
+    so it runs on the driver in exact Python integers
+    (functions/intmat.py), bit for bit the oracles' SQL arithmetic.
+    Held in the session memo as ``"pca"``; the definers j121, j127 and
+    j145 pass refresh=True."""
 
     def compute():
-        _v_signed, _wmax, vfull = _power_on(_accel_matrix(spark, sf_dir))
-        # one collect carries the vector and w_max (the same on every row)
-        data = vfull.collect()
-        return sorted((int(r["dim"]), int(r["v"])) for r in data), int(data[0]["w_max"])
+        a = intmat.rescale(_cov_matrix(spark, sf_dir), _PI_A)
+        for _ in range(MATPOW_SQUARINGS):
+            a = intmat.rescale(intmat.matmul(a, a), _PI_A)
+        components = []
+        for c in range(PCA_R):
+            components.append(intmat.power_on(a, _PI_S, POWER_ITERS))
+            if c < PCA_R - 1:
+                a = intmat.deflate(a, components[c][0], _PI_A)
+        basis = intmat.gram_schmidt([v for v, _ in components], _PI_S)
+        return components, basis
 
-    rows, wm = memo.cached(spark, sf_dir, "eigvec", compute, refresh)
+    return memo.cached(spark, sf_dir, "pca", compute, refresh)
+
+
+def _power_eigvec(spark: SparkSession, sf_dir: str, refresh: bool = False):
+    """j121's eigvec as local relations (v_signed, wmax): the 64-row
+    signed eigvec table (dim, v) at scale _PI_S and a 1-row (w_max)
+    table. Reused by j122's common-direction removal, j128's
+    whitening, j133's residual energy, i36's streaming energy monitor
+    and j139's whitened PQ."""
+    components, _ = _pca(spark, sf_dir, refresh)
+    return _eigvec_frames(spark, *components[0])
+
+
+def _eigvec_frames(spark: SparkSession, v: list[int], wm: int):
+    """A component as local relations: (dim, v) rows and a 1-row w_max."""
     return (
-        spark.createDataFrame(rows, "dim INT, v BIGINT"),
+        spark.createDataFrame(list(enumerate(v)), "dim INT, v BIGINT"),
         spark.createDataFrame([(wm,)], "w_max BIGINT"),
     )
-
-
-def _power_on(a: DataFrame):
-    """POWER_ITERS renormalized matvec iterations + deterministic
-    sign fix against an arbitrary materialized (i, j, cov) integer
-    matrix; returns (v_signed, wmax).
-
-    Round 13 (the kmeans_assign chaining lesson): iterations CHAIN as
-    one lineage under a SINGLE materialize action. The former
-    per-iteration localCheckpoint existed only because the renorm
-    denominator was a scalar agg consumed NEXT TO the matvec it
-    aggregates — checkpointing stopped the subtree doubling per
-    round. A single-partition window (max(abs(w)) OVER () — 64 rows
-    at any corpus size) computes the identical
-    greatest(·DIV _PI_S, 1) denominator inside the matvec's own pass,
-    so each iteration's subtree occurs exactly once, nothing needs a
-    checkpoint until the final multi-consumer v_signed, and the
-    POWER_ITERS×(checkpoint job + broadcast re-collect) driver
-    round-trips disappear (j43's measured cost class: ~2 driver
-    actions per round, orchestration-fixed at every scale). The final
-    iterate carries w_max as a window column so wmax is a scalar agg
-    over the MATERIALIZED table, not a re-execution of the chain.
-    Bit-identical arithmetic throughout: same DIV / greatest / floor
-    ops on the same exact integers, so both engines' unrolled-CTE
-    oracles still hash-match. v is broadcast into the matvec join
-    explicitly — AQE cannot size the chained subtrees and would plan
-    SMJ (the _labels_converged lesson); the window funnels stay
-    behind the materialize boundary, out of every returned plan."""
-    from json2hbase_spark.materialize import materialize
-
-    v = a.select(F.col("i").alias("dim")).distinct().select(
-        "dim", F.lit(_PI_S).cast("long").alias("v")
-    )
-    d = F.greatest(
-        F.expr(f"max(abs(w)) OVER () DIV {_PI_S}"), F.lit(1).cast("long")
-    )
-    for it in range(POWER_ITERS):
-        w = (
-            a.join(F.broadcast(v.select(F.col("dim").alias("j"), "v")), "j")
-            .groupBy(F.col("i").alias("dim"))
-            .agg(F.sum(F.col("cov") * F.col("v")).cast("bigint").alias("w"))
-        )
-        cols = [
-            F.col("dim"),
-            F.floor(F.col("w").cast("double") / d).cast("bigint").alias("v"),
-        ]
-        if it == POWER_ITERS - 1:
-            cols.append(
-                F.expr("max(abs(w)) OVER ()").cast("bigint").alias("w_max")
-            )
-        v = w.select(*cols)
-    sg = F.when(
-        F.max(
-            F.struct(
-                F.abs("v").alias("av"),
-                (-F.col("dim")).alias("nd"),
-                F.col("v").alias("vv"),
-            )
-        )
-        .over(Window.partitionBy())
-        .getField("vv")
-        >= 0,
-        F.lit(1),
-    ).otherwise(F.lit(-1))
-    vfull = materialize(
-        v.select(
-            "dim", (F.col("v") * sg).cast("bigint").alias("v"), "w_max"
-        )
-    )
-    v_signed = vfull.select("dim", "v")
-    wmax = vfull.agg(F.max("w_max").alias("w_max"))
-    # vfull is returned too (round 14): the memoizing callers used to
-    # collect v_signed AND wmax as two separate actions over this same
-    # 64-row checkpoint — one vfull.collect() carries both (w_max rides
-    # every row as the window column), halving the per-chain collect
-    # actions (2 per component in j127's definer path).
-    return v_signed, wmax, vfull
 
 
 # --------------------------------------------------------------- j122

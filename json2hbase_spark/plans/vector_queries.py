@@ -61,18 +61,17 @@ from json2hbase_spark.registry import query
 from json2hbase_spark.plans.selection_queries import (
     COV_SCALE,
     MATPOW_SQUARINGS,
+    PCA_R,
     POWER_ITERS,
     _DUCK_COV_S,
     _PI_A,
     _PI_S,
-    _accel_matrix,
+    _eigvec_frames,
+    _pca,
     _power_eigvec,
-    _power_on,
 )
 
 # --------------------------------------------------------------- j127
-
-PCA_R = 4  # principal directions reported (r=4 per VERDICT r9 #2)
 
 
 def _duck_base_matrix_parts() -> list[str]:
@@ -181,45 +180,6 @@ def _duck_pca_topr_oracle() -> str:
     return "WITH " + ",\n    ".join(parts) + "\n    " + "\n    UNION ALL ".join(selects)
 
 
-def _deflate(a: DataFrame, v_signed: DataFrame) -> DataFrame:
-    """Spark twin of _duck_deflate_parts: project the (signed,
-    scale-_PI_S) eigvec out of matrix ``a`` and renormalize. All
-    bounds inside int64 with margin: |cov| ≤ 2·_PI_A after rescale,
-    matvec |w| ≤ 64·2e6·2e3 ≈ 2.6e11, w·v ≤ 5.2e14 (double-exact,
-    < 2^53), vᵀv ≥ _PI_S² so the subtracted term ≤ ~5.2e8."""
-    from json2hbase_spark.plans.selection_queries import _pi_rescaled
-
-    w = (
-        a.join(
-            F.broadcast(v_signed.select(F.col("dim").alias("j"), "v")), "j"
-        )
-        .groupBy(F.col("i").alias("dim"))
-        .agg(F.sum(F.col("cov") * F.col("v")).cast("bigint").alias("w"))
-    )
-    vv = v_signed.agg(F.sum(F.col("v") * F.col("v")).cast("bigint").alias("vv"))
-    defl = (
-        a.join(F.broadcast(w.select(F.col("dim").alias("i"), "w")), "i")
-        .join(
-            F.broadcast(
-                v_signed.select(F.col("dim").alias("j"), F.col("v").alias("vj"))
-            ),
-            "j",
-        )
-        .crossJoin(F.broadcast(vv))
-        .select(
-            "i",
-            "j",
-            (
-                F.col("cov")
-                - F.floor(
-                    (F.col("w") * F.col("vj")).cast("double") / F.col("vv")
-                ).cast("bigint")
-            ).alias("cov"),
-        )
-    )
-    return materialize(_pi_rescaled(defl))
-
-
 @query("j127_pca_topr", oracle=_duck_pca_topr_oracle())
 def j127_pca_topr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{PCA_R} principal directions of the corpus embedding cloud
@@ -251,10 +211,9 @@ def j127_pca_topr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: ONE corpus pass builds the covariance (j97's d(d+1)/2-row
     shuffle bound); everything after — squarings, matvecs, deflations
-    — is bounded ≤d² rows per step, materialized per step (the
-    per-iteration checkpoint cadence). At 100 TB the corpus cost is
-    identical to j121's; the extra components cost O(r·(d²·iters))
-    — constants."""
+    — runs on ≤d² entries on the driver in exact Python integers
+    (_pca). At 100 TB the corpus cost is identical to j121's; the
+    extra components cost O(r·(d²·iters)) — constants."""
     comps = _pca_components(spark, sf_dir, refresh=True)
     out = []
     for c, (v_signed, wmax) in enumerate(comps):
@@ -270,38 +229,11 @@ def j127_pca_topr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pca_components(spark: SparkSession, sf_dir: str, refresh: bool = False):
-    """j127's deflated power-iteration chain: PCA_R (v_signed, wmax)
-    pairs as local relations. Held in the session memo as
-    ``"pca_components"``, with j127 as the refreshing definer;
-    _gs_basis_compute consumes."""
-
-    def compute():
-        a = _accel_matrix(spark, sf_dir)
-        stored = []
-        for c in range(PCA_R):
-            _v_signed, _wmax, vfull = _power_on(a)
-            data = vfull.collect()  # one action: vector + w_max
-            rows = sorted((int(r["dim"]), int(r["v"])) for r in data)
-            stored.append((rows, int(data[0]["w_max"])))
-            if c < PCA_R - 1:
-                # deflate consumes the CHECKPOINT-backed vector (the
-                # local-relation variant measured ~1.2 s SLOWER per
-                # j127 run in an interleaved A/B — the LocalTableScan
-                # broadcast sides lose exchange reuse in the deflation
-                # joins; keep the materialized table)
-                a = _deflate(a, _v_signed)
-        # component 0 is _power_eigvec's result (same _accel_matrix
-        # input, same _power_on chain), so it replaces the eigvec entry
-        memo.put(spark, sf_dir, "eigvec", stored[0])
-        return stored
-
-    return [
-        (
-            spark.createDataFrame(rows, "dim INT, v BIGINT"),
-            spark.createDataFrame([(wm,)], "w_max BIGINT"),
-        )
-        for rows, wm in memo.cached(spark, sf_dir, "pca_components", compute, refresh)
-    ]
+    """j127's deflated power-iteration components: PCA_R (v_signed,
+    wmax) pairs as local relations, from the session's "pca" memo
+    entry (_pca)."""
+    components, _ = _pca(spark, sf_dir, refresh)
+    return [_eigvec_frames(spark, v, wm) for v, wm in components]
 
 
 # --------------------------------------------------------------- j128
@@ -1370,8 +1302,6 @@ def j139_whiten_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids + hash-agg argmin per round) and two j130-shaped
     recall harnesses (LUT broadcast, bounded-query exact side) — at
     100 TB everything corpus-sized is scan-shaped, run twice."""
-    from json2hbase_spark.plans.selection_queries import _pi_rescaled  # noqa: F401
-
     v_signed, _ = _power_eigvec(spark, sf_dir)
     evl = v_signed.agg(
         F.transform(
@@ -1696,11 +1626,12 @@ def j145_pca_orthobasis(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-of-double-division rescale; cross_q divides two exact
     int64 products as doubles (same IEEE ops both engines) and
     floors once. Plan: corpus cost identical to j127 (ONE covariance
-    pass); GS adds 6 × (two 64-row joins + 1-row broadcasts) and the
-    quality columns are six 64-row dot products — all
-    dimension-bounded, nothing touches the corpus again. As the basis
-    DEFINER, j145 always recomputes the chain and refreshes the
-    session memo consumers (j147) ride — see _gs_basis."""
+    pass); the 6 GS projection steps run on the driver in exact Python
+    integers with the rest of j127's chain (_pca), and the quality
+    columns are six 64-row dot products — all dimension-bounded,
+    nothing touches the corpus again. As the basis DEFINER, j145
+    always recomputes the chain and refreshes the session memo
+    consumers (j147) ride."""
     us = _gs_basis(spark, sf_dir, refresh=True)
     # Round 14 (VERDICT r13 #5): the quality columns were ~20 tiny
     # plan fragments — 4 single-partition norm aggs + 6 pairwise-dot
@@ -1769,70 +1700,13 @@ def j145_pca_orthobasis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gs_basis(spark: SparkSession, sf_dir: str, refresh: bool = False) -> list:
-    """j145's Gram-Schmidt chain: j127's deflated power-iteration
-    components orthogonalized with the division-free multiply-through
-    projection + _PI_S floor-rescale. Returns PCA_R 64-row (dim, u)
-    local relations — the orthonormal-direction basis j147's subspace
-    energy consumes. Held in the session memo as ``"gs_basis"``, with
-    j145 as the refreshing definer and j147 as a consumer."""
-
-    def compute():
-        return [
-            sorted((int(r["dim"]), int(r["u"])) for r in t.collect())
-            for t in _gs_basis_compute(spark, sf_dir)
-        ]
-
-    return [
-        spark.createDataFrame(rows, "dim int, u bigint")
-        for rows in memo.cached(spark, sf_dir, "gs_basis", compute, refresh)
-    ]
-
-
-def _gs_basis_compute(spark: SparkSession, sf_dir: str) -> list:
-    # round 13: the raw deflated components come from j127's memo
-    # (j127 is their definer; first touch in a fresh session computes
-    # and stores) — j145 pays only the Gram-Schmidt chain below.
-    vs = [v for v, _ in _pca_components(spark, sf_dir)]
-
-    # Round 13 (the _power_on chaining lesson): each projection step's
-    # three scalars — nn = uₖᵀuₖ, vu = tᵀuₖ, and the rescale bound —
-    # were scalar aggs crossJoined back, so every step needed its own
-    # localCheckpoint to stop subtree doubling (6 checkpoint jobs for
-    # PCA_R=4). Single-partition windows over the joined 64-row pass
-    # compute the identical values (the join on dim is 1:1-complete —
-    # both sides carry exactly the 64 dims — so sum(uk·uk) over the
-    # joined rows IS uₖᵀuₖ), each step's subtree occurs once, and the
-    # whole component chains under ONE materialize (kept because later
-    # components, j145's quality columns and the _gs_basis memo all
-    # re-consume uₖ). Bit-identical integer arithmetic throughout.
-    us = [vs[0].select("dim", F.col("v").alias("u"))]
-    for c in range(1, PCA_R):
-        t = vs[c].select("dim", F.col("v").alias("u"))
-        for k in range(c):
-            uk = us[k].select("dim", F.col("u").alias("uk"))
-            # 64-row sides: broadcast explicitly — AQE cannot size
-            # localCheckpoint-backed scans and would plan SMJ
-            proj = t.join(F.broadcast(uk), "dim").select(
-                "dim",
-                (
-                    F.col("u") * F.expr("sum(uk * uk) OVER ()")
-                    - F.expr("sum(u * uk) OVER ()") * F.col("uk")
-                ).alias("u"),
-            )
-            t = proj.select(
-                "dim",
-                F.floor(
-                    F.col("u").cast("double")
-                    / F.greatest(
-                        F.expr(f"max(abs(u)) OVER () DIV {_PI_S}"),
-                        F.lit(1).cast("long"),
-                    )
-                )
-                .cast("bigint")
-                .alias("u"),
-            )
-        us.append(materialize(t))
-    return us
+    """j145's Gram-Schmidt basis: j127's components orthogonalized with
+    the division-free multiply-through projection + _PI_S
+    floor-rescale. Returns PCA_R 64-row (dim, u) local relations — the
+    orthonormal-direction basis j147's subspace energy consumes — from
+    the session's "pca" memo entry (_pca)."""
+    _, basis = _pca(spark, sf_dir, refresh)
+    return [spark.createDataFrame(list(enumerate(u)), "dim int, u bigint") for u in basis]
 
 
 # ---------------------------------------------------------------- j147

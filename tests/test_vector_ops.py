@@ -72,7 +72,6 @@ def test_j127_first_component_is_j121_and_subspace_is_usable(spark, sf):
             assert abs(dot / (na * nb)) < 0.5, (a, b, dot / (na * nb))
 
 
-@pytest.mark.slow  # round-14 test split: heavy planted-fixture run; in the full-suite invocation
 def test_j128_releases_planted_common_axis_pairs(spark, tmp_path):
     """Vectors = ±BIG·e0 + small per-vector orthogonal noise: every
     same-sign pair is near-dup BEFORE whitening (cos ≈ 0.99, pure
@@ -140,7 +139,6 @@ def test_j130_perfect_recall_on_planted_patterns(spark, tmp_path):
         assert r.n_hits == 3 and r.recall == 1.0, r
 
 
-@pytest.mark.slow  # round-14 test split: heavy planted-fixture run; in the full-suite invocation
 def test_j133_planted_axis_vectors_read_high_noise_vectors_low(spark, tmp_path):
     """j128's planted-axis corpus: ±BIG·e0 vectors are ~99.7% common
     axis (decile 9); two pure-noise vectors with NO e0 component must
@@ -386,9 +384,9 @@ def test_j147_subspace_energy_dominates_single_axis(spark):
 
 def test_gs_basis_memo_bit_equals_recompute(spark):
     """The session memo j147 rides (VERDICT r11 #1) must return the
-    exact integer basis a fresh recompute produces — collect →
-    local-relation round-trips bigints losslessly, and the refresh
-    path (j145, the definer) repopulates the same values."""
+    exact integer basis a fresh recompute produces — the local
+    relation round-trips bigints losslessly, and the refresh path
+    (j145, the definer) repopulates the same values."""
     from json2hbase_spark import memo
     from json2hbase_spark.plans.vector_queries import _gs_basis
 
@@ -400,7 +398,8 @@ def test_gs_basis_memo_bit_equals_recompute(spark):
         sorted((r.dim, r.u) for r in t.collect()) for t in _gs_basis(spark, SF)
     ]
     assert hit == fresh
-    assert memo.get(spark, SF, "gs_basis") == fresh
+    _, basis = memo.get(spark, SF, "pca")
+    assert [list(enumerate(u)) for u in basis] == fresh
 
 
 def test_j157_matryoshka_energy_planted(spark, tmp_path):
@@ -580,11 +579,10 @@ def test_j161_beam_sweep_consistent_with_j159_and_monotone_cost(spark, sf_dir):
 
 
 def test_power_eigvec_memo_bit_equals_recompute(spark):
-    """Round-13 eigvec memo (_gs_basis's payer/consumer split applied
-    to the _power_eigvec chain): the memoized 64-row table and wmax
-    must equal a fresh recompute bit-for-bit — bigints round-trip
-    losslessly through collect → local relation — and the refresh
-    path (j121, the definer) repopulates the same values."""
+    """The memoized 64-row eigvec table and wmax must equal a fresh
+    recompute bit-for-bit — bigints round-trip losslessly through the
+    local relation — and the refresh path (j121, a definer of the
+    "pca" entry) repopulates the same values."""
     from json2hbase_spark import memo
     from json2hbase_spark.plans.selection_queries import _power_eigvec
 
@@ -595,7 +593,9 @@ def test_power_eigvec_memo_bit_equals_recompute(spark):
     hit = sorted((r.dim, r.v) for r in v_m.collect())
     assert hit == fresh
     assert w_m.collect()[0]["w_max"] == wm_f
-    assert memo.get(spark, SF, "eigvec") == (fresh, wm_f)
+    components, _ = memo.get(spark, SF, "pca")
+    v, wm = components[0]
+    assert (list(enumerate(v)), wm) == (fresh, wm_f)
 
 
 def test_pq_cents_memo_bit_equals_recompute(spark):
@@ -624,27 +624,51 @@ def test_pq_cents_memo_bit_equals_recompute(spark):
     assert sorted((s, c, tuple(ce)) for s, c, ce in cached) == fresh_c
 
 
-def test_pca_components_cross_seed_and_eviction(spark):
-    """ADVICE r13 (round 14): a "pca_components" store seeds the
-    "eigvec" memo entry from component 0 — bit-identical by construction (same
-    _accel_matrix input, same _power_on chain), replacing any stale
-    entry on an explicit refresh — so an eigvec consumer
-    after a j127/j145 warm-up skips the covariance+matvec chain; and
-    every memo store evicts entries from ended sessions (keys are
+def test_pca_memo_refresh_and_eviction(spark):
+    """The eigvec, the PCA components and the GS basis share one
+    "pca" memo entry, so j121's eigvec IS j127's component 0. A
+    definer's refresh replaces a stale entry, and every memo store
+    evicts entries from ended sessions (keys are
     applicationId-scoped, so a dead entry can never hit again)."""
     from json2hbase_spark import memo
     from json2hbase_spark.plans.selection_queries import _power_eigvec
     from json2hbase_spark.plans.vector_queries import _pca_components
 
     v_f, w_f = _power_eigvec(spark, SF, refresh=True)
-    fresh = sorted((r.dim, r.v) for r in v_f.collect())
-    wm_f = w_f.collect()[0]["w_max"]
-    memo.put(spark, SF, "eigvec", ([], 0))  # stale: an explicit refresh must replace it
-    _pca_components(spark, SF, refresh=True)
-    assert memo.get(spark, SF, "eigvec") == (fresh, wm_f), (
-        "components store must replace the eigvec memo entry"
-    )
-    stale = ("dead-app-id", "eigvec")
-    memo._store[stale] = ([], 0)
+    fresh = memo.get(spark, SF, "pca")
+    memo.put(spark, SF, "pca", ([([], 0)], []))  # stale: j121's refresh must replace it
+    v_r, w_r = _power_eigvec(spark, SF, refresh=True)
+    assert memo.get(spark, SF, "pca") == fresh
+    eig = sorted((r.dim, r.v) for r in v_r.collect())
+    assert eig == sorted((r.dim, r.v) for r in v_f.collect())
+    v0, w0 = _pca_components(spark, SF)[0]
+    assert sorted((r.dim, r.v) for r in v0.collect()) == eig
+    assert w0.collect() == w_r.collect() == w_f.collect()
+    stale = ("dead-app-id", "pca")
+    memo._store[stale] = ([], [])
     _power_eigvec(spark, SF, refresh=True)
     assert stale not in memo._store, "store must evict ended-session entries"
+
+
+# Jobs of each returned plan's collect under AQE, as measured: its
+# broadcasts of local relations and its stages. plans_fingerprint.json
+# pins these plans.
+PCA_FINAL_JOBS = {"j121_embed_top_eigvec": 2, "j127_pca_topr": 5, "j145_pca_orthobasis": 7}
+
+
+@pytest.mark.parametrize("name", sorted(PCA_FINAL_JOBS))
+def test_pca_chain_runs_in_a_few_jobs(spark, sf_dir, count_jobs, name):
+    """The definers refresh the whole PCA chain, and only its covariance
+    pass may launch Spark jobs while the query builds: 3 under AQE,
+    one per stage (the widen repartition, the term aggregation's
+    shuffle, the result), plus a schema read on the fixture's first
+    touch. The chain after it runs
+    on the driver; the Spark join chain it replaced launched over 100
+    jobs for j127."""
+    from json2hbase_spark import registry
+
+    registry.load_all_query_modules()
+    out = []
+    build = count_jobs(lambda: out.append(registry.QUERIES[name](spark, sf_dir)))
+    final = count_jobs(lambda: out[0].collect())
+    assert build <= 4 and final <= PCA_FINAL_JOBS[name], (build, final)
