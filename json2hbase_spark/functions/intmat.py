@@ -1,7 +1,8 @@
 """Exact integer matrix arithmetic on the driver, for chains whose size
 the embedding dimension d fixes rather than the corpus: j121/j127/j145's
-squarings, power iterations, deflations and Gram-Schmidt run on at most
-d² entries after the one corpus pass that builds the covariance.
+squarings, power iterations, deflations, Gram-Schmidt and j145's
+cross_q run on at most d² entries after the one corpus pass that builds
+the covariance.
 
 Each function is bit for bit the SQL op that the DuckDB oracles unroll
 as CTEs (``plans/selection_queries._duck_power_parts`` and
@@ -118,3 +119,17 @@ def gram_schmidt(vs: list[list[int]], scale: int) -> list[list[int]]:
             )
         us.append(t)
     return us
+
+
+def cross_q(us: list[list[int]]) -> list[int]:
+    """Per basis vector c, ``max over k < c of floor(CAST(dt·dt AS
+    DOUBLE) / CAST(nnₖ·nn_c AS DOUBLE) · 1e6)`` with ``dt = u_cᵀu_k`` and
+    ``nn = uᵀu``: the largest cos²·10⁶ against an earlier vector, and 0
+    for the first."""
+    nn = [dot(u, u) for u in us]
+
+    def cos2_q(c: int, k: int) -> int:
+        dt = dot(us[c], us[k])
+        return math.floor(float(_int64(dt * dt)) / float(_int64(nn[k] * nn[c])) * 1e6)
+
+    return [0] + [max(cos2_q(c, k) for k in range(c)) for c in range(1, len(us))]

@@ -23,6 +23,18 @@ Strategies (select via ``SPARK_GRAFT_MATERIALIZE`` or per-call):
                    block-manager copy; cheaper than a checkpoint
                    write, survives single-executor loss, lineage kept
                    (re-derivable after catastrophic loss).
+
+Size hint: every strategy returns the table ``F.broadcast``-hinted when
+the bytes it just wrote are at most the session's
+``spark.sql.autoBroadcastJoinThreshold`` — Spark's own broadcast rule,
+applied to an exact size. A checkpointed table otherwise keeps the size
+estimate of the plan it came from (847 MB for a 74-row edge table), so
+a join against it would plan a sort-merge join. The size is read
+without a job: ``local`` sums the checkpoint RDD's block sizes from the
+block manager master, ``checkpoint`` the checkpoint files' length, and
+``persist`` the loaded cache's own statistics. A larger table, or any
+table with the threshold at -1, comes back unhinted and its joins are
+Spark's decision.
 """
 
 from __future__ import annotations
@@ -34,6 +46,7 @@ import shutil
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from json2hbase_spark.scratch import scratch_dir
 
@@ -100,11 +113,12 @@ def strategy_from_env() -> str:
 def materialize(df: DataFrame, strategy: str | None = None) -> DataFrame:
     """Materialize ``df`` now and return a DataFrame whose plan reads
     the materialized result (flat lineage for 'local'/'checkpoint';
-    cached-with-lineage for 'persist')."""
+    cached-with-lineage for 'persist'), broadcast-hinted when it fits
+    the session's broadcast threshold (module docstring)."""
     s = strategy or strategy_from_env()
     if s == "local":
-        return df.localCheckpoint(eager=True)
-    if s == "checkpoint":
+        out = df.localCheckpoint(eager=True)
+    elif s == "checkpoint":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
             # local fallback; clusters set a durable dir (HDFS/S3) via
@@ -114,10 +128,43 @@ def materialize(df: DataFrame, strategy: str | None = None) -> DataFrame:
             d = scratch_dir("json2hbase_ckpt_")
             _created_ckpt_dirs.append(d)
             sc.setCheckpointDir(d)
-        return df.checkpoint(eager=True)
-    if s == "persist":
+        out = df.checkpoint(eager=True)
+    elif s == "persist":
         out = df.persist(StorageLevel.DISK_ONLY_2)
         out.count()  # force the write so downstream reuse hits the cache
         _persisted.append(out)
-        return out
-    raise ValueError(f"unknown materialization strategy {s!r}")
+    else:
+        raise ValueError(f"unknown materialization strategy {s!r}")
+    threshold = out.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = _written_bytes(out, s, threshold)
+    return F.broadcast(out) if size is not None and size <= threshold else out
+
+
+def _written_bytes(out: DataFrame, strategy: str, limit: int) -> int | None:
+    """Bytes ``materialize`` wrote for ``out``, read without a job; for
+    'local', summed only until they pass ``limit``, and None when a
+    block is missing."""
+    if strategy == "persist":
+        # a fresh plan over the loaded cache carries its exact size
+        return out.select("*")._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    sc = out.sparkSession.sparkContext
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    if strategy == "checkpoint":
+        path = sc._jvm.org.apache.hadoop.fs.Path(rdd.getCheckpointFile().get())
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        return fs.getContentSummary(path).getLength()
+    # the block manager master's own block table, which executors update
+    # before a task ends; getRDDStorageInfo reads the UI status store,
+    # which the listener bus fills later and can still miss the blocks
+    master = sc._jsc.sc().env().blockManager().master()
+    block_id = sc._jvm.org.apache.spark.storage.RDDBlockId
+    rdd_id, total = rdd.id(), 0
+    for p in range(rdd.getNumPartitions()):
+        found = master.getLocationsAndStatus(block_id(rdd_id, p), "")
+        if found.isEmpty():
+            return None
+        status = found.get().status()
+        total += status.memSize() + status.diskSize()
+        if total > limit:
+            break
+    return total

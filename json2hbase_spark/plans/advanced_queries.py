@@ -27,15 +27,6 @@ from json2hbase_spark.registry import query
 # (bounded recursion in DuckDB).
 COMPONENT_HOPS = 3
 
-# _labels_converged's runtime join-strategy threshold: a bidirectional
-# edge set at or under this many rows (~2 longs/row → tens of MB)
-# broadcasts in the per-round propagation joins; above it the rounds
-# stay SMJ (the 100 TB path). Exact-count analogue of AQE's
-# autoBroadcastJoinThreshold, decidable because the edge table is
-# materialized before iteration starts.
-BROADCAST_EDGE_LIMIT = 2_000_000
-
-
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic near-dup edge set: the same blocked exact-Jaccard
     construction as j2v (no hash functions → engine-independent)."""
@@ -160,19 +151,10 @@ def _labels_converged(edges: DataFrame, rounds: int = 8) -> DataFrame:
     the oracle twin is an unbounded (fixpoint) recursive CTE, which is
     exactly what convergence makes equal.
 
-    Join strategy is STATS-BASED at runtime: the caller hands in a
-    materialized edge table, so its exact cardinality is one cheap
-    count away — below BROADCAST_EDGE_LIMIT rows every per-round join
-    broadcasts the edge/label side (AQE can't pick this itself: a
-    localCheckpoint-backed table keeps the size estimate of the plan it
-    was checkpointed from, and that estimate is inflated far past its
-    rows — 847 MB for a 74-row bidirectional edge union on the
-    perfbench fixtures — so it plans SMJ; measured 1.5-2 s/round saved
-    at fixture scale), above
-    it the joins stay SMJ — the 100 TB path, where the edge set grows
-    with duplication density × corpus and must shuffle. This is
-    AQE's own broadcast-threshold policy applied with an exact
-    statistic instead of an estimate."""
+    Join strategy: ``materialize`` broadcast-hints the edge table and
+    each materialized label table when its exact size fits Spark's
+    broadcast threshold; larger ones (the 100 TB path, where the edge
+    set grows with duplication density × corpus) stay sort-merge."""
     nodes = (
         edges.select(F.col("doc_a").alias("node"))
         .unionByName(edges.select(F.col("doc_b").alias("node")))
@@ -183,44 +165,19 @@ def _labels_converged(edges: DataFrame, rounds: int = 8) -> DataFrame:
             edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
     )
-    # The gate must bound EVERY table the small-graph path broadcasts:
-    # bi (edge-sized, nbr + straddling joins) AND labels (node-sized,
-    # the jump join + straddling). node count ≤ bi rows by
-    # construction (nodes = distinct endpoints of bi), so gating bi
-    # alone is sufficient today — but the max() below makes the
-    # invariant explicit instead of implicit (ADVICE r9): if a future
-    # edit dedups bi or broadcasts a wider label table, the gate still
-    # sizes on the larger relation. Short-circuit: nodes is only
-    # counted when bi is already under the limit (a bounded job).
-    small_graph = bi.limit(BROADCAST_EDGE_LIMIT + 1).count() <= BROADCAST_EDGE_LIMIT
-    if small_graph:
-        small_graph = (
-            nodes.limit(BROADCAST_EDGE_LIMIT + 1).count() <= BROADCAST_EDGE_LIMIT
-        )
-
-    def maybe_broadcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df
 
     def straddling(lbl: DataFrame) -> DataFrame:
         la = lbl.select(F.col("node").alias("src"), F.col("label").alias("la"))
         lb = lbl.select(F.col("node").alias("dst"), F.col("label").alias("lb"))
-        return (
-            bi.join(maybe_broadcast(la), "src")
-            .join(maybe_broadcast(lb), "dst")
-            .filter(F.col("la") != F.col("lb"))
-        )
+        return bi.join(la, "src").join(lb, "dst").filter(F.col("la") != F.col("lb"))
 
     labels = nodes.select("node", F.col("node").alias("label"))
     for r in range(rounds):
-        nbr = maybe_broadcast(bi).join(
+        nbr = bi.join(
             labels.select(F.col("node").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("node"), "label")
         jump = labels.join(
-            maybe_broadcast(
-                labels.select(
-                    F.col("node").alias("label"), F.col("label").alias("jl")
-                )
-            ),
+            labels.select(F.col("node").alias("label"), F.col("label").alias("jl")),
             "label",
         ).select("node", F.col("jl").alias("label"))
         labels = (

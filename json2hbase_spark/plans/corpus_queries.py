@@ -28,7 +28,6 @@ from json2hbase_spark.operators.similarity import dot as vdot
 from json2hbase_spark.operators.similarity import hard_negatives, l2_norm
 from json2hbase_spark.operators.text import whitespace_tokens
 from json2hbase_spark.plans.advanced_queries import (
-    BROADCAST_EDGE_LIMIT,
     DUCK_DUP_EDGES,
     _dup_edges,
     kmeans_assign,
@@ -961,14 +960,9 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts the next rank table's ``deg`` alongside the sum, and ``bi``
     is shuffled for degrees only once.
 
-    The rank table joins ``bi`` as a broadcast while the exact node
-    count ``n`` is at most ``BROADCAST_EDGE_LIMIT``; above it the join
-    stays sort-merge (the 100 TB path). AQE cannot decide this itself:
-    a localCheckpoint-backed table keeps the size estimate of the plan
-    it was checkpointed from, inflated far past its rows (424 MB for
-    the 74-row ``bi`` on the perfbench fixtures, over 10^17 bytes for a
-    54-row rank table after one iteration), so it plans a sort-merge
-    join with shuffles on both sides. ``n`` is read once; ``1.0 / n``
+    Each rank table joins ``bi`` as a broadcast when ``materialize``
+    hints it (exact size within Spark's broadcast threshold), and
+    sort-merge above it. The node count ``n`` is read once; ``1.0 / n``
     and ``0.15 / n`` divide by it as a double, as the oracle does.
     Quantization bias is 1e-12 per edge — epsilon against PR values
     ≥ 0.15/N."""
@@ -990,9 +984,8 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = deg.count()
     pr = deg.withColumn("pr", F.lit(1.0) / F.lit(n))
     for _ in range(PR_ITERS):
-        p = F.broadcast(pr) if n <= BROADCAST_EDGE_LIMIT else pr
         pr = materialize(
-            bi.join(p, F.col("src") == F.col("node"))
+            bi.join(pr, F.col("src") == F.col("node"))
             .groupBy("dst")
             .agg(
                 F.count("*").alias("deg"),
@@ -3236,10 +3229,10 @@ def j117_cross_source_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: reuses j48/j49's shared pipeline (materialized shingle
     table, banded candidate join — never all-pairs) + the verified
     pair set materialized once as the propagation's edge invariant;
-    label propagation is _labels_converged's stats-based
-    broadcast-or-SMJ rounds with adaptive early-exit; the source
-    attach is one id-keyed join of the tiny component table against
-    the corpus; the rollups are two bounded hash aggs (≤ |clusters|
+    label propagation is _labels_converged's rounds (broadcast while
+    materialize hints the tables, SMJ above) with adaptive early-exit;
+    the source attach is one id-keyed join of the tiny component table
+    against the corpus; the rollups are two bounded hash aggs (≤ |clusters|
     rows, then ≤ 2^|sources| source-set rows, in practice a handful).
     At 100 TB: the same banded dedup everyone already runs + the
     per-iteration checkpoint cadence (SCALE.md, j108's argument)."""
@@ -4174,7 +4167,7 @@ def j155_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.countDistinct("t").cast("int").alias("rel"))
     )
-    rr = ranked.join(F.broadcast(rel), "doc_id", "left").select(
+    rr = ranked.join(rel, "doc_id", "left").select(
         "pos", F.coalesce("rel", F.lit(0)).alias("rel")
     )
     w_ideal = Window.orderBy(F.desc("rel"), "doc_id")
@@ -4407,7 +4400,7 @@ def j158_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("tf_fb"))
     )
     cdf = (
-        toks.join(F.broadcast(cand.select("t")), "t")
+        toks.join(cand.select("t"), "t")
         .groupBy("t")
         .agg(F.countDistinct("doc_id").alias("df"))
     )
@@ -4433,7 +4426,7 @@ def j158_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     qterms = base_terms.unionByName(expt).distinct()
     expd = rank_topk(score_terms(qterms), "pos_exp")
     return (
-        expd.join(F.broadcast(base.select("doc_id", "pos_base")), "doc_id", "left")
+        expd.join(base.select("doc_id", "pos_base"), "doc_id", "left")
         .select(
             "doc_id",
             F.col("pos_exp").cast("bigint").alias("pos_exp"),

@@ -125,24 +125,26 @@ def a4_json_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("a5_hbase_sink")  # rows-only: keys are unsalted, so Spark samples the region bounds
+@query("a5_hbase_sink")  # rows-only: the region layout has no DuckDB twin
 def a5_hbase_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Emulated HBase sink path: flatten → region-partition → sort →
-    write HFile-ordered parquet; returns the written cells + the region
-    each was written to (one region per output file).
+    """Emulated HBase sink path: salted rowkey → flatten →
+    region-partition → sort → write HFile-ordered parquet; returns the
+    written cells + the region each was written to (one region per
+    output file). The salt's split keys fix each cell's region, so the
+    region is a function of the rowkey alone.
     Real deployment swaps the writer for the hbase-spark DataSource."""
     # deterministic slice (an unordered .limit() picks partition-order-
     # dependent rows; the filter selects the same rows on every run)
     events = load(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
     docs = events.select(
-        F.col("event_id").alias("rk"),
+        derive_rowkey("event_id", salt_len=2),
         F.struct(
             F.col("event_type").alias("type"),
             F.col("value").alias("value"),
             F.col("props").alias("props"),
         ).alias("e"),
     )
-    kv = kv_flatten(docs, "rk", cf="e")
+    kv = kv_flatten(docs, "rowkey", cf="e")
     cells = prepare_hbase_cells(kv, n_regions=16).withColumn("region", F.spark_partition_id())
     out_dir = scratch_dir("json2hbase_sink_")
     cells.write.mode("overwrite").parquet(out_dir)

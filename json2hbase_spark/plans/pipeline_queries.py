@@ -1674,7 +1674,7 @@ def j143_gate_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()
         )
-        return df.join(F.broadcast(drop), "doc_id", "left_anti")
+        return df.join(drop, "doc_id", "left_anti")
 
     # a2/b4 stay LAZY (round 13 second pass): both are cheap filters
     # over already-materialized tables (feats / b3's materialized

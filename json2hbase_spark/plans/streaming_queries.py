@@ -2924,7 +2924,7 @@ def i40_stream_exsub_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                 )
                 .select("doc_id", "pos0", F.xxhash64("g").alias("gk"))
-                .join(F.broadcast(cidx), "gk")
+                .join(cidx, "gk")
                 .select("doc_id", "pos0")
                 .write.mode("append")
                 .parquet(hits_dir)

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from json2hbase_spark import memo
+from json2hbase_spark.functions import intmat
 from json2hbase_spark.functions.exact import QCENT_AVG
 from json2hbase_spark.io import load, widen
 from json2hbase_spark.materialize import materialize
@@ -66,7 +67,6 @@ from json2hbase_spark.plans.selection_queries import (
     _DUCK_COV_S,
     _PI_A,
     _PI_S,
-    _eigvec_frames,
     _pca,
     _power_eigvec,
 )
@@ -214,26 +214,15 @@ def j127_pca_topr(spark: SparkSession, sf_dir: str) -> DataFrame:
     — runs on ≤d² entries on the driver in exact Python integers
     (_pca). At 100 TB the corpus cost is identical to j121's; the
     extra components cost O(r·(d²·iters)) — constants."""
-    comps = _pca_components(spark, sf_dir, refresh=True)
-    out = []
-    for c, (v_signed, wmax) in enumerate(comps):
-        out.append(
-            v_signed.crossJoin(F.broadcast(wmax)).select(
-                F.lit(c).alias("component"),
-                F.col("dim").cast("int").alias("dim"),
-                F.col("v").cast("bigint").alias("v"),
-                "w_max",
-            )
-        )
-    return reduce(DataFrame.unionByName, out)
-
-
-def _pca_components(spark: SparkSession, sf_dir: str, refresh: bool = False):
-    """j127's deflated power-iteration components: PCA_R (v_signed,
-    wmax) pairs as local relations, from the session's "pca" memo
-    entry (_pca)."""
-    components, _ = _pca(spark, sf_dir, refresh)
-    return [_eigvec_frames(spark, v, wm) for v, wm in components]
+    components, _ = _pca(spark, sf_dir, refresh=True)
+    return spark.createDataFrame(
+        [
+            (c, dim, x, w_max)
+            for c, (v, w_max) in enumerate(components)
+            for dim, x in enumerate(v)
+        ],
+        "component INT, dim INT, v BIGINT, w_max BIGINT",
+    )
 
 
 # --------------------------------------------------------------- j128
@@ -816,7 +805,7 @@ def _pq_adc_recall_table(
         )
     )
     adc = (
-        codes.join(F.broadcast(lut), ["sub", "cluster"])
+        codes.join(lut, ["sub", "cluster"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", F.col("vec_id").alias("cid"))
         .agg(F.sum("qd").cast("bigint").alias("adist"))
@@ -826,9 +815,9 @@ def _pq_adc_recall_table(
         F.col("rnk") <= PQ_TOPK
     )
     full_d = _pq_sqdist(F.col("qe"), F.col("ve"))
-    # queries broadcast explicitly: vecs may be a localCheckpoint-backed
-    # table AQE cannot size (j139's whitened chain), which would turn
-    # the bounded-query cross join into a CartesianProduct
+    # queries broadcast explicitly: PQ_NQ rows at any corpus size, while
+    # vecs may be a materialized table too large to be hinted (j139's
+    # whitened chain) — unhinted, the cross join is a CartesianProduct
     exact = vecs.crossJoin(F.broadcast(q)).filter(
         F.col("vec_id") != F.col("qid")
     ).select("qid", F.col("vec_id").alias("cid"), full_d.alias("d"))
@@ -1126,9 +1115,9 @@ def j134_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     lbl = emb.select("vec_id", "label")
     adc = (
         codes.join(lbl, "vec_id")
-        .join(F.broadcast(probed), "label")
+        .join(probed, "label")
         .filter(F.col("vec_id") != F.col("qid"))
-        .join(F.broadcast(lut), ["qid", "sub", "cluster"])
+        .join(lut, ["qid", "sub", "cluster"])
         .groupBy("qid", F.col("vec_id").alias("cid"))
         .agg(F.sum("qd").cast("bigint").alias("adist"))
     )
@@ -1627,75 +1616,17 @@ def j145_pca_orthobasis(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 products as doubles (same IEEE ops both engines) and
     floors once. Plan: corpus cost identical to j127 (ONE covariance
     pass); the 6 GS projection steps run on the driver in exact Python
-    integers with the rest of j127's chain (_pca), and the quality
-    columns are six 64-row dot products — all dimension-bounded,
-    nothing touches the corpus again. As the basis DEFINER, j145
+    integers with the rest of j127's chain (_pca), and so does cross_q
+    (intmat.cross_q: six 64-row dot products) — all dimension-bounded,
+    nothing touches the corpus again. The returned plan is one local
+    relation. As the basis DEFINER, j145
     always recomputes the chain and refreshes the session memo
     consumers (j147) ride."""
-    us = _gs_basis(spark, sf_dir, refresh=True)
-    # Round 14 (VERDICT r13 #5): the quality columns were ~20 tiny
-    # plan fragments — 4 single-partition norm aggs + 6 pairwise-dot
-    # aggs, each crossJoined back as its own 1-row broadcast — pure
-    # stage/driver overhead over 64-row local relations. Long-form
-    # fusion computes the identical values in THREE bounded
-    # aggregations: nn per component, every k<c dot in ONE self-join
-    # agg, and the per-component max term. Bit-identical: the integer
-    # products/sums are exact BIGINTs (order-free), the term is the
-    # same (dt²→double / (nnₖ·nn_c)→double)·1e6 IEEE expression
-    # floored once, and max-over-group equals greatest() on exact
-    # longs.
-    basis_long = reduce(
-        DataFrame.unionByName,
-        [
-            us[k].select(F.lit(k).alias("component"), "dim", "u")
-            for k in range(PCA_R)
-        ],
-    )
-    nn = basis_long.groupBy("component").agg(
-        F.sum(F.col("u") * F.col("u")).cast("bigint").alias("nn")
-    )
-    pa = basis_long.select(
-        F.col("component").alias("c"), "dim", F.col("u").alias("uc")
-    )
-    pb = basis_long.select(
-        F.col("component").alias("k"), "dim", F.col("u").alias("uk")
-    )
-    dt = (
-        pa.join(F.broadcast(pb), "dim")
-        .filter(F.col("k") < F.col("c"))
-        .groupBy("c", "k")
-        .agg(F.sum(F.col("uc") * F.col("uk")).cast("bigint").alias("dt"))
-    )
-    cross = (
-        dt.join(
-            F.broadcast(nn.select(F.col("component").alias("k"), F.col("nn").alias("nnk"))),
-            "k",
-        )
-        .join(
-            F.broadcast(nn.select(F.col("component").alias("c"), F.col("nn").alias("nnc"))),
-            "c",
-        )
-        .groupBy("c")
-        .agg(
-            F.max(
-                F.floor(
-                    (F.col("dt") * F.col("dt")).cast("double")
-                    / (F.col("nnk") * F.col("nnc")).cast("double")
-                    * F.lit(1000000.0)
-                )
-            )
-            .cast("bigint")
-            .alias("cross_q")
-        )
-    )
-    return (
-        basis_long.join(F.broadcast(cross), basis_long["component"] == cross["c"], "left")
-        .select(
-            "component",
-            F.col("dim").cast("int").alias("dim"),
-            F.col("u").cast("bigint").alias("u"),
-            F.coalesce(F.col("cross_q"), F.lit(0).cast("bigint")).alias("cross_q"),
-        )
+    _, basis = _pca(spark, sf_dir, refresh=True)
+    cross = intmat.cross_q(basis)
+    return spark.createDataFrame(
+        [(c, dim, x, cross[c]) for c, u in enumerate(basis) for dim, x in enumerate(u)],
+        "component INT, dim INT, u BIGINT, cross_q BIGINT",
     )
 
 

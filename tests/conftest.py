@@ -47,3 +47,18 @@ def count_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def broadcast_off(spark):
+    """Runs the test with ``spark.sql.autoBroadcastJoinThreshold=-1``
+    and restores the session's value after it: ``materialize`` then
+    hints no table, so joins against materialized tables plan
+    sort-merge, the path of tables too large to broadcast."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)

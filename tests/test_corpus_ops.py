@@ -5,7 +5,9 @@ rollup cascade's exactness against a direct hourly aggregate."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
 
+import pytest
 from pyspark.sql import functions as F
 
 from json2hbase_spark.plans.corpus_queries import (
@@ -1168,10 +1170,33 @@ def test_j47_pagerank_job_count(spark, sf_dir, count_jobs):
     assert count_jobs(lambda: j47_pagerank(spark, sf_dir).collect()) == 18
 
 
-def test_j47_pagerank_sort_merge_side_matches_duckdb_oracle(spark, sf_dir, monkeypatch):
-    """Above BROADCAST_EDGE_LIMIT nodes the rank table is not
-    broadcast (the 100 TB path): same rows."""
-    from json2hbase_spark.plans import corpus_queries
-
-    monkeypatch.setattr(corpus_queries, "BROADCAST_EDGE_LIMIT", 0)
+def test_j47_pagerank_sort_merge_side_matches_duckdb_oracle(spark, sf_dir, broadcast_off):
+    """With broadcast joins off, materialize hints no rank table and
+    every iteration joins sort-merge (the path of a graph too large to
+    broadcast): same rows."""
     _assert_j47_matches_oracle(spark, sf_dir)
+
+
+# Jobs of each label-propagation query, built and collected at local[4]
+# with the fixture schemas already read, as measured (j107 reads 20 on
+# a repeat in one session). materialize's size hint makes the joins
+# against small materialized tables broadcast joins without a job; the
+# exact-count gate it replaced ran two jobs per propagation, and the
+# sort-merge joins it left in j107 and j117 ran more.
+LABEL_CHAIN_JOBS = {
+    "j107_cluster_safe_split": 21,
+    "j108_winnow_clusters": 51,
+    "j117_cross_source_clusters": 29,
+}
+
+
+@pytest.mark.parametrize("name", sorted(LABEL_CHAIN_JOBS))
+def test_label_chain_job_count(spark, sf_dir, count_jobs, name):
+    from json2hbase_spark import registry
+    from json2hbase_spark.io import parquet_schema
+
+    registry.load_all_query_modules()
+    for path in glob.glob(f"{sf_dir}/*.parquet"):
+        parquet_schema(spark, path)
+    jobs = count_jobs(lambda: registry.QUERIES[name](spark, sf_dir).collect())
+    assert jobs <= LABEL_CHAIN_JOBS[name], jobs

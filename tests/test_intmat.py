@@ -57,3 +57,20 @@ def test_chain_on_a_fixed_3x3_matrix():
         [434, 1000, 667],
         [1000, -861, 638],
     ]
+
+
+def test_cross_q_is_the_oracles_sql():
+    import duckdb
+
+    us = [[-884, -284, 1001], [337, 1001, 822], [1000, 0, 0]]  # the chain's v0, v1 and e0
+
+    def sql(c: int, k: int) -> int:
+        dt, nk, nc = (intmat.dot(x, y) for x, y in ((us[c], us[k]), (us[k], us[k]), (us[c], us[c])))
+        return duckdb.sql(
+            f"SELECT CAST(floor((CAST(CAST({dt} AS BIGINT) * {dt} AS DOUBLE)"
+            f" / CAST(CAST({nk} AS BIGINT) * {nc} AS DOUBLE)) * 1000000.0) AS BIGINT)"
+        ).fetchone()[0]
+
+    assert intmat.cross_q(us) == [0, sql(1, 0), max(sql(2, 0), sql(2, 1))]
+    with pytest.raises(ArithmeticError):
+        intmat.cross_q([[3 * 10**9], [3 * 10**9]])  # dt fits int64, dt·dt does not

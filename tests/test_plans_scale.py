@@ -135,12 +135,41 @@ def test_a1_scan_pushdown_and_pruning(spark, sf_dir):
 # ---------------------------------------------------------------- materialize
 
 
+# 100 rows behind a filter Spark estimates as keeping all 10^7 (80 MB):
+# a checkpoint of it keeps that estimate, far past the broadcast
+# threshold, unless materialize hints it by its real size
+_BIG = 10_000_000
+
+
+def _small_table(spark):
+    return spark.range(_BIG).filter(F.col("id") < 100).withColumn("x", F.col("id") * 2)
+
+
+def _hinted(df) -> bool:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "ResolvedHint"
+
+
 @pytest.mark.parametrize("strategy", ["local", "checkpoint", "persist"])
 def test_materialize_strategies(spark, strategy):
-    df = spark.range(100).withColumn("x", F.col("id") * 2)
-    out = materialize(df, strategy)
+    """A table at most the broadcast threshold comes back
+    broadcast-hinted, so a join against it plans a broadcast hash join
+    although its estimate says 80 MB."""
+    out = materialize(_small_table(spark), strategy)
     assert out.count() == 100
     assert out.filter(F.col("x") == 10).count() == 1
+    assert _hinted(out)
+    plan = _physical_plan(spark.range(_BIG).join(out.select("id", "x"), "id"))
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+    if strategy == "persist":
+        out.unpersist()
+
+
+@pytest.mark.parametrize("strategy", ["local", "checkpoint", "persist"])
+def test_materialize_leaves_table_unhinted_with_broadcast_off(spark, broadcast_off, strategy):
+    """With the threshold at -1 no table is small enough: materialize
+    hints nothing, and its joins are Spark's own decision."""
+    out = materialize(_small_table(spark), strategy)
+    assert not _hinted(out)
     if strategy == "persist":
         out.unpersist()
 

@@ -564,6 +564,20 @@ def test_j108_constructed_component(spark, tmp_path):
     assert r.cluster == 0 and r.n_docs == 3 and r.n_pairs == 2
 
 
+def test_j108_sort_merge_side_matches_duckdb_oracle(spark, broadcast_off):
+    """With broadcast joins off, materialize hints neither the edge
+    table nor the label tables, and every propagation round joins
+    sort-merge (the path of a graph too large to broadcast): the rows
+    still equal the DuckDB oracle's."""
+    from json2hbase_spark import registry
+    from tools.oracle_check import compare, duck_connection
+
+    got = registry.QUERIES["j108_winnow_clusters"](spark, SF).toPandas()
+    want = duck_connection(SF).execute(registry.ORACLES["j108_winnow_clusters"]).fetchdf()
+    assert len(got) > 0
+    assert compare("j108_winnow_clusters", got, want) == []
+
+
 def test_j109_checkpoints_reconcile_with_corpus(spark):
     """Checkpoint rows telescope: deltas sum to the final cumulative
     values, the final cum_types equals the corpus's distinct token

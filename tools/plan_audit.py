@@ -101,14 +101,14 @@ AUDIT = {
     "j114_quality_disagreement": "both gate scores computed in ONE shared feature projection (no UDF) into ONE partial-combined hash agg on source — j110's scan-bound shape",
     "j115_packing_waste": "token-count map pass into ONE partial-combined hash agg on lang — every output column an aggregate of per-row integers; |langs|-row shuffle",
     "j116_contamination_redact": "benchmark grams broadcast-semi onto the corpus gram stream (j111's shape); covered positions explode from MATCHED gram starts only; keep-filter is a position anti-join; reconstruction is one per-doc ordered regroup (j104's shape)",
-    "j117_cross_source_clusters": "j48's banded candidate join + verified pairs materialized once; _labels_converged rounds (broadcast under BROADCAST_EDGE_LIMIT, SMJ above); one id-keyed source attach; two bounded rollup aggs",
+    "j117_cross_source_clusters": "j48's banded candidate join + verified pairs materialized once; _labels_converged rounds (broadcast while materialize size-hints the edge and label tables, SMJ above the broadcast threshold); one id-keyed source attach; two bounded rollup aggs",
     "j118_pack_ffd": "token-count map pass → ONE FlatMapGroupsInPandas per lang (the declared sequential FFD kernel) → partial-combined hash agg on (lang, bin); no join, no corpus shuffle beyond the lang regroup",
     "j119_nfc_normalize": "codegen'd dirt concat → ONE Arrow MapInPandas (vectorized NFC) → JVM-side lengths/md5 into a |langs|-row hash agg; no row-Python, no join",
     "j120_kcenter_coreset": "quantize scan materialized once; per step ONE broadcast of the single newest center folded into the running min-distance state + a 1-row max(struct) argmax — never a point×point stage",
     "j121_embed_top_eigvec": "j97's pair-explode covariance agg (shuffle ≤ d(d+1)/2 rows) → 4 materialized matrix squarings, then 5 matvecs CHAINED as one lineage (window renorms, r13) under a single materialize; all post-covariance exchanges dimension-bounded",
     "j122_common_dir_removal": "eigvec collapsed to ONE broadcast 64-element array folded per row (codegen HOF, no UDF); DECIMAL(38,0) exact energy sums into a |labels|-row agg",
     "j123_coreset_coverage": "corpus × K-row center table broadcast crossJoin (never point×point) → min(struct) argmin per point → K-row hash agg",
-    "j127_pca_topr": "j121's covariance + squarings, then per component a CHAINED POWER_ITERS matvec lineage (one materialize per component, r13) and one materialized Hotelling deflation — every post-covariance stage ≤d² rows with explicit broadcasts",
+    "j127_pca_topr": "j121's one covariance pass while the query builds; squarings, power iterations and Hotelling deflations run on the driver in exact integers (_pca); the returned plan is one local relation of PCA_R×d rows",
     "j128_whiten_rescore": "eigvec = ONE broadcast 64-array; residual rewrite a per-row codegen fold materialized once; pair join blocked on the LSH bucket (SMJ justified, j43's category); all dots order-free BIGINT folds",
     "j129_pq_codebook": "ONE grouped Lloyd plan for all 8 subspaces: rounds chain as one lineage (r13) — per round a 64-row centroid broadcast + min(struct) hash-agg argmin + QCENT_AVG update; only the final codebook materializes; distortion quantized to BIGINT before the (sub, cluster) agg",
     "j130_pq_adc_recall": "640-row query LUT broadcast onto the code table (8 integer rows per vector — the compressed scan) into a (qid, cid) hash agg; exact side a bounded-query broadcast crossJoin; per-qid top-k windows over candidate-bounded partitions",
@@ -181,7 +181,7 @@ SMJ_JUSTIFIED = {
     "j89_hapax_docs": "occurrence stream re-joined to its own vocabulary — both sides grow with the corpus",
     "j107_cluster_safe_split": "j20's label propagation reused (edges vs labels, both corpus-sized) + the straddle audit's two id-keyed joins of the edge set against the corpus-sized split table — every SMJ side grows with the corpus, none is broadcastable",
     "j108_winnow_clusters": "j20's label propagation over the winnow pair table (edges vs labels, both grow with duplication density × corpus) + the cluster-stat joins keyed on the same pair set",
-    "j117_cross_source_clusters": "j48's banded candidate pair join (both sides corpus-sized, j43's category) + _labels_converged over the verified edge set (edges vs labels, j108's category); the broadcast fast path takes over below BROADCAST_EDGE_LIMIT at runtime",
+    "j117_cross_source_clusters": "j48's banded candidate pair join (both sides corpus-sized, j43's category) + _labels_converged over the verified edge set (edges vs labels, j108's category); the rounds broadcast instead while materialize size-hints the tables",
     "j128_whiten_rescore": "j16's LSH-bucket-blocked pair self-join on the whitened residual table — both sides corpus-sized (j43's category); the eigvec itself broadcasts",
     "j132_incremental_winnow": "the fh containment join (new-batch fingerprints vs the persisted corpus index — both grow with data, j49's category) plus the doc-keyed audit joins of its batch-sized aggregates",
     "j138_lexical_semantic_agreement": "j48's banded candidate join + j16's bucket-blocked pair join (both corpus-sized, j43's category) + the full-outer pair-set merge (FULL OUTER has no broadcast form — j73's category, both sides bounded by duplication density) + pair-keyed attach joins",
