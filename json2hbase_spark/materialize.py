@@ -35,6 +35,14 @@ block manager master, ``checkpoint`` the checkpoint files' length, and
 ``persist`` the loaded cache's own statistics. A larger table, or any
 table with the threshold at -1, comes back unhinted and its joins are
 Spark's decision.
+
+``broadcast_hinted(df)`` reads that decision back: it is True when the
+root of ``df``'s analyzed plan is the broadcast hint ``materialize``
+added, so a caller branches on the same exact size without measuring
+it a second way. A table that fits the threshold is one Spark would
+already collect onto the driver to broadcast it, so a caller may also
+collect it and finish the work in Python (j47's PageRank does) without
+holding more on the driver than a broadcast join would.
 """
 
 from __future__ import annotations
@@ -168,3 +176,14 @@ def _written_bytes(out: DataFrame, strategy: str, limit: int) -> int | None:
         if total > limit:
             break
     return total
+
+
+def broadcast_hinted(df: DataFrame) -> bool:
+    """True when ``df`` carries ``materialize``'s broadcast hint at the
+    root of its analyzed plan: its written bytes are at most the
+    session's broadcast threshold."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "ResolvedHint":
+        return False
+    strategy = plan.hints().strategy()
+    return strategy.isDefined() and strategy.get().toString() == "broadcast"

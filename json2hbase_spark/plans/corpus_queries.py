@@ -19,11 +19,15 @@ final cast.
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from json2hbase_spark.io import load, widen
-from json2hbase_spark.materialize import materialize
+from json2hbase_spark.materialize import broadcast_hinted, materialize
 from json2hbase_spark.operators.similarity import dot as vdot
 from json2hbase_spark.operators.similarity import hard_negatives, l2_norm
 from json2hbase_spark.operators.text import whitespace_tokens
@@ -952,20 +956,9 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-edge contributions quantize to 1e-12 BIGINT before the per-node
     sum, so accumulation order (Spark shuffle vs DuckDB group) cannot
     change the result, while the damping arithmetic stays plain IEEE.
-    Each iteration is one join + one hash agg with the per-iteration
-    rank table materialized (flat lineage, same posture as j21); the
-    edge set materializes once, both directions from one explode —
-    exactly the 100 TB checkpointing shape. ``bi`` is symmetric, so a
-    node's in-degree is its out-degree: each iteration's aggregate
-    counts the next rank table's ``deg`` alongside the sum, and ``bi``
-    is shuffled for degrees only once.
-
-    Each rank table joins ``bi`` as a broadcast when ``materialize``
-    hints it (exact size within Spark's broadcast threshold), and
-    sort-merge above it. The node count ``n`` is read once; ``1.0 / n``
-    and ``0.15 / n`` divide by it as a double, as the oracle does.
-    Quantization bias is 1e-12 per edge — epsilon against PR values
-    ≥ 0.15/N."""
+    The edge set materializes once, both directions from one explode;
+    ``_pagerank`` ranks it. Quantization bias is 1e-12 per edge —
+    epsilon against PR values ≥ 0.15/N."""
     bi = materialize(
         _dup_edges(spark, sf_dir)
         .select(
@@ -978,6 +971,33 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.src", "e.dst")
     )
+    return _pagerank(bi)
+
+
+def _pagerank(bi: DataFrame) -> DataFrame:
+    """``(node, pr)`` after PR_ITERS iterations over the materialized
+    edge table ``bi`` (``src``, ``dst``; one row per edge direction).
+
+    When ``materialize`` hinted ``bi`` for broadcast (its exact size is
+    within Spark's broadcast threshold), ``bi`` is collected in one job
+    and ranked on the driver by ``_pagerank_rows``; the result is one
+    local relation.
+
+    Above the threshold — the 100 TB checkpointing shape — each
+    iteration is one join + one hash agg with the per-iteration rank
+    table materialized (flat lineage, same posture as j21); a rank
+    table joins ``bi`` as a broadcast when ``materialize`` hints it, and
+    sort-merge otherwise. ``bi`` is symmetric, so a node's in-degree is
+    its out-degree: each iteration's aggregate counts the next rank
+    table's ``deg`` alongside the sum, and ``bi`` is shuffled for
+    degrees only once. The node count ``n`` is read once; ``1.0 / n``
+    and ``0.15 / n`` divide by it as a double, as the oracle does."""
+    if broadcast_hinted(bi):
+        schema = StructType(
+            [StructField("node", bi.schema["src"].dataType), StructField("pr", DoubleType())]
+        )
+        rows = _pagerank_rows(bi.select("src", "dst").collect())
+        return bi.sparkSession.createDataFrame(rows, schema)
     deg = materialize(
         bi.groupBy("src").agg(F.count("*").alias("deg")).select(F.col("src").alias("node"), "deg")
     )
@@ -1001,6 +1021,25 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     return pr.select("node", "pr")
+
+
+def _pagerank_rows(edges: list) -> list[tuple]:
+    """The Spark chain of ``_pagerank`` on ``bi``'s ``(src, dst)``
+    pairs, with each of its casts made explicit so every ``pr`` is
+    bit-identical: double-by-long divisions are float-by-int, the
+    quantized contribution is ``floor`` of a double as an int, and the
+    per-node sum is exact. ``bi`` is symmetric, so a node's row count
+    as ``src`` (multi-edges included) is also its recounted in-degree.
+    Sorted by node."""
+    deg = Counter(src for src, _ in edges)
+    n = len(deg)
+    pr = {v: 1.0 / n for v in deg}
+    for _ in range(PR_ITERS):
+        sq = Counter()
+        for src, dst in edges:
+            sq[dst] += math.floor(pr[src] / deg[src] * PR_QUANT + 0.5)
+        pr = {v: 0.15 / n + 0.85 * (float(s) / float(PR_QUANT)) for v, s in sq.items()}
+    return sorted(pr.items())
 
 
 # ---------------------------------------------------------------- j48

@@ -1158,23 +1158,94 @@ def test_j47_pagerank_matches_duckdb_oracle(spark, sf_dir):
     _assert_j47_matches_oracle(spark, sf_dir)
 
 
-def test_j47_pagerank_job_count(spark, sf_dir, count_jobs):
-    """One materialize builds both edge directions, and each iteration
-    is one broadcast join plus one aggregate that also recounts
-    degrees. A union materialize or a second rank-table join per
-    iteration raises the count; a fresh schema inference adds one."""
+def _j47_jobs(spark, sf_dir, count_jobs) -> int:
     from json2hbase_spark.io import parquet_schema
     from json2hbase_spark.plans.corpus_queries import j47_pagerank
 
     parquet_schema(spark, f"{sf_dir}/documents.parquet")
-    assert count_jobs(lambda: j47_pagerank(spark, sf_dir).collect()) == 18
+    return count_jobs(lambda: j47_pagerank(spark, sf_dir).collect())
+
+
+def test_j47_pagerank_job_count(spark, sf_dir, count_jobs):
+    """The fixture's edge table fits the broadcast threshold, so j47
+    collects it once and ranks on the driver: two jobs each for the
+    shingle and edge materializes, one collect of ``bi`` and the local
+    relation's collect. A rank-table materialize or a second collect of
+    ``bi`` raises the count; a fresh schema inference adds one."""
+    assert _j47_jobs(spark, sf_dir, count_jobs) == 6
+
+
+def test_j47_pagerank_spark_path_job_count(spark, sf_dir, count_jobs, broadcast_off):
+    """Above the threshold every iteration materializes its rank table
+    and joins ``bi`` sort-merge; one materialize builds both edge
+    directions and each aggregate also recounts degrees. A union
+    materialize or a second rank-table join per iteration raises it."""
+    assert _j47_jobs(spark, sf_dir, count_jobs) == 22
 
 
 def test_j47_pagerank_sort_merge_side_matches_duckdb_oracle(spark, sf_dir, broadcast_off):
-    """With broadcast joins off, materialize hints no rank table and
-    every iteration joins sort-merge (the path of a graph too large to
-    broadcast): same rows."""
+    """With broadcast joins off, materialize hints no table, so j47
+    runs the Spark chain and every iteration joins sort-merge (the path
+    of a graph too large to broadcast): same rows."""
     _assert_j47_matches_oracle(spark, sf_dir)
+
+
+@pytest.mark.parametrize("strategy", ["local", "checkpoint", "persist"])
+def test_j47_pagerank_driver_path_under_each_strategy(spark, sf_dir, monkeypatch, strategy):
+    """Each materialize strategy hints the fixture's small edge table,
+    so j47 ranks on the driver under all three, with the oracle's
+    rows."""
+    from json2hbase_spark.materialize import materialization_scope
+    from json2hbase_spark.plans import corpus_queries
+
+    ranked = corpus_queries._pagerank_rows
+    calls = []
+    monkeypatch.setattr(
+        corpus_queries, "_pagerank_rows", lambda edges: calls.append(len(edges)) or ranked(edges)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", strategy)
+    with materialization_scope():
+        _assert_j47_matches_oracle(spark, sf_dir)
+    assert len(calls) == 1 and calls[0] > 0
+
+
+_ID = 1 << 31  # node ids past int32
+_STAR = 220  # hub degree
+_PR_GRAPH = (
+    [(_ID, _ID + k) for k in range(1, _STAR + 1)]  # star around one hub
+    + [(_ID + 1, _ID + 2)] * 2  # duplicated pair between two leaves
+    + [(_ID, _ID + 3)]  # duplicated hub edge
+    + [(1 << 40, (1 << 40) + 1)] * 2  # a second component
+    + [((1 << 40) + 1, (1 << 40) + 2), ((1 << 40) + 2, 1 << 40)]
+)
+
+
+def _pagerank_of(spark, pairs):
+    from json2hbase_spark.materialize import broadcast_hinted, materialize
+    from json2hbase_spark.plans.corpus_queries import _pagerank
+
+    edges = spark.createDataFrame(pairs, "doc_a BIGINT, doc_b BIGINT")
+    bi = materialize(
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
+            edges.select("doc_b", "doc_a")
+        )
+    )
+    out = _pagerank(bi)
+    return broadcast_hinted(bi), out.schema, sorted(out.collect())
+
+
+def test_pagerank_driver_path_matches_spark_path(spark, request):
+    """The driver kernel repeats each Spark cast, so on a graph with a
+    hub of degree 220, multi-edges, two components and ids above 2^31
+    it gives the Spark chain's rows bit for bit, and its schema."""
+    hinted, schema, rows = _pagerank_of(spark, _PR_GRAPH)
+    request.getfixturevalue("broadcast_off")
+    spark_hinted, spark_schema, spark_rows = _pagerank_of(spark, _PR_GRAPH)
+    assert hinted and not spark_hinted
+    assert schema == spark_schema
+    assert rows == spark_rows
+    assert len(rows) == _STAR + 4
+    assert max(rows, key=lambda r: r.pr).node == _ID
 
 
 # Jobs of each label-propagation query, built and collected at local[4]

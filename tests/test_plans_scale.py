@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from json2hbase_spark import registry
-from json2hbase_spark.materialize import materialize
+from json2hbase_spark.materialize import broadcast_hinted, materialize
 from json2hbase_spark.operators.hbase import write_hbase_foreach
 
 registry.load_all_query_modules()
@@ -145,10 +145,6 @@ def _small_table(spark):
     return spark.range(_BIG).filter(F.col("id") < 100).withColumn("x", F.col("id") * 2)
 
 
-def _hinted(df) -> bool:
-    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "ResolvedHint"
-
-
 @pytest.mark.parametrize("strategy", ["local", "checkpoint", "persist"])
 def test_materialize_strategies(spark, strategy):
     """A table at most the broadcast threshold comes back
@@ -157,7 +153,7 @@ def test_materialize_strategies(spark, strategy):
     out = materialize(_small_table(spark), strategy)
     assert out.count() == 100
     assert out.filter(F.col("x") == 10).count() == 1
-    assert _hinted(out)
+    assert broadcast_hinted(out)
     plan = _physical_plan(spark.range(_BIG).join(out.select("id", "x"), "id"))
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
     if strategy == "persist":
@@ -169,7 +165,7 @@ def test_materialize_leaves_table_unhinted_with_broadcast_off(spark, broadcast_o
     """With the threshold at -1 no table is small enough: materialize
     hints nothing, and its joins are Spark's own decision."""
     out = materialize(_small_table(spark), strategy)
-    assert not _hinted(out)
+    assert not broadcast_hinted(out)
     if strategy == "persist":
         out.unpersist()
 

@@ -61,11 +61,14 @@ PROBES = [
     "j65_bloom_dedup",
     # round-6 additions (VERDICT r5 #6): the iterative/pair-heavy ops
     # not yet covered. All are designed linear in corpus volume:
-    # j47/j20 iterate joins over the BANDED near-dup edge set (edges
-    # grow linearly because banding caps candidates; iterations are a
-    # fixed count), j49's recall harness reuses the banded candidate
-    # set plus a bounded ground-truth sample, j72's overlap profile is
-    # a gram-keyed hash agg (no pair stage at all).
+    # j47/j20 iterate over the BANDED near-dup edge set (edges grow
+    # linearly because banding caps candidates; iterations are a fixed
+    # count). j47's edge table (512 rows at sf0.1, so about 5,000 at
+    # x10) fits the broadcast threshold, so after the banded join it
+    # ranks on the driver; j20 iterates joins. j49's recall harness
+    # reuses the banded candidate set plus a bounded ground-truth
+    # sample, j72's overlap profile is a gram-keyed hash agg (no pair
+    # stage at all).
     "j47_pagerank",
     "j20_dup_components",
     "j49_dedup_recall",
