@@ -163,7 +163,7 @@ def main() -> None:
             print(f"# bench error {name}: {exc}", file=sys.stderr)
             return -1.0
         finally:
-            cleanup_materialized()  # release persist blocks; nudge ContextCleaner for localCheckpoints
+            cleanup_materialized()  # nudge ContextCleaner for localCheckpoints
 
     times: dict[str, float] = {}
     for i, name in enumerate(sorted(registry.QUERIES)):

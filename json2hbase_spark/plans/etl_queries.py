@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json2hbase_spark.io import load
+from json2hbase_spark.materialize import materialize
 from json2hbase_spark.operators.flatten import kv_flatten
 from json2hbase_spark.operators.hbase import derive_rowkey, prepare_hbase_cells
 from json2hbase_spark.registry import query
@@ -542,7 +543,7 @@ def a16_bucketed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tables and warehouse dir can be released before returning —
         # repeated invocations (or a failed write) must not leak
         # tables/dirs for the session
-        return result.localCheckpoint(eager=True)
+        return materialize(result)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {o_tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {c_tbl}")
@@ -780,7 +781,7 @@ def a21_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
             .agg(F.count(F.lit(1)).alias("n_orders"))
         )
         # eager so the temp dir can be released before return
-        return result.localCheckpoint(eager=True)
+        return materialize(result)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -1011,7 +1012,7 @@ def a24_manifest_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         docs.write.partitionBy("lang").mode("overwrite").parquet(path)
         out = verify_manifest(spark.read.parquet(path), docs)
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -1458,4 +1459,4 @@ def a28_commit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _reduce(DataFrame.unionByName, outs)
     # eager materialize so the scratch table can be reclaimed (a24's
     # lifecycle pattern; scratch root is atexit-removed regardless)
-    return out.localCheckpoint(eager=True)
+    return materialize(out)

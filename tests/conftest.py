@@ -62,3 +62,18 @@ def broadcast_off(spark):
         yield
     finally:
         spark.conf.set(key, before)
+
+
+@pytest.fixture
+def reliable_checkpoint(spark, tmp_path):
+    """Runs the test with the SparkContext's checkpoint dir at
+    ``tmp_path`` and restores "no dir" after it: ``materialize`` then
+    writes a reliable checkpoint, the path of a deployment that sets
+    ``spark.checkpoint.dir``. Without the restore, every later test
+    would take that path too."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        yield tmp_path
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())

@@ -361,18 +361,16 @@ def test_i32_stream_coverage_equals_batch_j123(spark):
     """The complete-mode streaming coverage tally must equal batch
     j123 row-for-row (fixed exemplars, same assignment tie rule)."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
-    with materialization_scope():
-        batch = {
-            r.center_order: r.asDict()
-            for r in registry.QUERIES["j123_coreset_coverage"](spark, SF).collect()
-        }
-        stream = {
-            r.center_order: r.asDict()
-            for r in registry.QUERIES["i32_stream_coreset_monitor"](spark, SF).collect()
-        }
+    batch = {
+        r.center_order: r.asDict()
+        for r in registry.QUERIES["j123_coreset_coverage"](spark, SF).collect()
+    }
+    stream = {
+        r.center_order: r.asDict()
+        for r in registry.QUERIES["i32_stream_coreset_monitor"](spark, SF).collect()
+    }
     assert stream == batch
 
 
@@ -512,18 +510,16 @@ def test_i34_stream_pq_tally_equals_batch_j129(spark):
     j129 row-for-row (same trained codebooks, same lowest-cluster
     assignment tie rule, same quantized distortion sums)."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
-    with materialization_scope():
-        batch = {
-            (r.sub, r.cluster): r.asDict()
-            for r in registry.QUERIES["j129_pq_codebook"](spark, SF).collect()
-        }
-        stream = {
-            (r.sub, r.cluster): r.asDict()
-            for r in registry.QUERIES["i34_stream_pq_encode"](spark, SF).collect()
-        }
+    batch = {
+        (r.sub, r.cluster): r.asDict()
+        for r in registry.QUERIES["j129_pq_codebook"](spark, SF).collect()
+    }
+    stream = {
+        (r.sub, r.cluster): r.asDict()
+        for r in registry.QUERIES["i34_stream_pq_encode"](spark, SF).collect()
+    }
     assert stream == batch
 
 
@@ -670,15 +666,13 @@ def test_i36_energy_histogram_equals_batch_j133_rollup(spark):
     counts must equal the python rollup of batch j133's per-vector
     table (same pinned axis, same decile rule)."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
-    with materialization_scope():
-        per_vec = registry.QUERIES["j133_residual_energy"](spark, SF).collect()
-        stream = {
-            r.decile: r
-            for r in registry.QUERIES["i36_stream_energy_monitor"](spark, SF).collect()
-        }
+    per_vec = registry.QUERIES["j133_residual_energy"](spark, SF).collect()
+    stream = {
+        r.decile: r
+        for r in registry.QUERIES["i36_stream_energy_monitor"](spark, SF).collect()
+    }
     want: dict[int, int] = {}
     for r in per_vec:
         want[r.decile] = want.get(r.decile, 0) + 1

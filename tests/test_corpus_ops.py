@@ -605,7 +605,6 @@ def test_j117_source_set_clusters_resolve_transitively(spark, tmp_path):
     within-source template pair rolls up under its own single-source
     set; unique text appears nowhere."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
     base = (
@@ -634,11 +633,10 @@ def test_j117_source_set_clusters_resolve_transitively(spark, tmp_path):
     )
     d = str(tmp_path / "xsrc")
     docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    with materialization_scope():
-        out = {
-            r.source_set: r
-            for r in registry.QUERIES["j117_cross_source_clusters"](spark, d).collect()
-        }
+    out = {
+        r.source_set: r
+        for r in registry.QUERIES["j117_cross_source_clusters"](spark, d).collect()
+    }
     fam = out["s0,s1,s2"]
     assert fam.n_clusters == 1 and fam.n_docs == 3 == fam.max_cluster_docs
     assert fam.n_pairs == 3  # complete triangle of verified pairs
@@ -653,7 +651,6 @@ def test_j138_categories_on_planted_pairs(spark, tmp_path):
     → semantic_only; near-identical on both → both. Counts and
     category averages must separate exactly."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
     lex = (
@@ -703,13 +700,12 @@ def test_j138_categories_on_planted_pairs(spark, tmp_path):
     spark.createDataFrame(
         emb, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    with materialization_scope():
-        out = {
-            r.category: r
-            for r in registry.QUERIES["j138_lexical_semantic_agreement"](
-                spark, d
-            ).collect()
-        }
+    out = {
+        r.category: r
+        for r in registry.QUERIES["j138_lexical_semantic_agreement"](
+            spark, d
+        ).collect()
+    }
     assert out["lexical_only"].n_pairs == 1
     assert out["lexical_only"].avg_cos == 0.0
     assert out["lexical_only"].avg_jacc >= 0.5
@@ -1190,12 +1186,11 @@ def test_j47_pagerank_sort_merge_side_matches_duckdb_oracle(spark, sf_dir, broad
     _assert_j47_matches_oracle(spark, sf_dir)
 
 
-@pytest.mark.parametrize("strategy", ["local", "checkpoint", "persist"])
-def test_j47_pagerank_driver_path_under_each_strategy(spark, sf_dir, monkeypatch, strategy):
-    """Each materialize strategy hints the fixture's small edge table,
-    so j47 ranks on the driver under all three, with the oracle's
-    rows."""
-    from json2hbase_spark.materialize import materialization_scope
+@pytest.mark.parametrize("kind", ["local", "checkpoint"])
+def test_j47_pagerank_driver_path_under_each_strategy(spark, sf_dir, monkeypatch, request, kind):
+    """A local and a reliable checkpoint both hint the fixture's small
+    edge table, so j47 ranks on the driver under either, with the
+    oracle's rows."""
     from json2hbase_spark.plans import corpus_queries
 
     ranked = corpus_queries._pagerank_rows
@@ -1203,9 +1198,9 @@ def test_j47_pagerank_driver_path_under_each_strategy(spark, sf_dir, monkeypatch
     monkeypatch.setattr(
         corpus_queries, "_pagerank_rows", lambda edges: calls.append(len(edges)) or ranked(edges)
     )
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", strategy)
-    with materialization_scope():
-        _assert_j47_matches_oracle(spark, sf_dir)
+    if kind == "checkpoint":
+        request.getfixturevalue("reliable_checkpoint")
+    _assert_j47_matches_oracle(spark, sf_dir)
     assert len(calls) == 1 and calls[0] > 0
 
 

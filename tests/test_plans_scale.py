@@ -145,35 +145,48 @@ def _small_table(spark):
     return spark.range(_BIG).filter(F.col("id") < 100).withColumn("x", F.col("id") * 2)
 
 
-@pytest.mark.parametrize("strategy", ["local", "checkpoint", "persist"])
-def test_materialize_strategies(spark, strategy):
+@pytest.mark.parametrize("kind", ["local", "checkpoint"])
+def test_materialize_strategies(spark, request, kind):
     """A table at most the broadcast threshold comes back
     broadcast-hinted, so a join against it plans a broadcast hash join
     although its estimate says 80 MB."""
-    out = materialize(_small_table(spark), strategy)
+    if kind == "checkpoint":
+        request.getfixturevalue("reliable_checkpoint")
+    out = materialize(_small_table(spark))
     assert out.count() == 100
     assert out.filter(F.col("x") == 10).count() == 1
     assert broadcast_hinted(out)
     plan = _physical_plan(spark.range(_BIG).join(out.select("id", "x"), "id"))
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
-    if strategy == "persist":
-        out.unpersist()
 
 
-@pytest.mark.parametrize("strategy", ["local", "checkpoint", "persist"])
-def test_materialize_leaves_table_unhinted_with_broadcast_off(spark, broadcast_off, strategy):
+@pytest.mark.parametrize("kind", ["local", "checkpoint"])
+def test_materialize_leaves_table_unhinted_with_broadcast_off(spark, broadcast_off, request, kind):
     """With the threshold at -1 no table is small enough: materialize
     hints nothing, and its joins are Spark's own decision."""
-    out = materialize(_small_table(spark), strategy)
-    assert not broadcast_hinted(out)
-    if strategy == "persist":
-        out.unpersist()
+    if kind == "checkpoint":
+        request.getfixturevalue("reliable_checkpoint")
+    assert not broadcast_hinted(materialize(_small_table(spark)))
+
+
+def test_materialize_picks_checkpoint_by_the_spark_dir(spark, count_jobs, request):
+    """With no checkpoint dir, materialize takes a local checkpoint in
+    one job and sets no dir. With one, it writes its files there, also
+    in one job: a Spark that computes an eager reliable checkpoint
+    twice launches two."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    assert count_jobs(lambda: materialize(_small_table(spark))) == 1
+    assert sc.getCheckpointDir() is None
+    ckpt = request.getfixturevalue("reliable_checkpoint")
+    assert count_jobs(lambda: materialize(_small_table(spark))) == 1
+    assert any(p.name.startswith("part-") for p in ckpt.rglob("*"))
 
 
 @pytest.mark.slow  # round-14 test split: heavy planted-fixture run; in the full-suite invocation
-def test_near_dup_pairs_durable_strategy(spark, sf_dir, monkeypatch):
-    """The dedup pipeline runs identically under the durable strategy
-    (reliable checkpoint) — the one-config cluster hardening switch."""
+def test_near_dup_pairs_durable_strategy(spark, sf_dir, request):
+    """The dedup pipeline returns the same pairs under a reliable
+    checkpoint as under a local one."""
     from json2hbase_spark.operators.dedup import near_dup_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -181,7 +194,7 @@ def test_near_dup_pairs_durable_strategy(spark, sf_dir, monkeypatch):
         (r.doc_a, r.doc_b)
         for r in near_dup_pairs(docs, "doc_id", "text", threshold=0.3).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "checkpoint")
+    request.getfixturevalue("reliable_checkpoint")
     durable = {
         (r.doc_a, r.doc_b)
         for r in near_dup_pairs(docs, "doc_id", "text", threshold=0.3).collect()

@@ -492,12 +492,10 @@ def test_j108_clusters_are_true_components(spark):
     = min member, membership = transitive closure, pair/doc tallies
     reconcile exactly."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
     pairs = registry.QUERIES["j103_winnow_pairs"](spark, SF).collect()
-    with materialization_scope():
-        clusters = registry.QUERIES["j108_winnow_clusters"](spark, SF).collect()
+    clusters = registry.QUERIES["j108_winnow_clusters"](spark, SF).collect()
     # ground truth: BFS transitive closure in Python
     adj: dict[int, set[int]] = {}
     for r in pairs:
@@ -538,7 +536,6 @@ def test_j108_constructed_component(spark, tmp_path):
     directly) must resolve into ONE cluster of 3 docs with 2 pairs —
     the transitive resolution j103's pair rows can't express."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
     seg1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo"
@@ -557,8 +554,7 @@ def test_j108_constructed_component(spark, tmp_path):
     )
     d = str(tmp_path / "chainfix")
     df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    with materialization_scope():
-        rows = registry.QUERIES["j108_winnow_clusters"](spark, d).collect()
+    rows = registry.QUERIES["j108_winnow_clusters"](spark, d).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r.cluster == 0 and r.n_docs == 3 and r.n_pairs == 2
@@ -671,7 +667,6 @@ def test_j120_kcenter_matches_python_truth(spark):
     curve."""
     from json2hbase_spark import registry
     from json2hbase_spark.io import load
-    from json2hbase_spark.materialize import materialization_scope
     from json2hbase_spark.plans.selection_queries import KC_SCALE, KCENTER_K
 
     registry.load_all_query_modules()
@@ -693,11 +688,10 @@ def test_j120_kcenter_matches_python_truth(spark):
                 best = (key, vid, d)
         chosen.append((k, best[1], best[2]))
         cent.append(pts[best[1]])
-    with materialization_scope():
-        rows = sorted(
-            registry.QUERIES["j120_kcenter_coreset"](spark, SF).collect(),
-            key=lambda r: r.center_order,
-        )
+    rows = sorted(
+        registry.QUERIES["j120_kcenter_coreset"](spark, SF).collect(),
+        key=lambda r: r.center_order,
+    )
     assert [(r.center_order, r.vec_id, r.sq_dist) for r in rows] == chosen
     dists = [r.sq_dist for r in rows[1:]]
     assert dists == sorted(dists, reverse=True)
@@ -710,7 +704,6 @@ def test_j121_power_iteration_matches_python_truth(spark):
     numpy's top eigenvector of the same integer covariance."""
     from json2hbase_spark import registry
     from json2hbase_spark.io import load
-    from json2hbase_spark.materialize import materialization_scope
     from json2hbase_spark.plans.selection_queries import (
         COV_SCALE,
         MATPOW_SQUARINGS,
@@ -758,8 +751,7 @@ def test_j121_power_iteration_matches_python_truth(spark):
     sg = 1 if v[top] >= 0 else -1
     want = {i: v[i] * sg for i in range(d)}
     w_max = max(abs(x) for x in w)
-    with materialization_scope():
-        rows = registry.QUERIES["j121_embed_top_eigvec"](spark, SF).collect()
+    rows = registry.QUERIES["j121_embed_top_eigvec"](spark, SF).collect()
     assert len(rows) == d
     assert {r.dim: r.v for r in rows} == want
     assert all(r.w_max == w_max for r in rows)
@@ -779,7 +771,6 @@ def test_j122_share_top_is_projection_energy(spark):
     shares agree to first order)."""
     from json2hbase_spark import registry
     from json2hbase_spark.io import load
-    from json2hbase_spark.materialize import materialization_scope
     from json2hbase_spark.plans.selection_queries import COV_SCALE
 
     registry.load_all_query_modules()
@@ -797,11 +788,10 @@ def test_j122_share_top_is_projection_energy(spark):
     cov = n * (Q.T @ Q) - np.outer(Q.sum(0), Q.sum(0))
     _, evecs = np.linalg.eigh(cov)
     v = evecs[:, -1]
-    with materialization_scope():
-        out = {
-            r.label: r
-            for r in registry.QUERIES["j122_common_dir_removal"](spark, SF).collect()
-        }
+    out = {
+        r.label: r
+        for r in registry.QUERIES["j122_common_dir_removal"](spark, SF).collect()
+    }
     assert sum(r.n_vecs for r in out.values()) == n
     for lab, r in out.items():
         mask = labels == lab
@@ -818,20 +808,18 @@ def test_j123_coverage_reconciles_with_selection(spark):
     (the defining property of farthest-point traversal)."""
     from json2hbase_spark import registry
     from json2hbase_spark.io import load
-    from json2hbase_spark.materialize import materialization_scope
     from json2hbase_spark.plans.selection_queries import KCENTER_K
 
     registry.load_all_query_modules()
     n = load(spark, SF, "embeddings").count()
-    with materialization_scope():
-        picks = sorted(
-            registry.QUERIES["j120_kcenter_coreset"](spark, SF).collect(),
-            key=lambda r: r.center_order,
-        )
-        cells = {
-            r.center_order: r
-            for r in registry.QUERIES["j123_coreset_coverage"](spark, SF).collect()
-        }
+    picks = sorted(
+        registry.QUERIES["j120_kcenter_coreset"](spark, SF).collect(),
+        key=lambda r: r.center_order,
+    )
+    cells = {
+        r.center_order: r
+        for r in registry.QUERIES["j123_coreset_coverage"](spark, SF).collect()
+    }
     assert set(cells) == set(range(KCENTER_K))
     assert sum(r.n_assigned for r in cells.values()) == n
     for r in cells.values():

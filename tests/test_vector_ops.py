@@ -196,18 +196,16 @@ def test_j139_raw_side_consistent_with_j130(spark):
     """j139's recall_raw column IS j130's pipeline — the two must
     agree per query on the shared fixture."""
     from json2hbase_spark import registry
-    from json2hbase_spark.materialize import materialization_scope
 
     registry.load_all_query_modules()
-    with materialization_scope():
-        j130 = {
-            r.qid: r.recall
-            for r in registry.QUERIES["j130_pq_adc_recall"](spark, SF).collect()
-        }
-        j139 = {
-            r.qid: r
-            for r in registry.QUERIES["j139_whiten_pq_recall"](spark, SF).collect()
-        }
+    j130 = {
+        r.qid: r.recall
+        for r in registry.QUERIES["j130_pq_adc_recall"](spark, SF).collect()
+    }
+    j139 = {
+        r.qid: r
+        for r in registry.QUERIES["j139_whiten_pq_recall"](spark, SF).collect()
+    }
     assert set(j130) == set(j139)
     for qid, r in j139.items():
         assert r.recall_raw == j130[qid], (qid, r, j130[qid])

@@ -107,19 +107,9 @@ def compute_all() -> dict[str, dict[str, int]]:
     # re-resolves to the canonical plan, a genuine drift reproduces
     # and is reported. All-green runs stay fast; a mass drift
     # degrades to the sequential sweep, which is today's behavior.
-    # cleanup_materialized() is not concurrency-safe under the
-    # 'persist' strategy (it unpersists OTHER queries' live tables),
-    # so that env stays fully sequential.
-    from json2hbase_spark.materialize import strategy_from_env
-
-    names = sorted(registry.QUERIES)
-    if strategy_from_env() == "persist":
-        for name in names:
-            out[name] = one(name)
-            cleanup_materialized()
-        return out
     from concurrent.futures import ThreadPoolExecutor
 
+    names = sorted(registry.QUERIES)
     with ThreadPoolExecutor(max_workers=8) as pool:
         for name, fp in zip(names, pool.map(one, names)):
             out[name] = fp
