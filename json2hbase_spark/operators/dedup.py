@@ -216,10 +216,58 @@ def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
 
 
 def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two string sets."""
+    """Exact Jaccard similarity of two string sets without repeats
+    (``char_shingles`` output): |a∩b| / (|a|+|b|−|a∩b|), 0.0 when both
+    are empty; the engine's one spelling of the formula. On distinct
+    arrays |a|+|b|−|a∩b| is the union size, so no ``array_union`` is
+    built, and the guard reads |a|+|b|, which is 0 exactly when the
+    union is, so a row computes the intersection twice, not three
+    times."""
     inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+    sizes = F.size(a) + F.size(b)
+    return F.when(sizes > 0, inter.cast("double") / (sizes - inter)).otherwise(
+        F.lit(0.0)
+    )
+
+
+def block_shingles(df: DataFrame) -> DataFrame:
+    """Shingle table of the blocked exact near-dup step: for each row
+    of ``df`` (``doc_id`` and normalized text ``norm``) at least 8
+    chars long, ``(doc_id, block, shingles)`` with the first 40 chars
+    as the block key and the distinct 8-char shingles. Materialized:
+    the block self-join reads it on both sides, and HOF-lambda plans
+    defeat ReuseExchange, so unmaterialized it shingles the corpus
+    twice (j2v: 5.1 s → 3.1 s steady at sf0.1)."""
+    return materialize(
+        df.filter(F.length("norm") >= 8).select(
+            "doc_id",
+            F.substring("norm", 1, 40).alias("block"),
+            char_shingles(F.col("norm"), 8).alias("shingles"),
+        )
+    )
+
+
+def block_pairs(sh: DataFrame, threshold: float) -> DataFrame:
+    """Blocked exact-Jaccard self-join over a ``(doc_id, block,
+    shingles)`` table (``block_shingles``): every pair in one block
+    with ``doc_a < doc_b`` and ``jaccard`` >= ``threshold``. Returns
+    (doc_a, doc_b, jaccard). No hash function is involved, so the
+    pair set is engine-independent and the DuckDB twin matches it
+    exactly. Work is bounded by the squared block sizes, never all
+    pairs; one boilerplate block is the skew case."""
+    a = sh.select(
+        "block", F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
+    )
+    b = sh.select(
+        F.col("block").alias("block_b"),
+        F.col("doc_id").alias("doc_b"),
+        F.col("shingles").alias("sh_b"),
+    )
+    return (
+        a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
+        .select("doc_a", "doc_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def near_dup_pairs(

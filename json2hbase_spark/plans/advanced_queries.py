@@ -14,9 +14,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from json2hbase_spark.functions.exact import QCENT_AVG
-from json2hbase_spark.io import load, widen
+from json2hbase_spark.io import load
 from json2hbase_spark.materialize import materialize
-from json2hbase_spark.operators.dedup import char_shingles, normalize_text
+from json2hbase_spark.plans.llm_queries import j2v_jaccard_verify
 from json2hbase_spark.registry import query
 
 # bounded propagation depth: min-label reaches everything within
@@ -28,34 +28,10 @@ from json2hbase_spark.registry import query
 COMPONENT_HOPS = 3
 
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic near-dup edge set: the same blocked exact-Jaccard
-    construction as j2v (no hash functions → engine-independent)."""
-    docs = load(spark, sf_dir, "documents")
-    normed = widen(docs).select("doc_id", normalize_text(F.col("text")).alias("norm")).filter(
-        F.length("norm") >= 8
-    )
-    sh = normed.select(
-        "doc_id",
-        F.substring("norm", 1, 40).alias("block"),
-        char_shingles(F.col("norm"), 8).alias("shingles"),
-    )
-    # materialized for the same reason as j2v: the self-join's two
-    # sides would otherwise shingle the corpus twice (HOF plans defeat
-    # ReuseExchange)
-    sh = materialize(sh)
-    a = sh.select(F.col("block"), F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(
-        F.col("block").alias("block_b"), F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union
-    return (
-        a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.3)
-        .select("doc_a", "doc_b")
-    )
+    """Deterministic near-dup edge set: j2v's pairs (the blocked
+    exact-Jaccard kernel, ``dedup.block_pairs`` at J >= 0.3) without
+    the score — no hash functions, so engine-independent."""
+    return j2v_jaccard_verify(spark, sf_dir).select("doc_a", "doc_b")
 
 
 DUCK_DUP_EDGES = """

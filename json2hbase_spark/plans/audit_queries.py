@@ -1364,7 +1364,11 @@ def _source_token_budgets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens_exact, tokens_near) under j34's cascade semantics — the
     Spark twin of the _DUCK_BUDGET_PARTS ``budgets`` CTE."""
     from json2hbase_spark.materialize import materialize
-    from json2hbase_spark.operators.dedup import char_shingles, normalize_text
+    from json2hbase_spark.operators.dedup import (
+        block_pairs,
+        block_shingles,
+        normalize_text,
+    )
 
     docs = load(spark, sf_dir, "documents")
     normed = widen(docs).select(
@@ -1385,29 +1389,8 @@ def _source_token_budgets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min_by("n_tokens", "doc_id").alias("n_tokens"),
         )
     )
-    sh = materialize(
-        s1.filter(F.length("norm") >= 8).select(
-            "doc_id",
-            F.substring("norm", 1, 40).alias("block"),
-            char_shingles(F.col("norm"), 8).alias("shingles"),
-        )
-    )
-    a = sh.select(
-        "block", F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    b = sh.select(
-        F.col("block").alias("block_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     dropped = (
-        a.join(
-            b,
-            (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .filter(inter.cast("double") / union >= 0.3)
+        block_pairs(block_shingles(s1), 0.3)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
         .withColumn("_hit", F.lit(1))
@@ -1586,20 +1569,10 @@ def j140_dup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the one-scan quality projection; the rollup is a ≤7-row
     hash agg. At 100 TB: the dedup pass the corpus already runs plus
     one scan — no new corpus-sized shuffle."""
-    from json2hbase_spark.plans.corpus_queries import _md5_minhash_parts
+    from json2hbase_spark.plans.corpus_queries import _md5_dup_pairs
     from json2hbase_spark.plans.llm_queries import j12_quality_score
 
-    sh, cand = _md5_minhash_parts(spark, sf_dir)
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    vp = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(inter.cast("double") / union >= 0.5)
-        .select("doc_a", "doc_b")
-    )
+    _, vp = _md5_dup_pairs(spark, sf_dir)
     # round 13: the unionAll form consumed vp TWICE — each leg re-ran
     # the banded candidate join + Jaccard confirm (the minhash agg
     # chain above is NOT materialized past sh). explode([doc_a,

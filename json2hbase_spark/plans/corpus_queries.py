@@ -1132,25 +1132,35 @@ def j48_dedup_near_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin proving the banding pipeline itself is engine-exact. Same
     scale shape as j2: one explode + wide min-agg (map-side combine),
     O(n·bands) band shuffle, verification only on candidates."""
+    _, pairs = _md5_dup_pairs(spark, sf_dir)
+    return pairs.select("doc_a", "doc_b", F.col("jaccard").alias("jacc"))
+
+
+def _md5_dup_pairs(spark: SparkSession, sf_dir: str):
+    """j48's verified near-dup pairs: the banded md5-MinHash
+    candidates of ``_md5_minhash_parts`` kept where the exact shingle
+    Jaccard (``dedup.jaccard``) is >= 0.5. Returns (sh, pairs): the
+    materialized (doc_id, shingles) table, for callers that score
+    other pairs against it, and (doc_a, doc_b, jaccard)."""
+    from json2hbase_spark.operators.dedup import jaccard
+
     sh, cand = _md5_minhash_parts(spark, sf_dir)
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jacc = inter.cast("double") / union
-    return (
+    pairs = (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn("jacc", jacc)
-        .filter(F.col("jacc") >= 0.5)
-        .select("doc_a", "doc_b", "jacc")
+        .select("doc_a", "doc_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
+        .filter(F.col("jaccard") >= 0.5)
     )
+    return sh, pairs
 
 
 def _md5_minhash_parts(spark: SparkSession, sf_dir: str):
     """Shared md5-MinHash pipeline: returns (sh, cand) — the
     materialized (doc_id, shingles) table and the banded candidate
-    pair set. Used by j48 (verify stage) and j49 (recall eval)."""
+    pair set. Used by ``_md5_dup_pairs`` (verify stage) and j49
+    (recall eval, which reads the unverified candidates)."""
     from json2hbase_spark.operators.dedup import char_shingles, normalize_text
 
     docs = load(spark, sf_dir, "documents")
@@ -1245,15 +1255,16 @@ def _duck_dedup_recall_oracle() -> str:
 def j49_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall eval for banded MinHash dedup (completes the eval-pair
     story j33/j38 built for ANN): the deterministic prefix-blocked
-    exact-Jaccard pairs (j2v semantics, J ≥ 0.5) are ground truth;
-    the md5-family banding candidates (j48's pipeline, shared plan)
-    are the detector; output is per-Jaccard-decile recall. This is
-    the dial an operator tunes bands×rows against — measured
-    ON-ENGINE, hash-matched in both engines because every stage of
-    both the truth and the detector is engine-exact expression math.
+    exact-Jaccard pairs (``dedup.block_pairs`` at J ≥ 0.5) are
+    ground truth; the md5-family banding candidates (j48's pipeline,
+    shared plan) are the detector; output is per-Jaccard-decile
+    recall. This is the dial an operator tunes bands×rows against —
+    measured ON-ENGINE, hash-matched in both engines because every
+    stage of both the truth and the detector is engine-exact
+    expression math.
     At 100 TB the truth set comes from a sampled block audit, same
     plan shape."""
-    from json2hbase_spark.operators.dedup import normalize_text
+    from json2hbase_spark.operators.dedup import block_pairs, normalize_text
 
     sh, cand = _md5_minhash_parts(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
@@ -1263,23 +1274,8 @@ def j49_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = docs.select(
         "doc_id", F.substring(normalize_text(F.col("text")), 1, 40).alias("block")
     )
-    blocked = sh.join(blocks, "doc_id")
-    a = blocked.select(
-        "block", F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    b = blocked.select(
-        F.col("block").alias("block_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jacc = inter.cast("double") / union
-    truth = (
-        a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .withColumn("j", jacc)
-        .filter(F.col("j") >= 0.5)
-        .select("doc_a", "doc_b", "j")
+    truth = block_pairs(sh.join(blocks, "doc_id"), 0.5).select(
+        "doc_a", "doc_b", F.col("jaccard").alias("j")
     )
     found = cand.withColumn("hit", F.lit(1))
     return (
@@ -3085,23 +3081,10 @@ def j101_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     is |sources|² bounded. At 100 TB the matrix costs the same banded
     dedup everyone already runs plus two id-keyed lookups.
     Cites j48 (corpus_queries.py) and SCALE.md's banding linearity."""
-    sh, cand = _md5_minhash_parts(spark, sf_dir)
+    _, vp = _md5_dup_pairs(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jacc = inter.cast("double") / union
-    pairs = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jacc", jacc)
-        .filter(F.col("jacc") >= 0.5)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(F.col("jacc") * 10000).cast("bigint").alias("qj"),
-        )
+    pairs = vp.select(
+        "doc_a", "doc_b", F.floor(F.col("jaccard") * 10000).cast("bigint").alias("qj")
     )
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_1"))
     db = docs.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_2"))
@@ -3277,20 +3260,9 @@ def j117_cross_source_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-iteration checkpoint cadence (SCALE.md, j108's argument)."""
     from json2hbase_spark.plans.advanced_queries import _labels_converged
 
-    sh, cand = _md5_minhash_parts(spark, sf_dir)
+    _, pairs = _md5_dup_pairs(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jacc = inter.cast("double") / union
-    vp = materialize(
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jacc", jacc)
-        .filter(F.col("jacc") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
+    vp = materialize(pairs.select("doc_a", "doc_b"))
     labels = _labels_converged(vp)
     csrc = (
         labels.join(docs.select(F.col("doc_id").alias("node"), "source"), "node")
@@ -3405,21 +3377,15 @@ def j138_lexical_semantic_agreement(spark: SparkSession, sf_dir: str) -> DataFra
     category for the unbroadcastable full outer); per-category agg is
     3 rows. At 100 TB: the two dedup passes the pipeline already
     runs, plus pair-sized bookkeeping."""
+    from json2hbase_spark.operators.dedup import jaccard
     from json2hbase_spark.operators.similarity import l2_norm, lsh_bucket
     from json2hbase_spark.operators.similarity import dot as _dot
     from json2hbase_spark.plans.llm_queries import LSH_PLANES
 
-    sh, cand = _md5_minhash_parts(spark, sf_dir)
+    sh, pairs = _md5_dup_pairs(spark, sf_dir)
+    vp = pairs.select("doc_a", "doc_b", F.lit(1).alias("_lex"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    vp = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(inter.cast("double") / union >= 0.5)
-        .select("doc_a", "doc_b", F.lit(1).alias("_lex"))
-    )
     emb = load(spark, sf_dir, "embeddings")
     bv = materialize(
         widen(emb).select(
@@ -3483,7 +3449,7 @@ def j138_lexical_semantic_agreement(spark: SparkSession, sf_dir: str) -> DataFra
         .select(
             "category",
             F.coalesce(
-                F.floor(inter.cast("double") / union * 10000), F.lit(0)
+                F.floor(jaccard(F.col("sh_a"), F.col("sh_b")) * 10000), F.lit(0)
             )
             .cast("bigint")
             .alias("qj"),

@@ -237,44 +237,24 @@ def j81_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     on real data. Exactness: j^r and (1-j^r)^b are repeated squaring
     (powers of two only — no pow()), per-pair probabilities round(12)
     and sum as DECIMAL so accumulation order cannot drift, one
-    division, round(4). Plan: the pair table builds once (same
-    40-char-block candidate generation as the j20/j26 dup graph, pair
-    count bounded by blocking) and materializes; the four configs are
+    division, round(4). Plan: the pair table builds once (the
+    ``dedup.block_pairs`` kernel of the j20/j26 dup graph, pair count
+    bounded by blocking) and materializes; the four configs are
     four tiny aggregates over it — at 100 TB the calibration runs on
     a corpus sample, the expression tree is unchanged."""
     from json2hbase_spark.io import widen
-    from json2hbase_spark.operators.dedup import char_shingles, normalize_text
+    from json2hbase_spark.operators.dedup import (
+        block_pairs,
+        block_shingles,
+        normalize_text,
+    )
 
     docs = load(spark, sf_dir, "documents")
-    normed = (
-        widen(docs)
-        .select("doc_id", normalize_text(F.col("text")).alias("norm"))
-        .filter(F.length("norm") >= 8)
-    )
-    # shingle table materialized so the self-join's two sides share
-    # ONE shingling pass (HOF plans defeat ReuseExchange — j2v/_dup_
-    # edges convention; without it j81 paid the fold twice: 5.7→~2 s)
-    sh = materialize(
-        normed.select(
-            "doc_id",
-            F.substring("norm", 1, 40).alias("block"),
-            char_shingles(F.col("norm"), 8).alias("shingles"),
-        )
-    )
-    a = sh.select(
-        F.col("block"), F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
-    )
-    b = sh.select(
-        F.col("block").alias("block_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sb"),
-    )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    jacc = inter.cast("double") / (F.size("sa") + F.size("sb") - inter)
+    normed = widen(docs).select("doc_id", normalize_text(F.col("text")).alias("norm"))
     kept = materialize(
-        a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .select(jacc.alias("jacc"))
-        .filter(F.col("jacc") >= BAND_MIN_JACC)
+        block_pairs(block_shingles(normed), BAND_MIN_JACC).select(
+            F.col("jaccard").alias("jacc")
+        )
     )
     parts = []
     for bands, rows in BAND_CONFIGS:

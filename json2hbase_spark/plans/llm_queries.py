@@ -19,6 +19,8 @@ from json2hbase_spark.io import load, widen
 from json2hbase_spark.materialize import materialize
 from json2hbase_spark.operators import multimodal
 from json2hbase_spark.operators.dedup import (
+    block_pairs,
+    block_shingles,
     char_shingles,
     jaccard,
     lsh_bands,
@@ -141,36 +143,12 @@ def j2v_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable exact near-dup step: block on the normalized
     60-char-prefix family (first 40 chars), compute exact shingle
     Jaccard within blocks — validates the verification stage of j2
-    against DuckDB list algebra."""
+    against DuckDB list algebra. The kernel is ``dedup.block_shingles``
+    + ``dedup.block_pairs``, which every blocked exact-Jaccard query
+    shares."""
     docs = load(spark, sf_dir, "documents")
-    normed = widen(docs).select("doc_id", normalize_text(F.col("text")).alias("norm")).filter(
-        F.length("norm") >= 8
-    )
-    sh = normed.select(
-        "doc_id",
-        F.substring("norm", 1, 40).alias("block"),
-        char_shingles(F.col("norm"), 8).alias("shingles"),
-    )
-    # materialize: ReuseExchange can't match HOF-lambda plans, so the
-    # block self-join would otherwise shingle the corpus twice
-    # (5.1s -> 3.1s steady at sf0.1)
-    sh = materialize(sh)
-    a = sh.select(
-        F.col("block"), F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    b = sh.select(
-        F.col("block").alias("block_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union
-    return (
-        a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.3)
-    )
+    normed = widen(docs).select("doc_id", normalize_text(F.col("text")).alias("norm"))
+    return block_pairs(block_shingles(normed), 0.3)
 
 
 @query("j9_minhash_sig")  # rows-only: xxhash64 signatures are Spark-specific
@@ -996,15 +974,8 @@ def j24_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     read pre-bucketed by block so the join co-locates without a
     corpus-wide shuffle."""
     docs = load(spark, sf_dir, "documents")
-    normed = widen(docs).select("doc_id", normalize_text(F.col("text")).alias("norm")).filter(
-        F.length("norm") >= 8
-    )
-    sh = normed.select(
-        "doc_id",
-        F.substring("norm", 1, 40).alias("block"),
-        char_shingles(F.col("norm"), 8).alias("shingles"),
-)
-    sh = materialize(sh)  # one shingle pass serves both slices below
+    normed = widen(docs).select("doc_id", normalize_text(F.col("text")).alias("norm"))
+    sh = block_shingles(normed)  # one shingle pass serves both slices below
     incoming = sh.filter(F.col("doc_id") >= 250).select(
         F.col("block"), F.col("doc_id").alias("new_doc"), F.col("shingles").alias("sh_i")
     )
@@ -1012,9 +983,7 @@ def j24_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("block").alias("block_c"), F.col("doc_id").alias("dup_of"),
         F.col("shingles").alias("sh_c"),
     )
-    inter = F.size(F.array_intersect("sh_i", "sh_c"))
-    union = F.size("sh_i") + F.size("sh_c") - inter
-    jac = inter.cast("double") / union
+    jac = jaccard(F.col("sh_i"), F.col("sh_c"))
     return (
         incoming.join(corpus, F.col("block") == F.col("block_c"))
         .select("new_doc", "dup_of", jac.alias("jaccard"))
@@ -1218,8 +1187,10 @@ def j28_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j29_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance fuzzy dedup: Levenshtein over 80-char normalized
-    prefixes of block-candidate pairs (same 40-char blocking as j2v —
-    never all-pairs; the O(len²) DP only ever runs on candidates).
+    prefixes of block-candidate pairs (the 40-char blocking of
+    ``dedup.block_shingles``, here with its own join because the score
+    is Levenshtein, not Jaccard — never all-pairs; the O(len²) DP only
+    ever runs on candidates).
     Complements Jaccard: catches transposition/typo-level dups that
     shingle overlap scores poorly. Native `levenshtein` in both
     engines → exact integer oracle."""
@@ -1547,8 +1518,9 @@ def j34_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact dedup (keep lowest doc_id per normalized form), then
     near-dup removal among survivors (blocked exact-Jaccard ≥ 0.3,
     drop the higher doc_id of every pair), reported as per-language
-    survivor counts. The near stage uses the deterministic prefix
-    blocking (j2v) so the whole cascade hash-matches DuckDB; swap in
+    survivor counts. The near stage is the deterministic prefix-
+    blocked kernel (``dedup.block_shingles`` + ``dedup.block_pairs``)
+    so the whole cascade hash-matches DuckDB; swap in
     the MinHash-LSH candidate generator (j2) for unblocked corpora at
     scale. Stage shuffles: one window on norm, one block self-join,
     one count agg — no all-pairs anywhere."""
@@ -1567,29 +1539,9 @@ def j34_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays in the fast pre-shuffle shape (measured ~4x cheaper than
     # shingling the window/agg output) and only survivor rows verify
     surv_ids = s1.select("doc_id")
-    sh = (
-        normed.filter(F.length("norm") >= 8)
-        .join(F.broadcast(surv_ids), "doc_id", "left_semi")
-        .select(
-            "doc_id",
-            F.substring("norm", 1, 40).alias("block"),
-            char_shingles(F.col("norm"), 8).alias("shingles"),
-        )
-    )
-    sh = materialize(sh)
-    a = sh.select(
-        F.col("block"), F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    b = sh.select(
-        F.col("block").alias("block_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    sh = block_shingles(normed.join(F.broadcast(surv_ids), "doc_id", "left_semi"))
     dropped = (
-        a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .filter(inter.cast("double") / union >= 0.3)
+        block_pairs(sh, 0.3)
         .select("doc_b")
         .distinct()
         .withColumn("_hit", F.lit(1))

@@ -1344,7 +1344,11 @@ def j131_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     table whose digest ships with it. The only corpus-sized shuffles
     are the ones the standalone ops already pay; the audit rows are
     |langs|-row aggregates on tables already in hand."""
-    from json2hbase_spark.operators.dedup import char_shingles, normalize_text
+    from json2hbase_spark.operators.dedup import (
+        block_pairs,
+        block_shingles,
+        normalize_text,
+    )
 
     docs = load(spark, sf_dir, "documents")
     w = whitespace_tokens(F.col("text"))
@@ -1378,28 +1382,8 @@ def j131_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keep = s2.groupBy("norm").agg(F.min("doc_id").alias("doc_id"))
     s3 = materialize(s2.join(keep, ["norm", "doc_id"], "left_semi"))
-    sh = materialize(
-        s3.filter(F.length("norm") >= 8).select(
-            "doc_id",
-            F.substring("norm", 1, 40).alias("block"),
-            char_shingles(F.col("norm"), 8).alias("shingles"),
-        )
-    )
-    a = sh.select(
-        "block", F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    b = sh.select(
-        F.col("block").alias("block_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     neardrop = (
-        a.join(
-            b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b"))
-        )
-        .filter(inter.cast("double") / union >= 0.3)
+        block_pairs(block_shingles(s3), 0.3)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -1588,7 +1572,11 @@ def j143_gate_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     2×3×|langs| rows. At 100 TB this costs ~one extra dedup pass over
     the corpus vs j131 — exactly the experiment a data team runs ONCE
     before freezing the gate order."""
-    from json2hbase_spark.operators.dedup import char_shingles, normalize_text
+    from json2hbase_spark.operators.dedup import (
+        block_pairs,
+        block_shingles,
+        normalize_text,
+    )
 
     docs = load(spark, sf_dir, "documents")
     w = whitespace_tokens(F.col("text"))
@@ -1641,23 +1629,6 @@ def j143_gate_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def near(df: DataFrame) -> DataFrame:
-        sh = materialize(
-            df.filter(F.length("norm") >= 8).select(
-                "doc_id",
-                F.substring("norm", 1, 40).alias("block"),
-                char_shingles(F.col("norm"), 8).alias("shingles"),
-            )
-        )
-        a = sh.select(
-            "block", F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-        )
-        b = sh.select(
-            F.col("block").alias("block_b"),
-            F.col("doc_id").alias("doc_b"),
-            F.col("shingles").alias("sh_b"),
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
         # round 13 second pass: materialize the TINY drop list (≤ dup
         # candidates), not the full anti-join survivor table — the
         # survivor copy rewrote the whole stage to storage for one or
@@ -1665,12 +1636,7 @@ def j143_gate_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # entirely in `drop`. Consumers re-run only a scan of the
         # already-materialized df side + a broadcast lookup.
         drop = materialize(
-            a.join(
-                b,
-                (F.col("block") == F.col("block_b"))
-                & (F.col("doc_a") < F.col("doc_b")),
-            )
-            .filter(inter.cast("double") / union >= 0.3)
+            block_pairs(block_shingles(df), 0.3)
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()
         )

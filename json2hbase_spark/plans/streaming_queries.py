@@ -2140,7 +2140,7 @@ def i33_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only band positives — exactly the batch j48 cost model
     applied incrementally."""
     from json2hbase_spark.io import load_table_stream, widen
-    from json2hbase_spark.operators.dedup import char_shingles, normalize_text
+    from json2hbase_spark.operators.dedup import char_shingles, jaccard, normalize_text
 
     docs = load(spark, sf_dir, "documents")
     corpus = (
@@ -2220,10 +2220,8 @@ def i33_stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             confirm = cand.join(
                 arr_sh.select("doc_id", F.col("shingles").alias("sh_s")), "doc_id"
             ).join(F.broadcast(static_sh), "corpus_doc")
-            inter = F.size(F.array_intersect("sh_s", "sh_c"))
-            union = F.size("sh_s") + F.size("sh_c") - inter
             (
-                confirm.withColumn("jacc", inter.cast("double") / union)
+                confirm.withColumn("jacc", jaccard(F.col("sh_s"), F.col("sh_c")))
                 .filter(F.col("jacc") >= 0.5)
                 .select("doc_id")
                 .dropDuplicates(["doc_id"])

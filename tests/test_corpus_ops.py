@@ -1243,12 +1243,25 @@ def test_pagerank_driver_path_matches_spark_path(spark, request):
     assert max(rows, key=lambda r: r.pr).node == _ID
 
 
+def _jobs_of(spark, sf_dir, count_jobs, name):
+    """Jobs ``name`` launches when built and collected at local[4],
+    with every fixture schema already read."""
+    from json2hbase_spark import registry
+    from json2hbase_spark.io import parquet_schema
+
+    registry.load_all_query_modules()
+    for path in glob.glob(f"{sf_dir}/*.parquet"):
+        parquet_schema(spark, path)
+    return count_jobs(lambda: registry.QUERIES[name](spark, sf_dir).collect())
+
+
 # Jobs of each label-propagation query, built and collected at local[4]
-# with the fixture schemas already read, as measured (j107 reads 20 on
-# a repeat in one session). materialize's size hint makes the joins
-# against small materialized tables broadcast joins without a job; the
-# exact-count gate it replaced ran two jobs per propagation, and the
-# sort-merge joins it left in j107 and j117 ran more.
+# with the fixture schemas already read, as measured (j107 reads 20 or
+# 21: AQE plans a ninth broadcast stage in its split chain, or not).
+# materialize's size hint makes the joins against small materialized
+# tables broadcast joins without a job; the exact-count gate it
+# replaced ran two jobs per propagation, and the sort-merge joins it
+# left in j107 and j117 ran more.
 LABEL_CHAIN_JOBS = {
     "j107_cluster_safe_split": 21,
     "j108_winnow_clusters": 51,
@@ -1258,11 +1271,30 @@ LABEL_CHAIN_JOBS = {
 
 @pytest.mark.parametrize("name", sorted(LABEL_CHAIN_JOBS))
 def test_label_chain_job_count(spark, sf_dir, count_jobs, name):
-    from json2hbase_spark import registry
-    from json2hbase_spark.io import parquet_schema
-
-    registry.load_all_query_modules()
-    for path in glob.glob(f"{sf_dir}/*.parquet"):
-        parquet_schema(spark, path)
-    jobs = count_jobs(lambda: registry.QUERIES[name](spark, sf_dir).collect())
+    jobs = _jobs_of(spark, sf_dir, count_jobs, name)
     assert jobs <= LABEL_CHAIN_JOBS[name], jobs
+
+
+# Jobs of each query built on the near-duplicate pair kernel
+# (dedup.block_shingles / block_pairs, corpus_queries._md5_dup_pairs),
+# as measured at sf0.001 and sf0.01 before the copies were merged
+# into it. The kernel runs inside materialize, which plan fingerprints
+# do not see, so a change to it shows here first.
+NEAR_DUP_JOBS = {
+    "j2v_jaccard_verify": 4,
+    "j20_dup_components": 12,
+    "j34_dedup_cascade": 12,
+    "j48_dedup_near_md5": 6,
+    "j49_dedup_recall": 11,
+    "j81_band_tuning": 9,
+    "j101_source_dup_matrix": 8,
+    "j131_corpus_pipeline": 23,
+    "j138_lexical_semantic_agreement": 13,
+    "j140_dup_quality_interaction": 9,
+    "j143_gate_order_audit": 23,
+}
+
+
+@pytest.mark.parametrize("name", sorted(NEAR_DUP_JOBS))
+def test_near_dup_job_count(spark, sf_dir, count_jobs, name):
+    assert _jobs_of(spark, sf_dir, count_jobs, name) == NEAR_DUP_JOBS[name]

@@ -146,6 +146,90 @@ def test_jaccard_empty_sets(spark):
     assert row.j == 0.0 and row.j2 == 0.0
 
 
+def _shingles8(n):
+    return {n[k : k + 8] for k in range(len(n) - 7)}
+
+
+def _jac(a, b):
+    inter = len(a & b)
+    return inter / (len(a) + len(b) - inter)
+
+
+def _block_pairs_reference(docs, t):
+    """Pure-Python twin of ``block_pairs(block_shingles(df), t)``."""
+    sh = {i: (n[:40], _shingles8(n)) for i, n in docs if len(n) >= 8}
+    return {
+        (i, j, _jac(a, b))
+        for i, (blk_a, a) in sh.items()
+        for j, (blk_b, b) in sh.items()
+        if i < j and blk_a == blk_b and _jac(a, b) >= t
+    }
+
+
+def test_block_pairs_matches_reference(spark, count_jobs):
+    """The blocked exact-Jaccard kernel gives a pure-Python reference's
+    pairs, bit for bit, on a small corpus with planted edge cases, and
+    building its shingle table runs one job."""
+    import random
+
+    from json2hbase_spark.operators.dedup import block_pairs, block_shingles
+
+    planted = {
+        # one block: 3 shared shingles of 10, J = 3/10 (kept at 0.3)
+        1: "a" * 40 + "xyABC",
+        2: "a" * 40 + "xyDEFG",
+        # one block: 2 shared shingles of 7, J = 2/7 (dropped)
+        3: "b" * 40 + "xPQ",
+        4: "b" * 40 + "xRST",
+        # shorter than 8 chars: no shingle table row
+        5: "seven!!",
+        6: "seven!!",
+        # 40-char prefixes differ in the last char: J >= 0.3, no pair
+        7: "c" * 39 + "X" + "the same long tail of text",
+        8: "c" * 39 + "Y" + "the same long tail of text",
+    }
+    rng = random.Random(7)
+    heads = ["".join(rng.choice("pq ") for _ in range(40)) for _ in range(4)]
+    docs = list(planted.items()) + [
+        (100 + i, rng.choice(heads) + "".join(rng.choice("pqr ") for _ in range(rng.randint(0, 120))))
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(docs, "doc_id BIGINT, norm STRING")
+
+    assert count_jobs(lambda: block_shingles(df)) == 1
+    sh = block_shingles(df)
+    got = {(r.doc_a, r.doc_b, r.jaccard) for r in block_pairs(sh, 0.3).collect()}
+    want = _block_pairs_reference(docs, 0.3)
+    assert got == want
+    assert 10 < len(got) < len(_block_pairs_reference(docs, 0.0))
+
+    pair_ids = {(x, y) for x, y, _ in got}
+    assert _jac(_shingles8(planted[1]), _shingles8(planted[2])) == 3 / 10
+    assert (1, 2, 0.3) in got
+    assert _jac(_shingles8(planted[3]), _shingles8(planted[4])) == 2 / 7
+    assert (3, 4) not in pair_ids
+    assert not {5, 6} & {r.doc_id for r in sh.collect()}
+    assert _jac(_shingles8(planted[7]), _shingles8(planted[8])) >= 0.3
+    assert (7, 8) not in pair_ids
+    assert all(x < y for x, y in pair_ids)
+
+
+def test_array_intersect_only_in_dedup():
+    """Shingle-set overlap is spelled once, in ``operators/dedup.py``
+    (``jaccard``): a plan module calls the kernel instead of copying
+    the formula."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "json2hbase_spark"
+    hits = [
+        f"{path.relative_to(pkg).as_posix()}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "array_intersect" in line
+    ]
+    assert [h.split(":")[0] for h in hits] == ["operators/dedup.py"], hits
+
+
 def test_normalize_text(spark):
     df = spark.createDataFrame([("  Hello   WORLD\t\nfoo  ",)], "t STRING")
     assert df.select(normalize_text(F.col("t")).alias("n")).first().n == "hello world foo"
