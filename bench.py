@@ -6,6 +6,14 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Execution is forced with the noop sink (full plan runs, nothing
 collected to the driver) — measures engine throughput, not driver
 serialization.
+
+One rerun rule (``steady_run``, BASELINE.md "Methodology"): a query
+whose first run is >= 3 s, or more than 2x its frozen median, is
+re-run up to twice, stopping once a run is under both triggers, and
+the minimum is kept. ``bench_full.json`` holds the same record plus
+every rerun list and, per query, a ``layers`` record of the kept run
+from perfbench's ledger (jobs, stages, tasks, executor time, shuffle
+bytes, driver gap, materialize/io.load calls, build/final split).
 """
 
 from __future__ import annotations
@@ -17,19 +25,74 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
-sys.path.insert(0, str(REPO))
+sys.path[:0] = [str(REPO), str(REPO / "perfbench")]
 
 from json2hbase_spark import registry  # noqa: E402
 from json2hbase_spark.materialize import cleanup_materialized  # noqa: E402
 from json2hbase_spark.session import get_spark  # noqa: E402
+from ledger import Ledger  # noqa: E402
+from tools.bench_compare import frozen_medians  # noqa: E402
 
-registry.load_all_query_modules()
+RERUN_S = 3.0
+RERUN_FACTOR = 2.0
+# the ledger counters a query's ``layers`` record keeps
+LAYER_KEYS = (
+    "spark.jobs", "plans.eager_jobs", "spark.stages", "spark.tasks",
+    "executor.run_s", "executor.cpu_s", "shuffle.read_bytes", "shuffle.write_bytes",
+    "driver.gap_s", "materialize_calls", "io.load_calls",
+)
+
+
+def needs_rerun(t: float, frozen: float | None) -> bool:
+    return t >= RERUN_S or (frozen is not None and t > RERUN_FACTOR * frozen)
+
+
+def steady_run(first: tuple, frozen: float | None, rerun) -> tuple[tuple, list[float]]:
+    """The rerun rule. ``first`` and each ``rerun()`` are (seconds,
+    layers) pairs, seconds -1.0 for a run that raised. A failed first
+    run is under both triggers, so it is not re-run; a failed rerun
+    ends the reruns and is dropped. Returns the kept (minimum-seconds)
+    pair and the seconds of every run the minimum was taken over."""
+    runs = [first]
+    while len(runs) < 3 and needs_rerun(runs[-1][0], frozen):
+        run = rerun()
+        if run[0] < 0:
+            break
+        runs.append(run)
+    return min(runs, key=lambda r: r[0]), [r[0] for r in runs]
+
+
+def run_query(spark, ledger: Ledger, name: str, sf_dir: str) -> tuple[float, dict]:
+    """Build ``name`` and run it into the noop sink; then, outside the
+    timed window, drop its materialized tables and read its ledger row.
+    Returns (seconds, layers), seconds -1.0 if the query raised."""
+    before = ledger.snapshot()
+    rec = {"t0": time.time()}
+    p0, p1, failed = time.perf_counter(), None, False
+    try:
+        df = registry.QUERIES[name](spark, sf_dir)
+        p1, rec["build_end"] = time.perf_counter(), time.time()
+        df.write.format("noop").mode("overwrite").save()
+    except Exception as exc:  # record failures, keep benching
+        print(f"# bench error {name}: {exc}", file=sys.stderr)
+        failed = True
+    p2, rec["t1"] = time.perf_counter(), time.time()
+    if p1 is None:  # the build raised
+        p1, rec["build_end"] = p2, rec["t1"]
+    cleanup_materialized()  # nudge ContextCleaner for localCheckpoints
+    row = ledger.op_row(rec, before)
+    layers = {k: round(row[k], 3) for k in LAYER_KEYS}
+    layers.update(build_s=round(p1 - p0, 3), final_s=round(p2 - p1, 3))
+    return -1.0 if failed else round(p2 - p0, 3), layers
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    registry.load_all_query_modules()
+    ledger = Ledger()
     spark = get_spark("json2hbase_bench")
     spark.sparkContext.setLogLevel("ERROR")
+    ledger.attach(spark)
 
     # warm the JVM + parquet footers + the expensive one-time costs
     # every steady-state deployment amortizes: whole-stage-codegen
@@ -112,24 +175,16 @@ def main() -> None:
     ):
         registry.QUERIES[warm](spark, warm_dir).write.format("noop").mode("overwrite").save()
 
-    # Host-noise canary (VERDICT r10 #2): a FIXED trivial scan-agg
-    # (orders count+sum — one stage, plan never changes round to
-    # round) re-timed between suite segments. Its spread is recorded
-    # machine-readably in bench_full.json so a suite-wide drift or a
-    # localized burst is MEASURED, not argued from rerun lists:
-    # tools/bench_compare.py annotates gate breaches that co-occur
-    # with canary inflation at nearby run positions.
+    # Host signals, metadata only: nothing reads them to keep or drop
+    # a timing. The scan canary is a FIXED trivial scan-agg (orders
+    # count+sum, one stage, a plan that never changes) timed before
+    # the suite and after every 25th query; it tracks wide-stage
+    # throughput. host_burn, a pure-Python spin loop timed at suite
+    # start and end, tracks the single-core speed that driver planning
+    # and per-key Python stages depend on, which the scan canary does
+    # not see.
     canary_path = os.path.join(sf_dir, "orders.parquet")
 
-    # Single-core host canary (round 14, VERDICT r13 #10/BASELINE.md
-    # host-epoch note): the degradation mode that produced the r13
-    # i6/j159 false breaches is INVISIBLE to the scan canary (wide-
-    # stage throughput unchanged, single-core ~1.6x slower — it hits
-    # driver planning and per-key Python stages). A pure-Python spin
-    # loop timed at suite start and end records that mode machine-
-    # readably next to the run, so a breach in a degraded epoch is
-    # adjudicated from the record. Metadata only — nothing about the
-    # timed region changes.
     def run_burn() -> float:
         best = float("inf")
         for _ in range(3):
@@ -152,253 +207,30 @@ def main() -> None:
     run_canary()  # compile/footer warm — the samples measure the host
     canary: list[dict] = [{"pos": -1, "t": run_canary()}]
 
-    def run_once(name: str) -> float:
-        fn = registry.QUERIES[name]
-        t0 = time.perf_counter()
-        try:
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # record failures, keep benching
-            print(f"# bench error {name}: {exc}", file=sys.stderr)
-            return -1.0
-        finally:
-            cleanup_materialized()  # nudge ContextCleaner for localCheckpoints
-
-    times: dict[str, float] = {}
+    first: dict[str, tuple] = {}
     for i, name in enumerate(sorted(registry.QUERIES)):
-        times[name] = run_once(name)
+        first[name] = run_query(spark, ledger, name, sf_dir)
         if (i + 1) % 25 == 0:
             canary.append({"pos": i, "t": run_canary()})
 
-    # Outlier re-measure: this host shows sporadic multi-second stalls
-    # that land on a RANDOM query each run (observed: d7 19 s then
-    # 1.5 s, f4 7 s then 0.2 s back-to-back — host noise, not plans).
-    # Any query over the threshold gets ONE re-run and keeps the min,
-    # so a single-run bench reports steady-state plan cost instead of
-    # whichever query the hiccup hit. Two triggers: an absolute ≥3 s
-    # (stalls on expensive queries), and >2× the query's own frozen
-    # BASELINE.md median (stalls on cheap sub-3 s queries — exactly
-    # the bench_compare gate criterion, so a stall can't masquerade as
-    # a plan regression in the landed record). Bounded: ~10-20 re-runs
-    # worst case, and genuinely-expensive queries just reproduce their
-    # time. Both timings are kept machine-readably in bench_full.json's
-    # "reruns" field (and logged to stderr) so a genuine intermittent
-    # regression (e.g. occasional spill) stays visible even though the
-    # reported number keeps the min — tools/bench_compare.py flags any
-    # rerun pair that diverges by more than the gate factor (policy
-    # note in BASELINE.md "Methodology").
+    # Reruns come after the whole pass, so a host stall that hit a
+    # query's first run has usually passed by its rerun. A query whose
+    # frozen median cannot be read gets the absolute trigger only.
     try:
-        from tools.bench_compare import frozen_medians
-
         frozen = frozen_medians()
-    except Exception:
+    except (OSError, ValueError):
         frozen = {}
-    def needs_rerun(name: str, t: float) -> bool:
-        return t >= 3.0 or (name in frozen and t > 2.0 * frozen[name])
-
+    times: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     reruns: dict[str, list[float]] = {}
-
-    # First-time queries (no frozen median yet) get the full
-    # median-of-3 treatment unconditionally: the relative >2×-frozen
-    # trigger can't fire for them, so a sub-3 s host stall would land
-    # as the query's "steady-state" time and freeze a too-high median
-    # next round (ADVICE r7). Median (not min) matches the
-    # freeze_medians policy for first-time baselines.
-    for name in sorted(set(times) - set(frozen)):
-        if times[name] < 0:
-            continue
-        runs = [times[name]]
-        for _ in range(2):
-            t = run_once(name)
-            if t < 0:
-                break
-            runs.append(t)
-        if len(runs) == 3:
+    for name, run in first.items():
+        kept, runs = steady_run(
+            run, frozen.get(name), lambda: run_query(spark, ledger, name, sf_dir)
+        )
+        times[name], layers[name] = kept
+        if len(runs) > 1:
             reruns[name] = runs
-            kept = sorted(runs)[1]
-            print(
-                f"# bench first-time median-of-3 {name}: runs={runs} kept={kept}",
-                file=sys.stderr,
-            )
-            times[name] = kept
-
-    pos0 = {n: i for i, n in enumerate(sorted(times))}
-    for name in [n for n, t in times.items() if needs_rerun(n, t) and n not in reruns]:
-        runs = [times[name]]
-        # up to two re-runs, stopping early once under both triggers —
-        # a genuinely-expensive query reproduces its time on the first
-        # re-run and stops; a query a host stall hit TWICE (observed:
-        # a20 7.6 s then 4.8 s, isolated median 1.2 s) gets one more
-        # chance instead of landing a false regression in the record
-        for _ in range(2):
-            t = run_once(name)
-            if t < 0:
-                break
-            runs.append(t)
-            if not needs_rerun(name, t):
-                break
-        kept = min(runs)
-        reruns[name] = runs
-        print(
-            f"# bench re-measure {name}: runs={runs} kept={kept}",
-            file=sys.stderr,
-        )
-        times[name] = kept
-        # sample the canary right where a potential breach is being
-        # adjudicated — bench_compare reads co-occurrence directly
-        canary.append({"pos": pos0.get(name, -1), "t": run_canary()})
-
-    # Host-burst SEGMENT defense (VERDICT r8): three rounds running,
-    # sustained multi-second load bursts have hit a contiguous stretch
-    # of the alphabetical run order (r8: j103..j108 all diverged
-    # ×2.5-3.6 across their own immediate reruns, landing two false
-    # bench-gate breaches). Immediate reruns don't help when the burst
-    # outlives them — so when ≥3 divergent-rerun queries land within a
-    # short span of the run order, treat it as a host burst: cool down
-    # once, then give every divergent query in that span ONE more run
-    # and keep the min. Bounded (one sleep, ≤ len(segment) extra runs)
-    # and inert on a clean host (divergence >factor across a query's
-    # own reruns is noise by definition — a plan regression reproduces
-    # its time).
-    order = sorted(times)
-    pos = pos0
-    divergent = sorted(
-        (
-            n
-            for n, runs in reruns.items()
-            if len(runs) >= 2 and min(runs) > 0 and max(runs) / min(runs) > 2.0
-        ),
-        key=pos.get,
-    )
-    segments: list[list[str]] = []
-    cur: list[str] = []
-    for n in divergent:
-        if cur and pos[n] - pos[cur[-1]] > 5:
-            segments.append(cur)
-            cur = []
-        cur.append(n)
-    if cur:
-        segments.append(cur)
-    burst = [n for seg in segments if len(seg) >= 3 for n in seg]
-    if burst:
-        print(
-            f"# bench host-burst segment detected: {burst} — 30 s cool-down,"
-            " one extra run each",
-            file=sys.stderr,
-        )
-        time.sleep(30)
-        for name in burst:
-            t = run_once(name)
-            if t < 0:
-                continue
-            reruns[name].append(t)
-            if name in frozen:
-                # frozen queries follow the documented min-keep rerun
-                # policy (steady state vs a frozen median)
-                kept = min(times[name], t)
-                policy = "min"
-            else:
-                # first-time queries must land a MEDIAN (that value
-                # becomes next round's frozen baseline — keeping a min
-                # here would freeze a min under the 'median kept
-                # (first-time)' label, ADVICE r9): recompute over ALL
-                # recorded runs including the post-burst one
-                import statistics
-
-                kept = round(statistics.median(reruns[name]), 3)
-                policy = "median"
-            print(
-                f"# bench post-burst re-measure {name}: {t} kept={kept}"
-                f" ({policy})",
-                file=sys.stderr,
-            )
-            times[name] = kept
-
-    # In-line breach adjudication (VERDICT r11 #7): any query whose
-    # LANDED time still breaches the 2x gate after reruns gets a canary
-    # sample taken at this exact moment plus a machine-readable verdict
-    # against the FROZEN canary reference in BASELINE.md — so
-    # bench_compare (and the judge) read the host-state evidence from
-    # the record itself, with zero prose adjudication.
-    try:
-        from tools.bench_compare import frozen_canary_floor
-
-        canary_ref = frozen_canary_floor()
-    except Exception:
-        canary_ref = 0.0
-    breaches: list[dict] = []
-    for name, t in sorted(times.items()):
-        f = frozen.get(name)
-        if f is None or t <= 2.0 * f or t <= 1.0:
-            continue
-        ct = run_canary()
-        # settle-time samples are tagged so position-proximity logic
-        # (the in-run `near` window below and bench_compare's
-        # canary_note) never mistakes an adjudication-time burst for
-        # in-run co-occurrence at this query's original position
-        # (ADVICE r12 #2).
-        canary.append({"pos": pos0.get(name, -1), "t": ct, "settle": True})
-        ratio = ct / canary_ref if canary_ref > 0 else 0.0
-        # BOTH host-state signals go into the record (round-12
-        # adjudication finding): the settle-time sample above can read
-        # clean when a burst covered the query's run AND rerun but
-        # ended before adjudication; the IN-RUN signal is the max
-        # canary sample near the query's run position. If either is
-        # inflated, the breach is noise-suspect — the nearby signal
-        # wins a disagreement, and an isolated profile settles it.
-        qpos = pos0.get(name, -1)
-        near = [
-            c["t"]
-            for c in canary
-            if not c.get("settle")
-            and c["pos"] >= 0
-            and abs(c["pos"] - qpos) <= 25
-        ]
-        near_ratio = (
-            max(near) / canary_ref if near and canary_ref > 0 else 0.0
-        )
-        if canary_ref <= 0:
-            # no frozen canary reference (BASELINE.md line missing or
-            # unparsable): ratio/near_ratio are 0.0 by construction,
-            # which must NOT fall through to the clean-host wording —
-            # no host-state adjudication actually happened (ADVICE
-            # r12 #1).
-            verdict = (
-                "no frozen canary reference — unadjudicated; freeze a"
-                " canary floor in BASELINE.md and profile isolated"
-            )
-        elif ratio > 1.5:
-            verdict = "host noise suspected (canary inflated at settle time)"
-        elif near_ratio > 1.5:
-            verdict = (
-                "host noise suspected (in-run canary inflated near this"
-                " position; settle-time clean — burst ended before"
-                " adjudication)"
-            )
-        else:
-            verdict = (
-                "canary at reference — plan cost is likely real;"
-                " profile isolated"
-            )
-        breaches.append(
-            {
-                "name": name,
-                "t": t,
-                "frozen": f,
-                "ratio": round(t / f, 2),
-                "canary_t": ct,
-                "canary_vs_ref": round(ratio, 2),
-                "canary_near_vs_ref": round(near_ratio, 2),
-                "verdict": verdict,
-            }
-        )
-        print(
-            f"# bench gate-breach {name}: {t}s vs frozen {f}s — canary"
-            f" {ct}s (x{ratio:.1f} settle, x{near_ratio:.1f} in-run)"
-            f" -> {verdict}",
-            file=sys.stderr,
-        )
+            print(f"# bench re-measure {name}: runs={runs} kept={kept[0]}", file=sys.stderr)
 
     total = round(sum(t for t in times.values() if t >= 0), 3)
     payload = {
@@ -408,15 +240,15 @@ def main() -> None:
         "queries": times,
         "reruns": reruns,
         "canary": canary,
-        "breaches": breaches,
         "host_burn": {"start": burn_start, "end": run_burn()},
         "sf": sf_dir,
     }
-    # the driver's BENCH_r{N}.json keeps only a truncated stdout tail;
-    # also write the full per-query record to the repo so history
-    # survives machine-readably
+    # the driver's BENCH_r{N}.json keeps only stdout; bench_full.json
+    # in the checkout also keeps every query's layers record
     try:
-        (REPO / "bench_full.json").write_text(json.dumps(payload, indent=1) + "\n")
+        (REPO / "bench_full.json").write_text(
+            json.dumps({**payload, "layers": layers}, indent=1) + "\n"
+        )
     except OSError:
         pass
     print(json.dumps(payload))

@@ -42,17 +42,6 @@ def dec_sum(col: str, p: int = 12, s: int = 2) -> str:
     return f"CAST(SUM(CAST({col} AS DECIMAL({p},{s}))) AS DOUBLE)"
 
 
-def dec_avg(col: str, p: int = 12, s: int = 2) -> str:
-    """Exact-sum average: decimal sum cast to double, divided by count —
-    bit-identical in any engine/order (unlike native AVG)."""
-    return f"CAST(SUM(CAST({col} AS DECIMAL({p},{s}))) AS DOUBLE) / COUNT({col})"
-
-
-def dec_win_sum(col: str, over: str, p: int = 12, s: int = 2) -> str:
-    """Exact windowed running sum as DOUBLE."""
-    return f"CAST(SUM(CAST({col} AS DECIMAL({p},{s}))) OVER {over} AS DOUBLE)"
-
-
 def e(sql: str, alias: str) -> Column:
     """Spark-side column from the shared SQL fragment."""
     return F.expr(sql).alias(alias)

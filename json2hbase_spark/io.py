@@ -209,10 +209,6 @@ def _staged_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.readStream.schema(raw_schema).parquet(stage)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, only: tuple[str, ...] | None = None
 ) -> None:

@@ -102,6 +102,17 @@ def quality_features(col: Column) -> dict[str, Column]:
     }
 
 
+def quality_score(feats: dict[str, Column]) -> Column:
+    """The heuristic document quality score over ``quality_features``:
+    round(ln(1 + n_tokens) * (1 - digit_ratio) * (0.5 + stopword_ratio), 4)."""
+    return F.round(
+        F.log(1 + feats["n_tokens"])
+        * (1.0 - feats["digit_ratio"])
+        * (0.5 + feats["stopword_ratio"]),
+        4,
+    )
+
+
 def fingerprint(col: Column, k: int = 8) -> Column:
     """Winnowing-style document fingerprint: lexicographic min of the
     md5 hashes of the k-gram shingles (stable under reordering-free

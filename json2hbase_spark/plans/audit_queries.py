@@ -420,15 +420,10 @@ def j113_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded shuffle, fan-out factor is the constant
     {len(GATE_THRESHOLDS)}."""
     docs = load(spark, sf_dir, "documents")
-    from json2hbase_spark.operators.text import quality_features
+    from json2hbase_spark.operators.text import quality_features, quality_score
 
     feats = quality_features(F.col("text"))
-    quality = F.round(
-        F.log(1 + feats["n_tokens"])
-        * (1.0 - feats["digit_ratio"])
-        * (0.5 + feats["stopword_ratio"]),
-        4,
-    )
+    quality = quality_score(feats)
     f = widen(docs).select(
         feats["n_tokens"].cast("bigint").alias("n_tok"), quality.alias("quality")
     )
@@ -532,17 +527,12 @@ def j114_quality_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection (no UDF) into ONE partial-combined hash agg on source
     — j110's scan-bound shape; at 100 TB this audit is free relative
     to either gate it compares."""
-    from json2hbase_spark.operators.text import quality_features
+    from json2hbase_spark.operators.text import quality_features, quality_score
     from json2hbase_spark.plans.corpus_queries import quality_lr_score
 
     docs = load(spark, sf_dir, "documents")
     feats = quality_features(F.col("text"))
-    h_quality = F.round(
-        F.log(1 + feats["n_tokens"])
-        * (1.0 - feats["digit_ratio"])
-        * (0.5 + feats["stopword_ratio"]),
-        4,
-    )
+    h_quality = quality_score(feats)
     h_keep = h_quality >= H_GATE
     m_keep = quality_lr_score(F.col("text")) >= 0.0
     g = widen(docs).select(

@@ -1083,15 +1083,10 @@ def j91_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution (skew costs parallelism, never correctness). Scoring
     itself is one narrow map pass (j12's expressions)."""
     docs = load(spark, sf_dir, "documents")
-    from json2hbase_spark.operators.text import quality_features
+    from json2hbase_spark.operators.text import quality_features, quality_score
 
     feats = quality_features(F.col("text"))
-    quality = F.round(
-        F.log(1 + feats["n_tokens"])
-        * (1.0 - feats["digit_ratio"])
-        * (0.5 + feats["stopword_ratio"]),
-        4,
-    )
+    quality = quality_score(feats)
     scored = docs.select(
         "doc_id",
         feats["n_tokens"].cast("bigint").alias("n_tokens"),

@@ -96,15 +96,10 @@ def j94_source_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the per-source order — identical output to the plain window the
     oracle runs."""
     docs = load(spark, sf_dir, "documents")
-    from json2hbase_spark.operators.text import quality_features
+    from json2hbase_spark.operators.text import quality_features, quality_score
 
     feats = quality_features(F.col("text"))
-    quality = F.round(
-        F.log(1 + feats["n_tokens"])
-        * (1.0 - feats["digit_ratio"])
-        * (0.5 + feats["stopword_ratio"]),
-        4,
-    )
+    quality = quality_score(feats)
     scored = docs.select(
         "doc_id",
         "source",
@@ -1030,16 +1025,11 @@ def j105_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashpartitioning(bucket) of (doc_id, band, 16-byte key) metadata —
     the operators/prefix.py contract, ×10-probed linear."""
     from json2hbase_spark.operators.prefix import bucketed_cumsum, hex_prefix_bucket
-    from json2hbase_spark.operators.text import quality_features
+    from json2hbase_spark.operators.text import quality_features, quality_score
 
     docs = load(spark, sf_dir, "documents")
     feats = quality_features(F.col("text"))
-    quality = F.round(
-        F.log(1 + feats["n_tokens"])
-        * (1.0 - feats["digit_ratio"])
-        * (0.5 + feats["stopword_ratio"]),
-        4,
-    )
+    quality = quality_score(feats)
     banded = docs.select(
         "doc_id",
         quality.alias("quality"),
@@ -1124,15 +1114,10 @@ def d16_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the few-large-groups regime handled the j94 way. The oracle runs
     the plain windows; outputs are identical by the prefix-sum
     contract (operators/prefix.py)."""
-    from json2hbase_spark.operators.text import quality_features
+    from json2hbase_spark.operators.text import quality_features, quality_score
 
     feats = quality_features(F.col("text"))
-    quality = F.round(
-        F.log(1 + feats["n_tokens"])
-        * (1.0 - feats["digit_ratio"])
-        * (0.5 + feats["stopword_ratio"]),
-        4,
-    )
+    quality = quality_score(feats)
     docs = load(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",

@@ -1777,17 +1777,12 @@ def i30_stream_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny table. At 100 TB of stream: per-batch work is scan-bound,
     the shuffle carries |thresholds|+1 partial rows per partition."""
     from json2hbase_spark.io import load_table_stream
-    from json2hbase_spark.operators.text import quality_features
+    from json2hbase_spark.operators.text import quality_features, quality_score
     from json2hbase_spark.plans.audit_queries import GATE_THRESHOLDS
 
     stream = load_table_stream(spark, sf_dir, "documents")
     feats = quality_features(F.col("text"))
-    quality = F.round(
-        F.log(1 + feats["n_tokens"])
-        * (1.0 - feats["digit_ratio"])
-        * (0.5 + feats["stopword_ratio"]),
-        4,
-    )
+    quality = quality_score(feats)
     f = stream.select(
         feats["n_tokens"].cast("bigint").alias("n_tok"), quality.alias("quality")
     )

@@ -1279,10 +1279,15 @@ def test_label_chain_job_count(spark, sf_dir, count_jobs, name):
 # (dedup.block_shingles / block_pairs, corpus_queries._md5_dup_pairs),
 # as measured at sf0.001 and sf0.01 before the copies were merged
 # into it. The kernel runs inside materialize, which plan fingerprints
-# do not see, so a change to it shows here first.
+# do not see, so a change to it shows here first. j20 reads 12 or 13:
+# its two materializations run 2 jobs each on every run, and the
+# variable job is in its returned plan, the 3-hop label chain, where
+# AQE submits 9 or 10 shuffle query stages depending on which stage
+# finishes first (same join strategies either way; 4 jobs with AQE
+# off).
 NEAR_DUP_JOBS = {
     "j2v_jaccard_verify": 4,
-    "j20_dup_components": 12,
+    "j20_dup_components": {12, 13},
     "j34_dedup_cascade": 12,
     "j48_dedup_near_md5": 6,
     "j49_dedup_recall": 11,
@@ -1297,4 +1302,6 @@ NEAR_DUP_JOBS = {
 
 @pytest.mark.parametrize("name", sorted(NEAR_DUP_JOBS))
 def test_near_dup_job_count(spark, sf_dir, count_jobs, name):
-    assert _jobs_of(spark, sf_dir, count_jobs, name) == NEAR_DUP_JOBS[name]
+    pin = NEAR_DUP_JOBS[name]
+    jobs = _jobs_of(spark, sf_dir, count_jobs, name)
+    assert jobs in (pin if isinstance(pin, set) else {pin}), jobs

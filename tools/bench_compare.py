@@ -6,10 +6,12 @@ Parses every `| name | seconds |` cell from BASELINE.md (later tables
 override earlier ones, so each query's LATEST freeze wins), compares
 the given bench run, and prints queries exceeding `factor` x their
 frozen median plus queries with no freeze row at all. Exit code 1 if
-any query exceeds the factor — usable as a pre-commit check after
-perf-sensitive changes. This is the per-query companion to the
-driver's single-number BENCH_r{N}.json: it answers "WHICH plan
-regressed", not just "did the total move".
+any query exceeds the factor or failed — usable as a pre-commit check
+after perf-sensitive changes. SLOW and DIVERGENT lines carry the
+query's snapshot join mix and, for a record that has them, its
+``layers`` counters from the bench run. This is the per-query
+companion to the driver's single-number BENCH_r{N}.json: it answers
+"WHICH plan regressed", not just "did the total move".
 """
 
 from __future__ import annotations
@@ -32,25 +34,15 @@ def frozen_medians() -> dict[str, float]:
     return out
 
 
-def frozen_canary_floor() -> float:
-    """The frozen canary reference from BASELINE.md (0.0 if absent).
-
-    Anchors host-noise adjudication to a recorded healthy-run baseline
-    instead of the current run's own minimum, which a sustained host
-    load episode can inflate uniformly (ADVICE r11)."""
-    txt = (REPO / "BASELINE.md").read_text()
-    m = re.findall(r"Frozen-canary-floor:\s*([0-9.]+)\s*s", txt)
-    return float(m[-1]) if m else 0.0
-
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--bench", default=str(REPO / "bench_full.json"))
     ap.add_argument("--factor", type=float, default=2.0)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     payload = json.loads(Path(args.bench).read_text())
     bench = payload["queries"]
+    layers = payload.get("layers", {})
     frozen = frozen_medians()
 
     # join-strategy context for flagged queries: the committed plan
@@ -63,81 +55,29 @@ def main() -> None:
     except OSError:
         snap = {}
 
-    # host-noise canary annotation (VERDICT r10 #2): bench.py re-times
-    # a fixed trivial scan-agg between suite segments and at each
-    # rerun adjudication. A flagged query whose nearby canary samples
-    # are inflated vs the canary floor is host noise, not a plan
-    # regression — say so machine-readably instead of arguing from
-    # rerun lists.
-    canary = payload.get("canary", [])
-    run_floor = min((c["t"] for c in canary), default=0.0)
-    # adjudicate against the FROZEN reference, not the run's own
-    # minimum: a sustained load episode covering the whole run keeps
-    # every sample near an inflated floor and would self-certify as
-    # "clean" (ADVICE r11). Fall back to the run floor only when no
-    # reference is frozen yet.
-    frozen_floor = frozen_canary_floor()
-    canary_ref = frozen_floor or run_floor
-    run_inflated = frozen_floor > 0 and run_floor > 1.5 * frozen_floor
-    qpos = {n: i for i, n in enumerate(sorted(bench))}
-
-    def canary_note(name: str) -> str:
-        if not canary or canary_ref <= 0:
-            return ""
-        # settle-tagged samples were taken at adjudication time, not
-        # during the run near this position — a burst that starts only
-        # at adjudication must not read as in-run co-occurrence
-        # (ADVICE r12 #2)
-        near = [
-            c
-            for c in canary
-            if not c.get("settle") and abs(c["pos"] - qpos.get(name, -99)) <= 25
-        ]
-        if not near:
-            return ""
-        worst = max(c["t"] / canary_ref for c in near)
-        if worst > 1.5:
-            return (
-                f" [canary x{worst:.1f} vs frozen ref at nearby positions"
-                " — host noise suspected]"
-            )
-        if run_inflated:
-            # the whole run's floor is above the frozen reference: a
-            # locally-quiet canary proves nothing, so never say "clean"
-            return (
-                f" [canary x{worst:.1f} nearby, but run floor"
-                f" {run_floor:.3f}s exceeds 1.5x frozen ref"
-                f" {frozen_floor:.3f}s — run is load-inflated, verdict"
-                " withheld]"
-            )
-        return (
-            f" [canary clean nearby (x{worst:.1f} vs frozen ref) —"
-            " plan cost is real]"
-        )
-
-    def join_mix(name: str) -> str:
+    def context(name: str) -> str:
+        """The plan's join mix and the run's ledger counters: a slow
+        run with the same counters as before points at the host, one
+        with more jobs or shuffle bytes at the plan."""
+        out = ""
         fp = snap.get(name)
-        if not fp:
-            return ""
-        return (
-            f" [snapshot joins: bhj={fp.get('bhj', 0)} smj={fp.get('smj', 0)}"
-            f" exch={fp.get('exchange', 0)}]"
-        )
+        if fp:
+            out += (
+                f" [snapshot joins: bhj={fp.get('bhj', 0)} smj={fp.get('smj', 0)}"
+                f" exch={fp.get('exchange', 0)}]"
+            )
+        if name in layers:
+            out += " [layers " + " ".join(f"{k}={v}" for k, v in layers[name].items()) + "]"
+        return out
 
-    # rerun divergence check: bench.py's reruns dict holds BOTH
-    # policies — re-measured outliers keep the MIN, first-time queries
-    # (no frozen median yet) keep the MEDIAN of 3 — and either can
-    # mask a genuine intermittent cost (recurring spill). Surface any
-    # rerun set whose runs diverge by more than the gate factor,
-    # labeled with which keep-policy applied (ADVICE r8).
+    # bench.py keeps the minimum of a query's reruns, which can mask a
+    # genuine intermittent cost (recurring spill): surface any rerun
+    # set whose runs diverge by more than the gate factor
     for name, runs in sorted(payload.get("reruns", {}).items()):
         if len(runs) >= 2 and min(runs) > 0 and max(runs) / min(runs) > args.factor:
-            policy = "median kept (first-time)" if name not in frozen else "min kept"
             print(
                 f"DIVERGENT  {name}: reruns {runs} differ x{max(runs) / min(runs):.1f}"
-                f" — {policy}; investigate if it recurs across benches"
-                + join_mix(name)
-                + canary_note(name)
+                " — investigate if it recurs across benches" + context(name)
             )
 
     slow, unfrozen, failed = [], [], []
@@ -154,41 +94,9 @@ def main() -> None:
     for name in failed:
         print(f"FAIL  {name}: bench run errored (-1.0 in bench_full.json)")
     for name, t, f, r in sorted(slow, key=lambda x: -x[3]):
-        print(
-            f"SLOW  {name}: {t:.2f}s vs frozen {f}s  (x{r:.1f})"
-            + join_mix(name)
-            + canary_note(name)
-        )
+        print(f"SLOW  {name}: {t:.2f}s vs frozen {f}s  (x{r:.1f})" + context(name))
     for name, t in unfrozen:
         print(f"NOFREEZE  {name}: {t:.2f}s (add a median row to BASELINE.md)")
-    # in-run breach adjudication (round 12): bench.py now samples the
-    # canary at the moment each landed gate breach is final and records
-    # the verdict machine-readably — surface it here so no prose
-    # adjudication is needed
-    for b in payload.get("breaches", []):
-        near = (
-            f", x{b['canary_near_vs_ref']:.1f} in-run"
-            if "canary_near_vs_ref" in b
-            else ""
-        )
-        print(
-            f"BREACH-ADJUDICATED  {b['name']}: kept {b['t']:.2f}s vs frozen"
-            f" {b['frozen']}s (x{b['ratio']:.1f}) — canary {b['canary_t']:.3f}s"
-            f" at settle time (x{b['canary_vs_ref']:.1f} vs frozen ref{near}):"
-            f" {b['verdict']}"
-        )
-    if canary:
-        ts = [c["t"] for c in canary]
-        print(
-            f"canary: {len(ts)} samples floor={min(ts):.3f}s max={max(ts):.3f}s"
-            f" (x{max(ts) / min(ts):.1f} spread)"
-            + (
-                f"; frozen ref {frozen_floor:.3f}s"
-                + (" — RUN LOAD-INFLATED (floor >1.5x ref)" if run_inflated else "")
-                if frozen_floor
-                else ""
-            )
-        )
     n = len(bench)
     print(f"{n - len(slow) - len(unfrozen) - len(failed)} within {args.factor}x "
           f"of freeze, {len(slow)} over, {len(failed)} failed, "

@@ -4,9 +4,11 @@
 
 For each named query: warm once at sf0.001 (codegen/JIT), then N tight
 runs at the target SF with the noop sink, printing every run plus
-min/median. Used to adjudicate bench-gate breaches: a genuine plan
-regression reproduces its time across all N runs on an idle host; a
-host stall shows up as a divergent outlier set.
+min/median and the ledger's layers record of the fastest run. Each run
+goes through bench.py's ``run_query``, so it is timed, cleaned up and
+counted exactly as a bench query is. A genuine plan regression
+reproduces its time across all N runs on an idle host; a host stall
+shows up as a divergent outlier set with unchanged counters.
 """
 
 from __future__ import annotations
@@ -16,17 +18,13 @@ import json
 import os
 import statistics
 import sys
-import time
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parents[1]
-sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from bench import Ledger, run_query  # noqa: E402
 from json2hbase_spark import registry  # noqa: E402
-from json2hbase_spark.materialize import cleanup_materialized  # noqa: E402
 from json2hbase_spark.session import get_spark  # noqa: E402
-
-registry.load_all_query_modules()
 
 
 def main() -> None:
@@ -36,27 +34,25 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    registry.load_all_query_modules()
+    ledger = Ledger()
     spark = get_spark("json2hbase_profile")
     spark.sparkContext.setLogLevel("ERROR")
+    ledger.attach(spark)
     warm_dir = os.path.join(os.path.dirname(args.sf.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = args.sf
 
     out: dict[str, dict] = {}
     for name in args.queries:
-        fn = registry.QUERIES[name]
-        fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        cleanup_materialized()
-        runs: list[float] = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            cleanup_materialized()
+        run_query(spark, ledger, name, warm_dir)
+        results = [run_query(spark, ledger, name, args.sf) for _ in range(args.runs)]
+        runs = [t for t, _ in results]
         out[name] = {
             "runs": runs,
             "min": min(runs),
             "median": round(statistics.median(runs), 3),
+            "layers": min(results, key=lambda r: r[0])[1],
         }
         print(f"# {name}: runs={runs} min={min(runs)} median={out[name]['median']}", file=sys.stderr)
     print(json.dumps(out, indent=1))

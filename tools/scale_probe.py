@@ -233,9 +233,10 @@ def run_suite(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, fl
     """Min of three runs per query — the probe compares ALGORITHMIC
     scaling, so neither first-touch costs (parquet footers, codegen
     for the new path shape) nor this host's sporadic multi-second
-    stalls (see bench.py's re-measure note; a stall that spans both
-    of two runs poisoned four ratios in the round-7 first attempt)
-    may masquerade as data-size terms."""
+    stalls (the reason for bench.py's rerun rule, BASELINE.md
+    "Methodology"; a stall that spans both of two runs poisoned four
+    ratios in the round-7 first attempt) may masquerade as data-size
+    terms."""
     times = {}
     for name in only if only is not None else PROBES:
         best = None
