@@ -31,6 +31,7 @@ from json2hbase_spark import registry  # noqa: E402
 from json2hbase_spark.materialize import cleanup_materialized  # noqa: E402
 from json2hbase_spark.session import get_spark  # noqa: E402
 from ledger import Ledger  # noqa: E402
+from run import host_burn  # noqa: E402
 from tools.bench_compare import frozen_medians  # noqa: E402
 
 RERUN_S = 3.0
@@ -179,23 +180,13 @@ def main() -> None:
     # a timing. The scan canary is a FIXED trivial scan-agg (orders
     # count+sum, one stage, a plan that never changes) timed before
     # the suite and after every 25th query; it tracks wide-stage
-    # throughput. host_burn, a pure-Python spin loop timed at suite
-    # start and end, tracks the single-core speed that driver planning
-    # and per-key Python stages depend on, which the scan canary does
-    # not see.
+    # throughput. host_burn, perfbench's pure-Python spin loop timed
+    # at suite start and end, tracks the single-core speed that driver
+    # planning and per-key Python stages depend on, which the scan
+    # canary does not see.
     canary_path = os.path.join(sf_dir, "orders.parquet")
 
-    def run_burn() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            x = 0
-            for i in range(2_000_000):
-                x += i * i
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 4)
-
-    burn_start = run_burn()
+    burn_start = round(host_burn(), 4)
 
     def run_canary() -> float:
         t0 = time.perf_counter()
@@ -240,7 +231,7 @@ def main() -> None:
         "queries": times,
         "reruns": reruns,
         "canary": canary,
-        "host_burn": {"start": burn_start, "end": run_burn()},
+        "host_burn": {"start": burn_start, "end": round(host_burn(), 4)},
         "sf": sf_dir,
     }
     # the driver's BENCH_r{N}.json keeps only stdout; bench_full.json

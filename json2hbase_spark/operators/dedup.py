@@ -1,13 +1,28 @@
 """Deduplication operators for LLM training-data pipelines
-(SURVEY.md §2 J1/J2/J9; PAPERS.md similarity corpus).
+(SURVEY.md §2 J1/J2/J9/J15; PAPERS.md similarity corpus).
 
-Exact dedup is a hash group-by. Near-dup is the classic
-shingle → MinHash → LSH-banding pipeline, built ENTIRELY from native
-Catalyst expressions (higher-order functions + xxhash64) — no Python
-UDFs, so the hot path stays in whole-stage codegen.
+Exact dedup is a hash group-by. Near-dup has two hashed forms and one
+exact one, all built from native Catalyst expressions (xxhash64, bit
+arithmetic, higher-order functions), with no Python UDFs:
+
+- MinHash-LSH (j2, j9): a shingle-occurrence stream
+  (``shingle_stream``), one 64-wide min-aggregate per doc
+  (``minhash_from_stream``), 16 bands of 4 rows (``lsh_bands``), then
+  exact-Jaccard verification of the band-sharing pairs
+  (``near_dup_pairs``).
+- SimHash (j15): one 64-bit vote per doc (``simhash_agg``), 4 bands of
+  16 bits, Hamming distance at most 3 (``simhash_near_pairs``).
+- Blocked exact Jaccard (j2v and the near-dup family):
+  ``block_shingles`` + ``block_pairs``.
+
+Each hashing operator has one form and fixed sizes (the constants
+below). Its expression is SQL text parsed once, so building a plan
+costs a constant number of JVM round trips, not one Py4J ``Column``
+call per hash family or bit (tests/test_llm_ops.py pins them).
 
 Scale analysis (the reason this shape wins at 100 TB):
-- signatures: narrow map, O(docs × shingles × hashes) CPU, no shuffle
+- signatures: a map-side-combined aggregate, O(docs × shingles) hash
+  work; the shuffle carries one signature row per doc
 - banding: explode to bands (×B rows), shuffle on (band, band_hash) —
   O(n·B) shuffled rows instead of the O(n²) crossJoin a naive
   similarity join needs
@@ -22,6 +37,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from json2hbase_spark.materialize import materialize
+
+SHINGLE_K = 8
+NUM_HASHES = 64  # one base-hash pair's rotations span exactly 64 families
+LSH_BANDS = 16
+LSH_ROWS = NUM_HASHES // LSH_BANDS
+SIMHASH_BANDS = 4
+MAX_HAMMING = 3  # < SIMHASH_BANDS: every kept pair shares a band
 
 
 def normalize_text(col: Column) -> Column:
@@ -49,31 +71,6 @@ def char_shingles(col: Column, k: int = 8) -> Column:
         ).otherwise(F.expr("CAST(array() AS array<string>)"))
 
     return F.get(F.transform(F.array(col), shingles_of), 0)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """j9: MinHash signature as array<bigint> — element h is
-    min(xxhash64(h, shingle)) over the shingle set. Seed-mixing via the
-    leading literal gives ``num_hashes`` independent hash families.
-
-    The shingle input is let-bound (single-element ``transform``, see
-    ``char_shingles``) so a computed shingle expression evaluates once
-    per row rather than once per hash family. CAUTION: higher-order
-    functions run interpreted, not in codegen — fully materialized
-    this form costs ~2.5x the explode+min-agg path
-    (``minhash_signatures_agg``), which is the hot-path default;
-    count()-style probes under-measure this form because pruning
-    skips most of the work."""
-
-    def from_sh(s: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(F.transform(s, lambda x: F.xxhash64(F.lit(h), x)))
-                for h in range(num_hashes)
-            ]
-        )
-
-    return F.get(F.transform(F.array(shingles), from_sh), 0)
 
 
 def shingle_stream(df: DataFrame, id_col: str, text_col: str, k: int = 8) -> DataFrame:
@@ -110,93 +107,37 @@ def shingle_stream(df: DataFrame, id_col: str, text_col: str, k: int = 8) -> Dat
     )
 
 
-def minhash_from_stream(
-    stream: DataFrame,
-    id_col: str,
-    s_col: str = "_s",
-    num_hashes: int = 64,
-    chunk: int = 64,
-) -> DataFrame:
-    """Aggregation-form MinHash over a shingle-occurrence stream with
-    two-base-hash family derivation: two xxhash64 evaluations per
+def _family(h: int) -> str:
+    """MinHash family ``h`` of the base-hash pair ``(_b0, _b1)``:
+    ``_b0`` XOR ``_b1`` rotated right by ``h`` (Spark SQL has no
+    ``>>>`` operator, so the rotation is spelled out)."""
+    if h == 0:
+        return "_b0"
+    return f"(_b0 ^ (shiftrightunsigned(_b1, {h}) | shiftleft(_b1, {64 - h})))"
+
+
+def minhash_from_stream(stream: DataFrame, id_col: str) -> DataFrame:
+    """Aggregation-form MinHash over a shingle-occurrence stream
+    ``(id_col, _s)`` (``shingle_stream``'s shape) with two-base-hash family derivation: two xxhash64 evaluations per
     occurrence, family h = h0 XOR rotr(h1, h) — the bitwise analogue
     of Kirsch–Mitzenmacher double hashing (the multiply-add form would
     trip ANSI overflow checks; rotation+XOR is wrap-free and keeps the
-    whole expression in codegen). Then ``num_hashes`` min-aggregates
-    per doc (map-side combine before the shuffle). Versus hashing the
-    string once per family this cuts the per-row string-hash work 32×
-    while preserving the MinHash Jaccard estimator
-    (tests/test_properties.py pins the accuracy bound).
-    Returns (id_col, sig array<bigint>).
-
-    Default is one single-pass ``num_hashes``-wide aggregate: with the
-    bitwise families the generated method stays small enough that no
-    JIT/codegen cliff appears (measured 1×64 ≈ 2×32 first-run AND
-    steady at sf0.1), and one pass reads the stream once. ``chunk``
-    remains for wider signatures: chunked stages join exchange-free
-    (both sides come out of their own groupBy hash-partitioned by
-    ``id_col``)."""
-    # one base-hash PAIR per 64-family block: rotations of a single
-    # pair only span 64 independent mixes, so wider signatures derive
-    # each block from freshly-seeded base hashes (block 0 keeps the
-    # unseeded pair so <=64-hash signatures are unchanged)
-    n_blocks = (num_hashes + 63) // 64
-    base_cols = []
-    for b in range(n_blocks):
-        if b == 0:
-            base_cols += [
-                F.xxhash64(F.col(s_col)).alias("_b0_0"),
-                F.xxhash64(F.lit(1), F.col(s_col)).alias("_b0_1"),
-            ]
-        else:
-            base_cols += [
-                F.xxhash64(F.lit(2 * b), F.col(s_col)).alias(f"_b{b}_0"),
-                F.xxhash64(F.lit(2 * b + 1), F.col(s_col)).alias(f"_b{b}_1"),
-            ]
-    hashed = stream.select(F.col(id_col), *base_cols)
-
-    def family(h: int) -> Column:
-        b, r = divmod(h, 64)
-        h0, h1 = F.col(f"_b{b}_0"), F.col(f"_b{b}_1")
-        if r == 0:
-            return h0
-        rot = F.shiftrightunsigned(h1, r).bitwiseOR(F.shiftleft(h1, 64 - r))
-        return h0.bitwiseXOR(rot)
-
-    parts = []
-    for start in range(0, num_hashes, chunk):
-        hs = range(start, min(start + chunk, num_hashes))
-        parts.append(
-            hashed.groupBy(id_col).agg(
-                *[F.min(family(h)).alias(f"_h{h}") for h in hs]
-            )
-        )
-    mins = parts[0]
-    for p in parts[1:]:
-        mins = mins.join(p, id_col)
-    return mins.select(
-        F.col(id_col), F.array(*[F.col(f"_h{h}") for h in range(num_hashes)]).alias("sig")
-    )
+    whole expression in codegen). Then one ``NUM_HASHES``-wide
+    min-aggregate per doc (map-side combine before the shuffle), which
+    reads the stream once. Versus hashing the string once per family
+    this cuts the per-row string-hash work 32× while preserving the
+    MinHash Jaccard estimator (tests/test_properties.py pins the
+    accuracy bound). Rotations of one base pair span exactly 64
+    families, the signature width. Returns (id_col, sig array<bigint>)."""
+    hashed = stream.selectExpr(f"`{id_col}`", "xxhash64(_s) AS _b0", "xxhash64(1, _s) AS _b1")
+    mins = ", ".join(f"min({_family(h)})" for h in range(NUM_HASHES))
+    return hashed.groupBy(id_col).agg(F.expr(f"array({mins}) AS sig"))
 
 
-def minhash_signatures_agg(
-    df: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    num_hashes: int = 64,
-    chunk: int = 64,
-) -> DataFrame:
-    """MinHash signatures from a shingle-ARRAY column: explode into an
-    occurrence stream and delegate to ``minhash_from_stream``. Prefer
-    building the stream directly with ``shingle_stream`` in hot paths —
-    it skips the interpreted HOF shingle projection entirely."""
-    exploded = df.select(F.col(id_col), F.explode(F.col(shingle_col)).alias("_s"))
-    return minhash_from_stream(exploded, id_col, "_s", num_hashes, chunk)
-
-
-def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Split a signature into ``bands`` buckets of ``rows`` values and
-    hash each band: array<struct<band int, bh bigint>>.
+def lsh_bands(sig: str) -> Column:
+    """Split the signature column ``sig`` into ``LSH_BANDS`` buckets of
+    ``LSH_ROWS`` values and hash each band:
+    array<struct<band int, bh bigint>>.
 
     Deliberately NOT let-bound: slice/xxhash64/array/struct all
     compile in whole-stage codegen, and wrapping them in a
@@ -204,15 +145,11 @@ def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
     (measured 2.1s → 9.0s for the banding stage at sf0.1). Callers
     must instead materialize a computed ``sig`` behind an exchange
     before banding — see ``near_dup_pairs``."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.slice(sig, b * rows + 1, rows)).alias("bh"),
-            )
-            for b in range(bands)
-        ]
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'bh', xxhash64(slice(`{sig}`, {b * LSH_ROWS + 1}, {LSH_ROWS})))"
+        for b in range(LSH_BANDS)
     )
+    return F.expr(f"array({bands})")
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -271,13 +208,7 @@ def block_pairs(sh: DataFrame, threshold: float) -> DataFrame:
 
 
 def near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5
 ) -> DataFrame:
     """j2: candidate pairs via MinHash-LSH banding, verified with exact
     shingle Jaccard >= threshold. Returns (doc_a, doc_b, jaccard).
@@ -287,11 +218,10 @@ def near_dup_pairs(
     r must stay ≥ 4 here: a 16×2 layout (knee 0.25) admits J≈0.1
     pairs as candidates at ~15% probability, which on a corpus with
     shared templates turns the verification join quadratic (measured
-    7.4 s → 74 s at sf0.1 before reverting). Codegen cost of the wide
-    min-agg is addressed by splitting it into two half-width
-    aggregates instead — see ``minhash_signatures_agg``.
+    7.4 s → 74 s at sf0.1 before reverting). The signature is one
+    64-wide min-aggregate (``minhash_from_stream``), banded by
+    ``lsh_bands``.
     """
-    rows = num_hashes // bands
     # shingle-occurrence stream + double-hashed min-agg: every stage of
     # the signature pipeline compiles in whole-stage codegen (no HOFs,
     # no array_distinct — min over the multiset equals min over the
@@ -301,15 +231,15 @@ def near_dup_pairs(
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t0")),
         "_id",
         "_t0",
-        shingle_k,
+        SHINGLE_K,
     )
     # materialize the compact signature table; the self-join's two
     # sides re-derive the cheap banding projection from the cached
     # signatures instead of re-running the shingle+min-agg per side
-    sigs = materialize(minhash_from_stream(stream, "_id", "_s", num_hashes))
-    banded = sigs.select(
-        "_id", F.explode(lsh_bands(F.col("sig"), bands, rows)).alias("_b")
-    ).select("_id", "_b.band", "_b.bh")
+    sigs = materialize(minhash_from_stream(stream, "_id"))
+    banded = sigs.select("_id", F.explode(lsh_bands("sig")).alias("_b")).select(
+        "_id", "_b.band", "_b.bh"
+    )
 
     # candidate ids only through the band join (no shingle arrays in the
     # shuffle); shingles re-attach for verification afterwards
@@ -348,7 +278,7 @@ def near_dup_pairs(
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
         .join(F.broadcast(cand_ids), "_id", "left_semi")
         .select(
-            "_id", char_shingles(normalize_text(F.col("_t")), shingle_k).alias("_sh")
+            "_id", char_shingles(normalize_text(F.col("_t")), SHINGLE_K).alias("_sh")
         )
     )
     sh_a = ver_sh.select(F.col("_id").alias("doc_a"), F.col("_sh").alias("sh_a"))
@@ -360,27 +290,6 @@ def near_dup_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def simhash64(tokens: Column) -> Column:
-    """SimHash over a token array: sign-sum of per-token xxhash64 bits,
-    built from native expressions (64 bit-vote aggregates folded into a
-    single BIGINT). Expression form — use ``simhash_agg`` in hot paths
-    (this form re-walks the token array once per bit)."""
-    def bit_vote(bit: int) -> Column:
-        # +1 when the token hash has ``bit`` set, else -1; majority wins
-        votes = F.aggregate(
-            tokens,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(F.shiftright(F.xxhash64(t), bit).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        return F.when(votes > 0, F.lit(2 ** bit if bit < 63 else -(2 ** 63))).otherwise(F.lit(0))
-
-    out = F.lit(0).cast("long")
-    for b in range(64):
-        out = out + bit_vote(b)
-    return out
 
 
 def simhash_agg(df: DataFrame, id_col: str, token_col: str) -> DataFrame:
@@ -395,64 +304,42 @@ def simhash_agg(df: DataFrame, id_col: str, token_col: str) -> DataFrame:
     at sf0.1 with identical fingerprints. The 32-bit fields cannot
     overflow below 2^31 tokens per document, far beyond any real doc.
     The shuffle carries one packed row-group per doc — 33 longs —
-    which at 100 TB is far below the token stream it summarizes.
-    Returns (id_col, sh BIGINT)."""
-    ex = df.select(F.col(id_col), F.explode(F.col(token_col)).alias("_t"))
-    hashed = ex.select(F.col(id_col), F.xxhash64("_t").alias("_h"))
-
-    def packed_ones(b: int):
-        # low field counts bit b, high field counts bit b+32
-        low = F.shiftright("_h", b).bitwiseAND(F.lit(1))
-        high = F.shiftleft(F.shiftright("_h", b + 32).bitwiseAND(F.lit(1)), 32)
-        return F.sum(low + high).alias(f"_p{b}")
-
-    votes = hashed.groupBy(id_col).agg(
-        F.count("*").alias("_n"), *[packed_ones(b) for b in range(32)]
+    which at 100 TB is far below the token stream it summarizes. Each
+    packed SUM is written twice in the vote expression; Catalyst
+    computes equal aggregates once. Returns (id_col, sh BIGINT)."""
+    hashed = df.selectExpr(f"`{id_col}`", f"explode(`{token_col}`) AS _t").selectExpr(
+        f"`{id_col}`", "xxhash64(_t) AS _h"
     )
-    mask32 = F.lit((1 << 32) - 1)
-    sh = F.lit(0).cast("long")
-    for b in range(64):
-        ones = (
-            F.col(f"_p{b}").bitwiseAND(mask32)
-            if b < 32
-            else F.shiftright(F.col(f"_p{b - 32}"), 32)
-        )
-        sh = sh.bitwiseOR(
-            F.shiftleft(
-                F.when(ones * 2 > F.col("_n"), F.lit(1)).otherwise(F.lit(0)).cast("long"),
-                b,
-            )
-        )
-    return votes.select(F.col(id_col), sh.alias("sh"))
+    packed = [
+        f"sum((shiftright(_h, {b}) & 1) + shiftleft(shiftright(_h, {b + 32}) & 1, 32))"
+        for b in range(32)
+    ]
+    ones = [f"({p} & 4294967295L)" for p in packed] + [f"shiftright({p}, 32)" for p in packed]
+    sh = " | ".join(
+        f"shiftleft(CAST(2 * {n} > count(*) AS BIGINT), {b})" for b, n in enumerate(ones)
+    )
+    return hashed.groupBy(id_col).agg(F.expr(f"{sh} AS sh"))
 
 
-def simhash_bands(sh: Column, bands: int = 4) -> Column:
-    """Split a 64-bit SimHash into ``bands`` equal bit-slices for
-    Hamming blocking: array<struct<band int, bv bigint>>. Docs within
-    Hamming distance < bands share at least one band (pigeonhole)."""
-    width = 64 // bands
+def simhash_bands(sh: str) -> Column:
+    """Split the 64-bit SimHash column ``sh`` into ``SIMHASH_BANDS``
+    equal bit-slices for Hamming blocking: array<struct<band int,
+    bv bigint>>. Docs within Hamming distance < SIMHASH_BANDS share at
+    least one band (pigeonhole)."""
+    width = 64 // SIMHASH_BANDS
     mask = (1 << width) - 1
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftright(sh, i * width).bitwiseAND(F.lit(mask)).alias("bv"),
-            )
-            for i in range(bands)
-        ]
+    bands = ", ".join(
+        f"named_struct('band', {i}, 'bv', shiftright(`{sh}`, {i * width}) & {mask})"
+        for i in range(SIMHASH_BANDS)
     )
+    return F.expr(f"array({bands})")
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str,
-    token_col: str,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, id_col: str, token_col: str) -> DataFrame:
     """SimHash near-dup mining: banded blocking (only docs sharing a
     16-bit band slice meet in the join) + exact Hamming verification
-    via ``bit_count(xor)``. Returns (doc_a, doc_b, hamming). The band
+    via ``bit_count(xor)``, keeping pairs within ``MAX_HAMMING`` bits,
+    all of which share a band. Returns (doc_a, doc_b, hamming). The band
     join shuffles only (band, slice, id) — 20 bytes/row at 100 TB."""
     from json2hbase_spark.io import widen
 
@@ -464,7 +351,7 @@ def simhash_near_pairs(
     banded = sh.select(
         F.col(id_col).alias("_id"),
         F.col("sh"),
-        F.explode(simhash_bands(F.col("sh"), bands)).alias("_b"),
+        F.explode(simhash_bands("sh")).alias("_b"),
     ).select("_id", "sh", "_b.band", "_b.bv")
     left = banded.select(
         F.col("band").alias("l_band"), F.col("bv").alias("l_bv"),
@@ -484,6 +371,6 @@ def simhash_near_pairs(
         .select("doc_a", "doc_b", "sh_a", "sh_b")
         .dropDuplicates(["doc_a", "doc_b"])
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )

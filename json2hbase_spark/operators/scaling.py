@@ -73,10 +73,9 @@ def expected_pair_budget_lsh(n_vecs: int, planes: int) -> float:
 def seeded_planes(n_planes: int, dim: int = 64, seed: int = 42) -> list[list[float]]:
     """Deterministic Gaussian hyperplanes (the engine-wide
     reproducibility contract — no RNG at run time, the plane literals
-    are plan-time constants). With ``n_planes=6`` this reproduces
-    plans/llm_queries.LSH_PLANES exactly (same seed, same draw order),
-    so the auto-dialed path is a strict generalization of the
-    oracle-pinned one."""
+    are plan-time constants). plans/llm_queries.LSH_PLANES, the
+    oracle-pinned plane set, is ``seeded_planes(6)``, so the
+    auto-dialed path is a strict generalization of it."""
     rng = random.Random(seed)
     return [
         [round(rng.gauss(0.0, 1.0), 3) for _ in range(dim)] for _ in range(n_planes)

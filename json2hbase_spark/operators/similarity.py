@@ -112,18 +112,21 @@ def hard_negatives(
     )
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: sign bit per plane packed into
-    an int. ``planes`` are plan-time constants (deterministic seeds)."""
-    bucket = F.lit(0)
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Random-hyperplane LSH bucket id of the vector column ``vec``:
+    sign bit per plane packed into an int. ``planes`` are plan-time
+    constants (deterministic seeds), written as DOUBLE literals (the
+    ``D`` suffix: a bare ``0.5`` parses as DECIMAL) in one SQL
+    expression, so the build cost does not grow with the plane count."""
+    terms = []
     for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(float(v)) for v in p]), lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        lits = ", ".join(f"{float(v)!r}D" for v in p)
+        proj = (
+            f"aggregate(zip_with(`{vec}`, array({lits}), (x, y) -> CAST(x AS DOUBLE) * y),"
+            " 0.0D, (acc, x) -> acc + x)"
         )
-        bucket = bucket + F.when(proj >= 0, F.lit(2 ** i)).otherwise(F.lit(0))
-    return bucket
+        terms.append(f"CASE WHEN {proj} >= 0 THEN {2 ** i} ELSE 0 END")
+    return F.expr(" + ".join(["0", *terms]))
 
 
 def ivf_centroids(
@@ -204,8 +207,8 @@ def ann_topk_lsh(
     """Approximate top-k: score only candidates in the query's
     hyperplane bucket. Trades recall for an O(n/2^planes) candidate
     set per query — the scale path when queries are many."""
-    qb = queries.withColumn("_bucket", lsh_bucket(F.col(q_vec), planes))
-    cb = candidates.withColumn("_bucket", lsh_bucket(F.col(c_vec), planes))
+    qb = queries.withColumn("_bucket", lsh_bucket(q_vec, planes))
+    cb = candidates.withColumn("_bucket", lsh_bucket(c_vec, planes))
     joined = cb.join(F.broadcast(qb), "_bucket").filter(F.col(q_id) != F.col(c_id))
     scored = joined.select(q_id, c_id, cosine(F.col(q_vec), F.col(c_vec)).alias("sim"))
     w = Window.partitionBy(q_id).orderBy(F.desc("sim"), F.asc(c_id))

@@ -3391,7 +3391,7 @@ def j138_lexical_semantic_agreement(spark: SparkSession, sf_dir: str) -> DataFra
         widen(emb).select(
             "vec_id",
             "embedding",
-            lsh_bucket(F.col("embedding"), LSH_PLANES).alias("bucket"),
+            lsh_bucket("embedding", LSH_PLANES).alias("bucket"),
             l2_norm(F.col("embedding")).alias("nrm"),
         )
     )

@@ -30,6 +30,7 @@ from json2hbase_spark.operators.dedup import (
     shingle_stream,
     simhash_near_pairs,
 )
+from json2hbase_spark.operators.scaling import seeded_planes
 from json2hbase_spark.operators.similarity import (
     ann_topk_ivf,
     ann_topk_lsh,
@@ -157,9 +158,7 @@ def j9_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental dedup); surfaced here as per-doc signature stats."""
     docs = load(spark, sf_dir, "documents")
     stream = shingle_stream(docs, "doc_id", "text", 8)
-    sigs = minhash_from_stream(stream, "doc_id", "_s", 64).withColumn(
-        "bands", lsh_bands(F.col("sig"), 16, 4)
-    )
+    sigs = minhash_from_stream(stream, "doc_id").withColumn("bands", lsh_bands("sig"))
     return sigs.select(
         "doc_id",
         F.size("sig").alias("sig_len"),
@@ -557,15 +556,12 @@ def j15_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = widen(docs).select(
         "doc_id", bpe_ish_tokens(normalize_text(F.col("text"))).alias("toks")
     ).filter(F.size("toks") > 0)
-    return simhash_near_pairs(toks, "doc_id", "toks", bands=4, max_hamming=3)
+    return simhash_near_pairs(toks, "doc_id", "toks")
 
 
 # deterministic random-hyperplane set for j18 (plan-time constants;
 # seeded so Spark literals and the SQL literals below are identical)
-import random as _random
-
-_rng = _random.Random(42)
-LSH_PLANES = [[round(_rng.gauss(0.0, 1.0), 3) for _ in range(64)] for _ in range(6)]
+LSH_PLANES = seeded_planes(6)
 
 
 def _duck_bucket(col: str) -> str:
@@ -626,7 +622,7 @@ def dedup_embed_plan(
     ``planes`` (or count once themselves via table metadata).
     Returns (vec_a, vec_b, bucket, sim ≥ tau)."""
     if planes is None:
-        from json2hbase_spark.operators.scaling import auto_lsh_planes, seeded_planes
+        from json2hbase_spark.operators.scaling import auto_lsh_planes
 
         planes = seeded_planes(auto_lsh_planes(emb.count()))
     # bucket + norm hoisted out of the pair join: computed once per
@@ -636,7 +632,7 @@ def dedup_embed_plan(
     bucketed = emb.select(
         "vec_id",
         "embedding",
-        lsh_bucket(F.col("embedding"), planes).alias("bucket"),
+        lsh_bucket("embedding", planes).alias("bucket"),
         l2_norm(F.col("embedding")).alias("nrm"),
     )
     bucketed = materialize(bucketed)

@@ -345,7 +345,7 @@ def j128_whiten_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     qt = widen(emb).select(
         "vec_id",
-        lsh_bucket(F.col("embedding"), LSH_PLANES).alias("bucket"),
+        lsh_bucket("embedding", LSH_PLANES).alias("bucket"),
         F.transform(
             "embedding", lambda x: F.floor(x.cast("double") * COV_SCALE).cast("long")
         ).alias("q"),

@@ -101,36 +101,23 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 _STREAM_START_LOCK = threading.Lock()
-_rocksdb_available: bool | None = None
-
-
-def rocksdb_available(spark: SparkSession) -> bool:
-    """True when the RocksDB state-store provider class is on the
-    classpath (bundled with stock Spark 4; absent in stripped builds)."""
-    global _rocksdb_available
-    if _rocksdb_available is None:
-        try:
-            spark._jvm.java.lang.Class.forName(ROCKSDB_PROVIDER)  # type: ignore[union-attr]
-            _rocksdb_available = True
-        except Exception:
-            _rocksdb_available = False
-    return _rocksdb_available
+STREAM_PARTITIONS = "4"
 
 
 def run_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
     """Start ``writer`` under the engine's streaming confs, wait for it
     to terminate and return the query.
 
-    - ``spark.sql.shuffle.partitions`` is ``SPARK_GRAFT_STREAM_PARTITIONS``
-      (default 4). A new checkpoint pins its state-partition count to
-      this value, and each partition forks an Arrow worker and a state
-      store, which dominates a local micro-batch (i6 at sf0.01 on
-      ``local[4]``, median of 3 warm runs: 3.6 s at 32 partitions,
-      1.3 s at 4). On a cluster set it to the executor-core count.
-    - The RocksDB state store (SURVEY §3.5's at-scale choice: state
+    - ``spark.sql.shuffle.partitions`` is ``STREAM_PARTITIONS`` (4). A
+      new checkpoint pins its state-partition count to this value, and
+      each partition forks an Arrow worker and a state store, which
+      dominates a local micro-batch (i6 at sf0.01 on ``local[4]``,
+      median of 3 warm runs: 3.6 s at 32 partitions, 1.3 s at 4). On
+      a cluster raise it to the executor-core count.
+    - The state store is RocksDB (SURVEY §3.5's at-scale choice: state
       spills to local disk instead of executor heap, incremental
-      checkpoints) whenever the provider class is present; otherwise
-      the session's provider is left as it is.
+      checkpoints). Its provider class ships in Spark's own
+      ``spark-sql`` jar.
 
     A stream reads both confs once, when ``start()`` clones the session
     for its execution thread; its checkpoint offsets record them. So
@@ -145,12 +132,9 @@ def run_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
     its confs private, but its queries post no events to them).
     """
     confs = {
-        "spark.sql.shuffle.partitions": os.environ.get(
-            "SPARK_GRAFT_STREAM_PARTITIONS", "4"
-        )
+        "spark.sql.shuffle.partitions": STREAM_PARTITIONS,
+        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
     }
-    if rocksdb_available(spark):
-        confs["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
     with _STREAM_START_LOCK:
         prev = {k: spark.conf.get(k, None) for k in confs}
         for k, v in confs.items():

@@ -5,6 +5,7 @@ import sys
 from pathlib import Path
 
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
@@ -45,6 +46,33 @@ def count_jobs(spark):
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
+def round_trips(spark):
+    """``round_trips(fn)`` calls ``fn()`` and returns the number of
+    Py4J commands it sent: a plan-build cost that host speed cannot
+    move. Memory commands are skipped: they release Python proxies of
+    earlier, unrelated objects whenever the garbage collector runs."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def run(fn) -> int:
+        send = client.send_command
+        sent = []
+
+        def counting(command, *a, **k):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                sent.append(command)
+            return send(command, *a, **k)
+
+        client.send_command = counting
+        try:
+            fn()
+        finally:
+            del client.send_command
+        return len(sent)
 
     return run
 

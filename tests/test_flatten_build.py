@@ -7,7 +7,6 @@ import json
 import random
 from collections import Counter
 
-from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -35,37 +34,20 @@ def _flat(width: int) -> StructType:
     return _struct(("id", StringType()), *((f"f{i:02d}", types[i % 4]) for i in range(width)))
 
 
-def _round_trips(spark, df) -> int:
-    """Py4J commands sent while kv_flatten builds its plan. Memory
-    commands are skipped: they release Python proxies of earlier,
-    unrelated objects whenever the garbage collector runs."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    sent = []
-
-    def counting(command, *a, **k):
-        if not command.startswith(MEMORY_COMMAND_NAME):
-            sent.append(command)
-        return send(command, *a, **k)
-
-    client.send_command = counting
-    try:
-        kv_flatten(df, "id")
-    finally:
-        del client.send_command
-    return len(sent)
-
-
-def test_plan_build_round_trips_do_not_grow_with_width(spark):
+def test_plan_build_round_trips_do_not_grow_with_width(spark, round_trips):
     """One leaf used to cost about a dozen Py4J Column calls; the SQL
     build costs the same few round trips for 8 fields as for 48, and
     carrying a salted rowkey's tag stays inside the bound."""
-    narrow = _round_trips(spark, spark.createDataFrame([], _flat(8)))
-    wide = _round_trips(spark, spark.createDataFrame([], _flat(48)))
+
+    def build(df) -> int:
+        return round_trips(lambda: kv_flatten(df, "id"))
+
+    narrow = build(spark.createDataFrame([], _flat(8)))
+    wide = build(spark.createDataFrame([], _flat(48)))
     salted = spark.createDataFrame([], _flat(48)).withColumn("id", derive_rowkey("id", salt_len=2))
     assert narrow == wide
     assert wide <= 30
-    assert _round_trips(spark, salted) <= 30
+    assert build(salted) <= 30
 
 
 # depth >= 6, arrays of structs holding arrays and maps, maps holding

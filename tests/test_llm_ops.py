@@ -4,23 +4,35 @@ anchors, LSH recall on planted near-dups, multimodal plumbing
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from json2hbase_spark.operators.dedup import (
     char_shingles,
     jaccard,
-    minhash_signature,
+    lsh_bands,
+    minhash_from_stream,
     near_dup_pairs,
     normalize_text,
-    simhash64,
+    simhash_agg,
 )
+from json2hbase_spark.operators.scaling import seeded_planes
 from json2hbase_spark.operators.similarity import (
     ann_topk_lsh,
     cosine,
     cosine_topk,
     l2_norm,
     l2_normalize,
+    lsh_bucket,
 )
+
+U64 = (1 << 64) - 1
+
+
+def _signed(u: int) -> int:
+    """Two's-complement int64 of an unsigned 64-bit value."""
+    return u - (1 << 64) if u >> 63 else u
 
 
 def test_minhash_estimates_jaccard(spark):
@@ -33,8 +45,9 @@ def test_minhash_estimates_jaccard(spark):
         [(1, base), (2, base), (3, half), (4, disjoint)], "id INT, t STRING"
     )
     sh = df.select("id", char_shingles(F.col("t"), 8).alias("sh"))
-    sig = sh.withColumn("sig", minhash_signature(F.col("sh"), 64))
-    rows = {r.id: (set(r.sh), r.sig) for r in sig.collect()}
+    stream = sh.select("id", F.explode("sh").alias("_s"))
+    sigs = {r.id: r.sig for r in minhash_from_stream(stream, "id").collect()}
+    rows = {r.id: (set(r.sh), sigs[r.id]) for r in sh.collect()}
 
     def est(a, b):
         return sum(x == y for x, y in zip(rows[a][1], rows[b][1])) / 64
@@ -113,7 +126,7 @@ def test_simhash_similar_docs_close(spark):
         [(1, ["a", "b", "c", "d", "e"]), (2, ["a", "b", "c", "d", "f"]), (3, ["x", "y", "z", "w", "v"])],
         "id INT, toks ARRAY<STRING>",
     )
-    out = {r.id: r.h for r in df.select("id", simhash64(F.col("toks")).alias("h")).collect()}
+    out = {r.id: r.sh for r in simhash_agg(df, "id", "toks").collect()}
 
     def hamming(a, b):
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
@@ -235,20 +248,93 @@ def test_normalize_text(spark):
     assert df.select(normalize_text(F.col("t")).alias("n")).first().n == "hello world foo"
 
 
-def test_simhash_agg_matches_expression_form(spark):
-    from json2hbase_spark.operators.dedup import simhash_agg
+def test_minhash_from_stream_matches_python_reference(spark):
+    """Signature slot h is the per-doc min of family h, derived in
+    Python from the two collected base hashes: xxhash64(s), rotated
+    and XORed with xxhash64(1, s), wrapped to a signed int64."""
+    rng = random.Random(11)
+    rows = [(d, f"w{rng.randrange(4000)}") for d in range(37) for _ in range(rng.randrange(1, 120))]
+    stream = spark.createDataFrame(rows, "id INT, _s STRING")
+    base = stream.selectExpr("id", "xxhash64(_s) AS b0", "xxhash64(1, _s) AS b1").collect()
 
-    df = spark.createDataFrame(
-        [(1, ["a", "b", "c"]), (2, ["a", "b", "c"]), (3, ["q", "r", "s", "t"])],
-        "id INT, toks ARRAY<STRING>",
-    )
-    agg = {r.id: r.sh for r in simhash_agg(df, "id", "toks").collect()}
-    expr = {
-        r.id: r.sh
-        for r in df.select("id", simhash64(F.col("toks")).alias("sh")).collect()
-    }
-    assert agg == expr
-    assert agg[1] == agg[2]  # identical token sets -> identical simhash
+    def family(b0: int, b1: int, h: int) -> int:
+        u = b1 & U64
+        rot = ((u >> h) | (u << (64 - h))) & U64 if h else 0
+        return _signed((b0 & U64) ^ rot)
+
+    want: dict[int, list[int]] = {}
+    for r in base:
+        fams = [family(r.b0, r.b1, h) for h in range(64)]
+        want[r.id] = [min(a, b) for a, b in zip(want[r.id], fams)] if r.id in want else fams
+    got = {r.id: r.sig for r in minhash_from_stream(stream, "id").collect()}
+    assert got == want
+
+
+def test_simhash_agg_matches_python_reference(spark):
+    """Bit b of a doc's SimHash is set iff more than half of its token
+    occurrences hash with bit b set (a tie gives 0), over collected
+    xxhash64(token) values; bit 63 comes out as the int64 sign."""
+    rng = random.Random(5)
+    docs = [(d, [f"t{rng.randrange(50)}" for _ in range(rng.randrange(1, 9))]) for d in range(30)]
+    docs.append((30, list(docs[0][1])))  # identical token set to doc 0
+    df = spark.createDataFrame(docs, "id INT, toks ARRAY<STRING>")
+    hashes: dict[int, list[int]] = {}
+    for r in df.selectExpr("id", "explode(toks) AS t").selectExpr("id", "xxhash64(t) AS h").collect():
+        hashes.setdefault(r.id, []).append(r.h & U64)
+
+    def reference(hs: list[int]) -> int:
+        ones = [sum(h >> b & 1 for h in hs) for b in range(64)]
+        return _signed(sum(1 << b for b in range(64) if 2 * ones[b] > len(hs)))
+
+    want = {d: reference(hs) for d, hs in hashes.items()}
+    ties = [
+        d for d, hs in hashes.items()
+        if any(2 * sum(h >> b & 1 for h in hs) == len(hs) for b in range(64))
+    ]
+    assert ties and any(v < 0 for v in want.values())  # both edge cases occur
+    got = {r.id: r.sh for r in simhash_agg(df, "id", "toks").collect()}
+    assert got == want
+    assert got[0] == got[30]
+
+
+def test_lsh_bucket_matches_python_fold(spark):
+    """The SQL plane literals keep every double exactly, whatever its
+    repr (exponent, negative zero, 17 digits): buckets equal a Python
+    left fold of the same products."""
+    rng = random.Random(3)
+    planes = [[rng.gauss(0, 1) for _ in range(4)] for _ in range(5)]
+    planes.append([1e-05, -0.0, 3e20, -1.2345678901234567])
+    vecs = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(60)]
+    df = spark.createDataFrame(vecs, "id INT, v ARRAY<DOUBLE>")
+
+    def bucket(v: list[float]) -> int:
+        out = 0
+        for i, p in enumerate(planes):
+            acc = 0.0
+            for x, y in zip(v, p):
+                acc += x * y
+            out += 2**i if acc >= 0 else 0
+        return out
+
+    got = {r.id: r.b for r in df.select("id", lsh_bucket("v", planes).alias("b")).collect()}
+    assert got == {i: bucket(v) for i, v in vecs}
+
+
+def test_hash_operator_builds_take_constant_round_trips(spark, round_trips):
+    """Each hashing operator's expression is SQL text parsed once: its
+    plan builds in a few Py4J commands (thousands when it was built one
+    Column per hash family or bit), and more LSH planes add none."""
+    stream = spark.createDataFrame([], "id INT, _s STRING")
+    toks = spark.createDataFrame([], "id INT, toks ARRAY<STRING>")
+    sigs = spark.createDataFrame([], "id INT, sig ARRAY<BIGINT>")
+    vecs = spark.createDataFrame([], "id INT, v ARRAY<DOUBLE>")
+    planes6, planes12 = seeded_planes(6), seeded_planes(12)
+    assert round_trips(lambda: minhash_from_stream(stream, "id")) <= 50
+    assert round_trips(lambda: simhash_agg(toks, "id", "toks")) <= 50
+    assert round_trips(lambda: sigs.select(lsh_bands("sig"))) <= 50
+    six = round_trips(lambda: vecs.select(lsh_bucket("v", planes6)))
+    assert six <= 50
+    assert round_trips(lambda: vecs.select(lsh_bucket("v", planes12))) == six
 
 
 def test_simhash_near_pairs_finds_planted_dup(spark):
@@ -372,23 +458,6 @@ def test_h12_bitmap_matches_count_distinct(spark):
         for r in df.groupBy("g").agg(F.countDistinct("uid").alias("n")).collect()
     }
     assert got == want
-
-
-def test_minhash_wide_signature_families_are_fresh(spark):
-    """num_hashes > 64 must derive per-block base hashes: signature
-    slots 64..127 are NOT copies of 0..63 (rotations of one base pair
-    only span 64 independent mixes)."""
-    from json2hbase_spark.operators.dedup import minhash_from_stream
-
-    rows = [(1, f"s{i:03d}") for i in range(200)]
-    stream = spark.createDataFrame(rows, "id INT, _s STRING")
-    sig = minhash_from_stream(stream, "id", "_s", num_hashes=128).collect()[0].sig
-    assert len(sig) == 128
-    assert sig[64:] != sig[:64]
-    # lower half identical to a plain 64-hash signature (block-0 bases
-    # are the unseeded pair — narrow signatures unchanged)
-    sig64 = minhash_from_stream(stream, "id", "_s", num_hashes=64).collect()[0].sig
-    assert sig[:64] == sig64
 
 
 def test_j124_manifest_reconciles_with_j27_and_hashes_fill_order(spark, sf_dir):

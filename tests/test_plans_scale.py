@@ -377,14 +377,13 @@ def _stream_confs(spark) -> dict:
     return {k: spark.conf.get(k, None) for k in keys}
 
 
-def test_run_stream_restores_session_confs(spark, tmp_path, monkeypatch):
-    """The stream runs with 4 state partitions and, when the class is
-    present, RocksDB (its checkpoint offsets record both); afterwards
-    the session's confs are what they were, and an unset provider
-    stays unset rather than coming back as an explicit setting."""
-    from json2hbase_spark.session import ROCKSDB_PROVIDER, rocksdb_available
+def test_run_stream_restores_session_confs(spark, tmp_path):
+    """The stream runs with 4 state partitions and RocksDB (its
+    checkpoint offsets record both); afterwards the session's confs
+    are what they were, and an unset provider stays unset rather than
+    coming back as an explicit setting."""
+    from json2hbase_spark.session import ROCKSDB_PROVIDER
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     prev = spark.conf.get(PROVIDER_CONF, None)
     hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     try:
@@ -396,8 +395,7 @@ def test_run_stream_restores_session_confs(spark, tmp_path, monkeypatch):
             before = _stream_confs(spark)
             conf = _run_counts(spark, tmp_path, f"rs_restore{i}")
             assert conf["spark.sql.shuffle.partitions"] == "4"
-            if rocksdb_available(spark):
-                assert conf[PROVIDER_CONF] == ROCKSDB_PROVIDER
+            assert conf[PROVIDER_CONF] == ROCKSDB_PROVIDER
             assert _stream_confs(spark) == before
     finally:
         if prev is None:

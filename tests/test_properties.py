@@ -154,14 +154,15 @@ def test_sessionize_invariant_under_row_order(spark, events):
 def test_minhash_estimate_tracks_exact_jaccard(spark, overlap):
     """Signature agreement rate ≈ Jaccard within ±0.2 at 64 hashes for
     synthetic shingle sets with controlled overlap."""
-    from json2hbase_spark.operators.dedup import minhash_signatures_agg
+    from json2hbase_spark.operators.dedup import minhash_from_stream
 
     shared = [f"s{i:02d}" for i in range(overlap)]
     a = shared + [f"a{i:02d}" for i in range(60 - overlap)]
     b = shared + [f"b{i:02d}" for i in range(60 - overlap)]
     exact = len(set(a) & set(b)) / len(set(a) | set(b))
     df = spark.createDataFrame([(1, a), (2, b)], "id INT, sh ARRAY<STRING>")
-    sigs = {r.id: r.sig for r in minhash_signatures_agg(df, "id", "sh", 64).collect()}
+    stream = df.select("id", F.explode("sh").alias("_s"))
+    sigs = {r.id: r.sig for r in minhash_from_stream(stream, "id").collect()}
     est = sum(x == y for x, y in zip(sigs[1], sigs[2])) / 64
     assert abs(est - exact) <= 0.2, (overlap, est, exact)
 
